@@ -17,6 +17,8 @@ plus everything the reference never had:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 from opc2mongodb_spark.session import get_spark
@@ -28,6 +30,7 @@ class Engine:
         from opc2mongodb_spark.sources.opc import register as _register_opcsim
 
         _register_opcsim(self.spark)
+        self._stores = {}
 
     # --- batch catalog ----------------------------------------------------
 
@@ -90,7 +93,7 @@ class Engine:
         """Start the OPC→current-values topology (EP1→EP2/3→sink, SURVEY.md
         §3) as one streaming query. Returns (StreamingQuery, store)."""
         from opc2mongodb_spark.opcmodel import raw_to_opc_values
-        from opc2mongodb_spark.streaming.sinks import CurrentValuesStore, upsert_query
+        from opc2mongodb_spark.streaming.sinks import upsert_query
 
         raw = (
             self.spark.readStream.format("opcsim")
@@ -100,11 +103,20 @@ class Engine:
             .load()
         )
         opc = raw_to_opc_values(raw)
-        store = CurrentValuesStore(state_path)
+        store = self._store(state_path)
         q = upsert_query(opc, store, checkpoint_dir, trigger_seconds).start()
         return q, store
 
     def current_values(self, state_path: str) -> DataFrame | None:
+        return self._store(state_path).read(self.spark)
+
+    def _store(self, state_path: str):
+        """One store per state path, shared by ``ingest`` and
+        ``current_values``: reads reuse the schema the bridge last wrote
+        instead of inferring it from the files on every lookup."""
         from opc2mongodb_spark.streaming.sinks import CurrentValuesStore
 
-        return CurrentValuesStore(state_path).read(self.spark)
+        key = os.path.abspath(state_path)
+        if key not in self._stores:
+            self._stores[key] = CurrentValuesStore(state_path)
+        return self._stores[key]

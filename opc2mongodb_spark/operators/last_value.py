@@ -36,13 +36,12 @@ def last_value_per_key(
     """
     tiebreak_cols = tiebreak_cols or []
     value_cols = [c for c in df.columns if c not in key_cols]
-    ord_struct = F.struct(
-        F.col(order_col), *[F.col(c) for c in tiebreak_cols]
-    )
     picked = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*[F.col(c) for c in value_cols]), ord_struct).alias("_v")
+        F.max_by(
+            F.struct(*value_cols), F.struct(order_col, *tiebreak_cols)
+        ).alias("_v")
     )
-    return picked.select(*key_cols, *[F.col(f"_v.{c}").alias(c) for c in value_cols])
+    return picked.select(*key_cols, "_v.*")
 
 
 def last_value_per_key_window(

@@ -7,12 +7,16 @@ RPC per record, single consumer (§6: the bottleneck).
 
 Spark-first replacement: ``foreachBatch`` merges each micro-batch into a
 keyed parquet state store, partitioned by server (A4: the
-collection-per-server routing becomes partitionBy). Per batch:
+collection-per-server routing becomes partitionBy). Per batch, ONE Spark
+action over ONE shuffle:
 
-    new_state[touched] = last_value_per_key(old_state[touched] ∪ batch)
+    new_state[changed] = last_value_per_key(old_state ∪ batch)[changed]
 
-(partition-pruned: only server partitions present in the batch are read or
-rewritten — bulk, vectorized)
+where ``changed`` is the set of servers for which a batch row won at least
+one key. Untouched servers are read but never rewritten. Reading them costs
+little: the shipped sources (``opcsim``, ``opc_live``) emit rows for every
+server in every micro-batch, so the changed set is normally the whole
+store, and pruning the read would need a pass over the batch of its own.
 
 At scale the state store is a transactional Delta MERGE when ``delta-spark``
 is importable (``backend="auto"``); the parquet staging-swap below is the
@@ -25,10 +29,18 @@ Delta backend there.
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from opc2mongodb_spark.operators.last_value import last_value_per_key
+
+# Codec of the parquet backend's state files. An interleaved snappy-vs-zstd
+# A/B on the sink's own lane (SINK_CODEC_AB_r13.json) measured per-batch
+# time flat and 45% fewer bytes for zstd; the state is re-read every batch.
+PARQUET_CODEC = "zstd"
 
 
 def delta_available() -> bool:
@@ -57,7 +69,6 @@ class CurrentValuesStore:
         key_cols: tuple[str, ...] = ("server", "tag"),
         order_col: str = "serverTimestamp",
         backend: str = "auto",
-        parquet_codec: str = "zstd",
     ) -> None:
         if backend == "auto":
             backend = "delta" if delta_available() else "parquet"
@@ -71,20 +82,21 @@ class CurrentValuesStore:
         self.key_cols = list(key_cols)
         self.order_col = order_col
         self.backend = backend
-        # Codec for the parquet backend's state writes (r13: interleaved
-        # snappy-vs-zstd A/B on the sink's own lane, SINK_CODEC_AB_r13.json
-        # — per-batch time flat at p50 0.880 vs 0.882 s, state identical,
-        # 45% fewer on-disk bytes; the state is re-read on every touched-
-        # partition merge, so the ratio side pays every batch). Override
-        # via the constructor or conf spark.sparkGraft.sinkParquetCodec.
-        self.parquet_codec = parquet_codec
+        # Schema of the parquet state: the one this store last wrote, else
+        # inferred on the first read. Reads pass it to the reader, so opening
+        # the store lists the files but runs no footer-reading job.
+        self._schema: StructType | None = None
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not os.path.exists(self.path):
             return None
         if self.backend == "delta":
             return spark.read.format("delta").load(self.path)  # pragma: no cover - delta absent here
-        return spark.read.parquet(self.path)
+        if self._schema is None:
+            df = spark.read.parquet(self.path)
+            self._schema = df.schema
+            return df
+        return spark.read.schema(self._schema).parquet(self.path)
 
     def merge_batch(self, batch: DataFrame) -> None:
         if self.backend == "delta":
@@ -123,87 +135,86 @@ class CurrentValuesStore:
         )
 
     def _merge_batch_parquet(self, batch: DataFrame) -> None:
-        """Upsert a micro-batch, rewriting ONLY the server partitions present
-        in the batch (partition-pruned merge — the parquet stand-in for the
-        Delta MERGE above). Untouched server partitions are never read nor
-        rewritten: the read is partition-pruned by the isin filter, and the
-        swap moves only the staged ``server=...`` directories into place.
-        O(touched state) per batch instead of O(total state).
+        """Upsert a micro-batch with ONE Spark action (the parquet stand-in
+        for the Delta MERGE above), then swap in only the staged server
+        directories. Servers the batch did not change are read but never
+        rewritten: their files stay in place.
+
+        One action scans the batch once, so the batch needs no persist.
+        An empty batch stages nothing and leaves the store untouched (not
+        even created).
 
         POSIX-only: the final ``os.rename`` swap relies on atomic directory
         rename; do not point this backend at object storage."""
-        spark = batch.sparkSession
         pcol = self.key_cols[0]
-        # Two actions follow (the touched-server scan and the staged write).
-        # Inside foreachBatch each action on ``batch`` re-executes the whole
-        # micro-batch plan — source read AND stateful-operator access — so
-        # without a persist the upstream pipeline runs twice per batch
-        # (measured at ~2x the merge's cost at r11). Pin it once.
-        batch = batch.persist()
-        try:
-            self._merge_persisted(batch, spark, pcol)
-        finally:
-            batch.unpersist()
-
-    def _merge_persisted(self, batch: DataFrame, spark, pcol: str) -> None:
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        servers = [r[0] for r in batch.select(pcol).distinct().collect()]
-        if not servers:
-            return
-        existing = self.read(spark)
-        # _src tiebreak: on an order_col tie the BATCH row wins — the same
-        # semantics as the Delta MERGE's `s.order >= t.order` condition, and
-        # deterministic (max_by alone picks an arbitrary row on ties).
-        batch = batch.withColumn("_src", F.lit(1))
-        if existing is not None:
-            merged = (
-                existing.filter(F.col(pcol).isin(servers))
-                .withColumn("_src", F.lit(0))
-                .unionByName(batch)
-            )
-        else:
-            merged = batch
-        latest = last_value_per_key(
-            merged, self.key_cols, self.order_col, tiebreak_cols=["_src"]
-        ).drop("_src")
-
+        schema = self._state_schema(batch)
         tmp = self.path + "._staging"
-        if os.path.exists(tmp):
+        if os.path.exists(tmp):  # leftover of a crashed merge
             shutil.rmtree(tmp)
-        # Writer parallelism: one task per touched server partition, capped
-        # by the cluster's core count (a hard-coded writer count would
-        # serialize the rewrite when many partitions are touched). The
-        # repartition ON the partition column also lands each server's rows
-        # in a single task -> one file per server directory.
-        n_writers = max(
-            1, min(spark.sparkContext.defaultParallelism, len(servers))
-        )
-        # Executing the write fully materializes the merged partitions before
-        # any directory under self.path is mutated.
-        codec = (
-            spark.conf.get("spark.sparkGraft.sinkParquetCodec", None)
-            or self.parquet_codec
-        )
+        # Executing the write fully materializes the changed partitions
+        # before any directory under self.path is mutated.
         (
-            latest.repartition(n_writers, F.col(pcol))
+            self._changed_partitions(batch, schema)
             .write.mode("overwrite")
-            .option("compression", codec)
+            .option("compression", PARQUET_CODEC)
             .partitionBy(pcol)
             .parquet(tmp)
         )
 
-        os.makedirs(self.path, exist_ok=True)
-        for entry in os.listdir(tmp):
-            if not entry.startswith(f"{pcol}="):
-                continue
+        staged = [e for e in os.listdir(tmp) if e.startswith(f"{pcol}=")]
+        if staged:
+            os.makedirs(self.path, exist_ok=True)
+            self._schema = schema
+        for entry in staged:
             dst = os.path.join(self.path, entry)
             if os.path.exists(dst):
                 shutil.rmtree(dst)
             os.rename(os.path.join(tmp, entry), dst)
         shutil.rmtree(tmp)
+
+    def _state_schema(self, batch: DataFrame) -> StructType:
+        """The batch's fields, nullable, partition column last: the layout
+        a partitioned parquet read of the state returns."""
+        pcol = self.key_cols[0]
+        fields = [f for f in batch.schema.fields if f.name != pcol]
+        fields.append(batch.schema[pcol])
+        return StructType(
+            [StructField(f.name, f.dataType, True) for f in fields]
+        )
+
+    def _changed_partitions(
+        self, batch: DataFrame, schema: StructType
+    ) -> DataFrame:
+        """The new rows of every server the batch changes, planned over one
+        exchange: ``existing ∪ batch`` is hash-partitioned on the server
+        once, and both the per-key aggregate and the per-server window
+        reuse that partitioning."""
+        spark = batch.sparkSession
+        pcol = self.key_cols[0]
+        cols = schema.names
+        # _src tiebreak: on an order_col tie the BATCH row wins — the same
+        # semantics as the Delta MERGE's `s.order >= t.order` condition, and
+        # deterministic (max_by alone picks an arbitrary row on ties).
+        merged = batch.select(*cols, F.lit(1).alias("_src"))
+        if os.path.exists(self.path):
+            # batch first: its scan tasks are the slow ones, so they start
+            # ahead of the state's file scans
+            existing = spark.read.schema(schema).parquet(self.path)
+            merged = merged.union(existing.select(*cols, F.lit(0).alias("_src")))
+        latest = last_value_per_key(
+            merged.repartition(pcol),
+            self.key_cols,
+            self.order_col,
+            tiebreak_cols=["_src"],
+        )
+        # _src is now the winning row's origin: a server changes when a
+        # batch row won any of its keys.
+        changed = F.max("_src").over(Window.partitionBy(pcol))
+        return (
+            latest.withColumn("_changed", changed)
+            .filter(F.col("_changed") == 1)
+            .select(*cols)
+        )
 
     def foreach_batch(self, batch: DataFrame, batch_id: int) -> None:
         self.merge_batch(batch)
@@ -401,8 +412,6 @@ def to_mongo_documents(opc_values: DataFrame) -> DataFrame:
     Returned as (collection, key, doc_json) rows — what a foreachBatch Mongo
     bulkWrite adapter would send one ReplaceOne per row of; the JSON is
     engine-built (to_json), no Python in the loop."""
-    from pyspark.sql import functions as F
-
     return opc_values.select(
         F.col("server").alias("collection"),
         F.col("tag").alias("key"),

@@ -74,7 +74,6 @@ FULL_MATRIX_ONLY = frozenset({
     "test_scale_patterns.py::test_watchdog_stream_alarms_once_and_rearms",
     "test_streaming.py::test_bridge_restart_resumes_without_duplicates",
     "test_streaming.py::test_bridge_with_quota_and_ledger_reconciles",
-    "test_streaming.py::test_current_values_store_upsert",
     "test_streaming.py::test_gate_compact_index_default_excludes_latest_batch",
     "test_streaming.py::test_gate_compact_index_heals_crash_leftover_dirs",
     "test_streaming.py::test_gate_index_compaction_crash_windows",

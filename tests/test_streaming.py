@@ -354,24 +354,39 @@ def test_merge_batch_rewrites_only_touched_partitions(spark, tmp_path):
     }
 
 
-def test_sink_parquet_codec_default_and_hatch(spark, tmp_path):
-    """r13 (r12 VERDICT item 7): the upsert sink's parquet state writes
-    default to zstd (interleaved A/B on the sink's own lane,
-    SINK_CODEC_AB_r13.json: per-batch time flat, state identical, -45%
-    bytes); the spark.sparkGraft.sinkParquetCodec conf hatch flips them
-    without code changes. Spark encodes the codec in the part-file name."""
+def test_sink_parquet_codec_is_zstd(spark, tmp_path):
+    """r13 (r12 VERDICT item 7): the upsert sink's parquet state is written
+    as zstd (interleaved A/B on the sink's own lane, SINK_CODEC_AB_r13.json:
+    per-batch time flat, state identical, -45% bytes). Spark encodes the
+    codec in the part-file name."""
     import datetime
     import glob
 
     from opc2mongodb_spark.streaming.sinks import CurrentValuesStore
 
-    def codecs_under(root):
-        return {
-            f.rsplit(".", 2)[-2]
-            for f in glob.glob(
-                os.path.join(root, "**", "part-*.parquet"), recursive=True
-            )
-        }
+    store = CurrentValuesStore(str(tmp_path / "cv"))
+    store.merge_batch(
+        spark.createDataFrame(
+            [("A", "t1", 1.0, datetime.datetime(2024, 1, 1, 10, 0, 0)),
+             ("B", "t1", 2.0, datetime.datetime(2024, 1, 1, 10, 0, 0))],
+            ["server", "tag", "doubleValue", "serverTimestamp"],
+        )
+    )
+    files = glob.glob(
+        os.path.join(store.path, "**", "part-*.parquet"), recursive=True
+    )
+    assert files and {f.rsplit(".", 2)[-2] for f in files} == {"zstd"}
+
+
+def test_merge_batch_is_one_action_over_one_exchange(spark, tmp_path):
+    """The parquet merge of a micro-batch into an existing store plans ONE
+    exchange and runs at most two jobs (the shuffle's map stage and the
+    write): no touched-server pre-pass, no schema-inference job, no second
+    shuffle before the write."""
+    import datetime
+    import re
+
+    from opc2mongodb_spark.streaming.sinks import CurrentValuesStore
 
     store = CurrentValuesStore(str(tmp_path / "cv"))
     cols = ["server", "tag", "doubleValue", "serverTimestamp"]
@@ -384,23 +399,25 @@ def test_sink_parquet_codec_default_and_hatch(spark, tmp_path):
         )
 
     store.merge_batch(rows([("A", "t1", 1.0, 0), ("B", "t1", 2.0, 0)]))
-    assert codecs_under(store.path) == {"zstd"}
+    second = rows([("A", "t1", 3.0, 10), ("B", "t2", 4.0, 10)])
 
-    spark.conf.set("spark.sparkGraft.sinkParquetCodec", "snappy")
+    plan = (
+        store._changed_partitions(second, store._state_schema(second))
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
+
+    sc = spark.sparkContext
+    group = "test-merge-shape"
+    sc.setJobGroup(group, "one merge")
     try:
-        store.merge_batch(rows([("A", "t1", 3.0, 10)]))
-        # touched partition A rewrote under the hatch codec; untouched B
-        # keeps its zstd files — mixed codecs read as one table
-        assert codecs_under(os.path.join(store.path, "server=A")) == {
-            "snappy"
-        }
-        assert codecs_under(os.path.join(store.path, "server=B")) == {"zstd"}
+        store.merge_batch(second)
     finally:
-        spark.conf.unset("spark.sparkGraft.sinkParquetCodec")
-    state = {
-        (r.server, r.tag): r.doubleValue for r in store.read(spark).collect()
-    }
-    assert state == {("A", "t1"): 3.0, ("B", "t1"): 2.0}
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    state = {(r.server, r.tag): r.doubleValue for r in store.read(spark).collect()}
+    assert state == {("A", "t1"): 3.0, ("B", "t1"): 2.0, ("B", "t2"): 4.0}
 
 
 def test_current_values_store_backends(spark, tmp_path):
