@@ -51,8 +51,8 @@ partial rows into the corpus view or corrupt partition inference (the
 listings and did exactly that).
 
 Write codec (r12): the gate's data + index parquet writes use zstd —
-A/B'd against snappy on the ingest lane (``tools/gate_codec_ab.py``,
-``GATE_CODEC_AB_r12.json``, interleaved arms): per-batch time flat
+A/B'd against snappy on the ingest lane (``GATE_CODEC_AB_r12.json``,
+interleaved arms): per-batch time flat
 (+0.10 s p50, inside noise, total time equal-or-better) for a 41%
 smaller on-disk corpus+index (10.35→6.14 MB at 24x2k docs, 34.4→20.3 MB
 at 8x20k), identical admitted corpora. At real scale the trade only

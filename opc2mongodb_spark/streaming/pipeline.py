@@ -176,7 +176,7 @@ def streaming_last_value(
 ) -> DataFrame:
     """H5: streaming dedup state — at-most-one record per (server, tag,
     serverTimestamp) within the watermark. Combined with the upsert sink
-    (sinks.upsert_foreach_batch) this reproduces the reference's
+    (sinks.upsert_query) this reproduces the reference's
     current-values table with event-time-correct semantics."""
     return opc_stream.withWatermark(
         "serverTimestamp", watermark_delay

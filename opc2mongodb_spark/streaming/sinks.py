@@ -222,11 +222,15 @@ class CurrentValuesStore:
 
 def upsert_query(
     opc_stream: DataFrame,
-    store: CurrentValuesStore,
+    store: CurrentValuesStore | MongoBulkUpsertSink,
     checkpoint_dir: str,
     trigger_seconds: int | None = None,
 ):
     """writeStream wiring for the current-values upsert (A3+A4).
+
+    ``store`` is any sink exposing ``foreach_batch(batch, batch_id)``:
+    the parquet/Delta ``CurrentValuesStore`` or the Mongo bulk-upsert
+    document sink (``MongoBulkUpsertSink``).
 
     ``trigger_seconds`` maps the reference's per-server ``read_period``
     (conf column READ_PERIOD, Program.cs:1281) onto the micro-batch trigger.
@@ -382,23 +386,6 @@ class PymongoBulkClient:
 
     def close(self) -> None:
         self._client.close()
-
-
-def mongo_upsert_query(
-    opc_stream: DataFrame,
-    sink: MongoBulkUpsertSink,
-    checkpoint_dir: str,
-    trigger_seconds: int | None = None,
-):
-    """writeStream wiring for the Mongo bulk-upsert document sink (A3)."""
-    writer = (
-        opc_stream.writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_seconds is not None:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer
 
 
 def to_mongo_documents(opc_values: DataFrame) -> DataFrame:

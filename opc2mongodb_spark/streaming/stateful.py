@@ -1,21 +1,41 @@
-"""Custom stateful streaming operator (SURVEY.md H5 upgrade path):
-per-key last-value state via ``applyInPandasWithState``.
+"""Stateful streaming gates: per-key state carried across micro-batches
+via ``applyInPandasWithState`` (SURVEY.md H5 upgrade path).
 
 ``dropDuplicatesWithinWatermark`` + the foreachBatch upsert store cover the
 reference's semantics with built-ins (streaming/pipeline.py — always prefer
-that). This module is the escalation point the build plan flags (§7 hard
-part 3): when last-value needs *enrichment* (e.g. change detection against
-the previous value — the reference's subscribe-on-change path R1), built-in
-dedup can't express it; grouped state can.
+that). This module is the escalation point for per-key logic built-ins
+can't express: change detection against the previous value (the
+reference's subscribe-on-change path, Program.cs:126-444 ``Monitor<T>``),
+recursive filters, drift tests, admission control.
 
-Emits one record per input record, annotated with the previous value and a
-change flag — the streaming twin of q_window_lag (F2). State per key is a
-single (value, ts) pair: O(#keys) memory, GC'd by the state timeout.
+Every gate but the watchdog is one keyed fold over :func:`_keyed_fold`,
+which owns the engine half (Structured Streaming's arbitrary stateful
+operator: a user step plus engine-owned state, no timeout). A gate
+supplies only a pure step::
+
+    step(key, pdf, state) -> (rows, new_state | None)
+
+- ``key``: the group-key tuple, in ``groupBy`` order.
+- ``pdf``: the key's whole micro-batch slice as ONE pandas frame
+  (Arrow batches concatenated), stable-sorted by the gate's ``order_by``
+  when it has one.
+- ``state``: the carried state tuple, or the gate's ``initial`` value
+  when the key has none yet.
+- ``rows``: a column mapping or frame, emitted in the output schema's
+  column order; ``new_state`` replaces the key's state, ``None`` leaves
+  it as is.
+
+Under ``NoTimeout`` Spark calls the fold only for keys with rows in the
+batch, so a step never sees an empty slice. State per key is a few
+scalars or a schema-sized list — O(#keys) memory, checkpoint-recoverable
+under either state-store provider. ``watchdog_stream`` is the one
+event-time-timeout gate and keeps its own ``applyInPandasWithState``
+call.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -31,6 +51,44 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+
+def _keyed_fold(
+    df: DataFrame,
+    keys: list[str],
+    step: Callable,
+    out_schema: StructType,
+    state_schema: StructType,
+    initial: Any,
+    order_by: str | list[str] | None = None,
+) -> DataFrame:
+    """Group ``df`` by ``keys`` and fold each key's micro-batch slice
+    through ``step`` with per-key state (the contract is in the module
+    docstring): append output, no state timeout."""
+    cols = [f.name for f in out_schema.fields]
+
+    def _apply(  # pragma: worker
+        key: tuple[Any, ...],
+        batches: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(batches), ignore_index=True)
+        if order_by is not None:
+            pdf = pdf.sort_values(order_by, kind="stable", ignore_index=True)
+        st = state.get if state.exists else initial
+        rows, new_state = step(key, pdf, st)
+        if new_state is not None:
+            state.update(new_state)
+        yield pd.DataFrame(rows, columns=cols)
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        _apply,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
 
 CHANGES_SCHEMA = StructType(
     [
@@ -50,65 +108,44 @@ STATE_SCHEMA = StructType(
 )
 
 
-def _detect_changes(  # pragma: worker
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _detect_changes(key, pdf, st):  # pragma: worker
     server, tag = key
-    last = state.get[0] if state.exists else None
-    pdf = pd.concat(list(batches), ignore_index=True)
-    pdf = pdf.sort_values("serverTimestamp", kind="stable", ignore_index=True)
+    (last,) = st
 
     # Vectorized change detection: previous value is shift(1) seeded with the
     # carried state — no per-row Python loop (Arrow batch in, Arrow batch out).
     vals = pdf["doubleValue"].astype(float)
     prev = vals.shift(1)
-    if last is not None and len(prev):
+    if last is not None:
         prev.iat[0] = last
     changed = prev.isna() | (vals != prev)
+    new_last = vals.iat[-1]
 
-    if len(vals):
-        new_last = vals.iat[-1]
-        state.update((float(new_last),) if pd.notna(new_last) else (None,))
-
-    out = pd.DataFrame(
-        {
-            "server": server,
-            "tag": tag,
-            # Arrow hands SQL NULL to pandas as NaN (float64 column), so NULL
-            # and a genuine NaN observation are indistinguishable here by
-            # transport; both are emitted as NULL (null-preserving object
-            # conversion, same as prevValue) and carried as "no previous
-            # value" for change detection. Documented contract, not a leak of
-            # NaN into a nullable column.
-            "doubleValue": vals.astype(object).where(vals.notna(), None),
-            # NaN (no previous) must surface as NULL, not float('nan')
-            "prevValue": prev.astype(object).where(prev.notna(), None),
-            "changed": changed,
-            "serverTimestamp": pdf["serverTimestamp"],
-        },
-        columns=[f.name for f in CHANGES_SCHEMA.fields],
-    )
-    yield out
+    return {
+        "server": server,
+        "tag": tag,
+        # Arrow hands SQL NULL to pandas as NaN (float64 column), so NULL
+        # and a genuine NaN observation are indistinguishable here by
+        # transport; both are emitted as NULL (null-preserving object
+        # conversion, same as prevValue) and carried as "no previous
+        # value" for change detection. Documented contract, not a leak of
+        # NaN into a nullable column.
+        "doubleValue": vals.astype(object).where(vals.notna(), None),
+        # NaN (no previous) must surface as NULL, not float('nan')
+        "prevValue": prev.astype(object).where(prev.notna(), None),
+        "changed": changed,
+        "serverTimestamp": pdf["serverTimestamp"],
+    }, ((float(new_last),) if pd.notna(new_last) else (None,))
 
 
 def value_changes(opc_stream: DataFrame) -> DataFrame:
     """Streaming change detection per (server, tag) — the reference's
     Monitor<T> subscribe-on-change callback (Program.cs:126-444) as a
     stateful operator. Use ``.filter(changed)`` for change-only output."""
-    return (
-        opc_stream.select(
-            "server", "tag", "doubleValue", "serverTimestamp"
-        )
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _detect_changes,
-            outputStructType=CHANGES_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp"),
+        ["server", "tag"], _detect_changes, CHANGES_SCHEMA, STATE_SCHEMA,
+        (None,), order_by="serverTimestamp",
     )
 
 
@@ -131,15 +168,9 @@ EWMA_STATE_SCHEMA = StructType(
 )
 
 
-def _ewma_update(  # pragma: worker
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
+def _ewma_update(key, pdf, st):  # pragma: worker
     server, tag = key
-    seed = state.get[0] if state.exists else None
-    pdf = pd.concat(list(batches), ignore_index=True)
-    pdf = pdf.sort_values("serverTimestamp", kind="stable", ignore_index=True)
+    (seed,) = st
     vals = pdf["doubleValue"].astype(float)
 
     # Recursive EWMA via pandas' C implementation (adjust=False):
@@ -153,19 +184,13 @@ def _ewma_update(  # pragma: worker
     else:
         ewma = vals.ewm(alpha=EWMA_ALPHA, adjust=False).mean()
 
-    if len(vals):
-        state.update((float(ewma.iloc[-1]),))
-
-    yield pd.DataFrame(
-        {
-            "server": server,
-            "tag": tag,
-            "doubleValue": vals,
-            "ewma": ewma,
-            "serverTimestamp": pdf["serverTimestamp"],
-        },
-        columns=[f.name for f in EWMA_SCHEMA.fields],
-    )
+    return {
+        "server": server,
+        "tag": tag,
+        "doubleValue": vals,
+        "ewma": ewma,
+        "serverTimestamp": pdf["serverTimestamp"],
+    }, (float(ewma.iloc[-1]),)
 
 
 def ewma_stream(opc_stream: DataFrame) -> DataFrame:
@@ -173,16 +198,10 @@ def ewma_stream(opc_stream: DataFrame) -> DataFrame:
     order-dependent form the batch q_ewma approximates with 8 lags. State
     per key is one double; the recursion resumes exactly across
     micro-batches and restarts (state lives in the checkpoint)."""
-    return (
-        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _ewma_update,
-            outputStructType=EWMA_SCHEMA,
-            stateStructType=EWMA_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp"),
+        ["server", "tag"], _ewma_update, EWMA_SCHEMA, EWMA_STATE_SCHEMA,
+        (None,), order_by="serverTimestamp",
     )
 
 
@@ -204,18 +223,10 @@ DEADBAND_STATE_SCHEMA = StructType(
 )
 
 
-def _deadband_gate(deadband: float):
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+def _deadband_step(deadband: float):
+    def step(key, pdf, st):  # pragma: worker
         server, tag = key
-        last = state.get[0] if state.exists else None
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values(
-            "serverTimestamp", kind="stable", ignore_index=True
-        )
+        (last,) = st
         vals = pdf["doubleValue"].astype(float).to_numpy()
 
         # The deadband recursion is data-dependent (each verdict depends on
@@ -240,24 +251,19 @@ def _deadband_gate(deadband: float):
             else:
                 reported.append(False)
             ref.append(last)
-        if vals.size:
-            state.update((float(last),) if last is not None else (None,))
 
-        yield pd.DataFrame(
-            {
-                "server": server,
-                "tag": tag,
-                "doubleValue": pd.Series(vals, dtype=object).where(
-                    pd.Series(vals).notna(), None
-                ),
-                "reportedValue": pd.Series(ref, dtype=object),
-                "reported": reported,
-                "serverTimestamp": pdf["serverTimestamp"],
-            },
-            columns=[f.name for f in DEADBAND_SCHEMA.fields],
-        )
+        return {
+            "server": server,
+            "tag": tag,
+            "doubleValue": pd.Series(vals, dtype=object).where(
+                pd.Series(vals).notna(), None
+            ),
+            "reportedValue": pd.Series(ref, dtype=object),
+            "reported": reported,
+            "serverTimestamp": pdf["serverTimestamp"],
+        }, ((float(last),) if last is not None else (None,))
 
-    return _apply
+    return step
 
 
 def deadband_stream(opc_stream: DataFrame, deadband: float) -> DataFrame:
@@ -275,16 +281,10 @@ def deadband_stream(opc_stream: DataFrame, deadband: float) -> DataFrame:
     compresses against the previous OBSERVATION — weaker suppression,
     but window-expressible and oracle-checkable; this operator is the
     exact form."""
-    return (
-        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _deadband_gate(deadband),
-            outputStructType=DEADBAND_SCHEMA,
-            stateStructType=DEADBAND_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp"),
+        ["server", "tag"], _deadband_step(deadband), DEADBAND_SCHEMA,
+        DEADBAND_STATE_SCHEMA, (None,), order_by="serverTimestamp",
     )
 
 
@@ -310,22 +310,16 @@ SDT_STATE_SCHEMA = StructType(
 )
 
 
-def _sdt_gate(comp_dev: float):
+def _sdt_step(comp_dev: float):
     from opc2mongodb_spark.operators.compress import SdtKernel
 
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, pdf, st):  # pragma: worker
         server, tag = key
         kernel = (
-            SdtKernel.from_state(comp_dev, tuple(state.get))
-            if state.exists
+            SdtKernel.from_state(comp_dev, st)
+            if st is not None
             else SdtKernel(comp_dev)
         )
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values("serverTimestamp", kind="stable", ignore_index=True)
         ts = pdf["serverTimestamp"]
         vals = pdf["doubleValue"].astype(float).to_numpy()
         out_t, out_v = [], []
@@ -340,19 +334,15 @@ def _sdt_gate(comp_dev: float):
                 # whose row no longer exists in this one.
                 out_t.append(pd.Timestamp(int(at) * 1000))
                 out_v.append(av)
-        if kernel.started:
-            state.update(kernel.state_tuple())
-        yield pd.DataFrame(
-            {
-                "server": server,
-                "tag": tag,
-                "serverTimestamp": pd.Series(out_t, dtype="datetime64[us]"),
-                "doubleValue": pd.Series(out_v, dtype="float64"),
-            },
-            columns=[f.name for f in SDT_SCHEMA.fields],
-        )
+        # an all-NULL slice on a fresh key never starts the kernel: no state
+        return {
+            "server": server,
+            "tag": tag,
+            "serverTimestamp": pd.Series(out_t, dtype="datetime64[us]"),
+            "doubleValue": pd.Series(out_v, dtype="float64"),
+        }, (kernel.state_tuple() if kernel.started else None)
 
-    return _apply
+    return step
 
 
 def sdt_stream(opc_stream: DataFrame, comp_dev: float) -> DataFrame:
@@ -371,16 +361,10 @@ def sdt_stream(opc_stream: DataFrame, comp_dev: float) -> DataFrame:
     serverTimestamp sort plus cross-batch state preserves for in-order
     streams (late data is the watermark policy's job, as with
     ``deadband_stream``)."""
-    return (
-        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _sdt_gate(comp_dev),
-            outputStructType=SDT_SCHEMA,
-            stateStructType=SDT_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp"),
+        ["server", "tag"], _sdt_step(comp_dev), SDT_SCHEMA, SDT_STATE_SCHEMA,
+        None, order_by="serverTimestamp",
     )
 
 
@@ -404,28 +388,24 @@ CUSUM_STATE_SCHEMA = StructType(
 )
 
 
-def _cusum_gate(target: float, slack: float, threshold: float):
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+def _cusum_step(target: float, slack: float, threshold: float):
+    def step(key, pdf, st):  # pragma: worker
         server, tag = key
-        s_hi, s_lo = state.get if state.exists else (0.0, 0.0)
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values(
-            "serverTimestamp", kind="stable", ignore_index=True
-        )
-        vals = pdf["doubleValue"].astype(float).tolist()
+        s_hi, s_lo = st
         hi_out, lo_out, alarms = [], [], []
-        for v in vals:
-            # Page's recursive CUSUM: the clamped form the batch
-            # cumulative-deviation statistic (q_cusum_changepoint) cannot
-            # express in window algebra — the clamp makes each step depend
-            # on the previous RESULT, not the previous input.
-            s_hi = max(0.0, s_hi + (v - target - slack))
-            s_lo = max(0.0, s_lo + (target - v - slack))
-            hit = s_hi > threshold or s_lo > threshold
+        for v in pdf["doubleValue"].astype(float).tolist():
+            hit = False
+            # NaN/NULL: a bad sample never moves the run (max(0.0, nan) is
+            # 0.0 and would silently reset it; the batch twin's SUM skips
+            # NULLs) — emitted with the carried sums, never alarming.
+            if v == v:
+                # Page's recursive CUSUM: the clamped form the batch
+                # cumulative-deviation statistic (q_cusum_changepoint)
+                # cannot express in window algebra — the clamp makes each
+                # step depend on the previous RESULT, not the previous input.
+                s_hi = max(0.0, s_hi + (v - target - slack))
+                s_lo = max(0.0, s_lo + (target - v - slack))
+                hit = s_hi > threshold or s_lo > threshold
             hi_out.append(s_hi)
             lo_out.append(s_lo)
             alarms.append(hit)
@@ -433,22 +413,17 @@ def _cusum_gate(target: float, slack: float, threshold: float):
                 # alarm resets the detector (standard practice: start a
                 # fresh run so repeated drift re-alarms, not saturates)
                 s_hi, s_lo = 0.0, 0.0
-        if vals:
-            state.update((float(s_hi), float(s_lo)))
-        yield pd.DataFrame(
-            {
-                "server": server,
-                "tag": tag,
-                "doubleValue": pdf["doubleValue"],
-                "s_hi": hi_out,
-                "s_lo": lo_out,
-                "alarm": alarms,
-                "serverTimestamp": pdf["serverTimestamp"],
-            },
-            columns=[f.name for f in CUSUM_SCHEMA.fields],
-        )
+        return {
+            "server": server,
+            "tag": tag,
+            "doubleValue": pdf["doubleValue"],
+            "s_hi": hi_out,
+            "s_lo": lo_out,
+            "alarm": alarms,
+            "serverTimestamp": pdf["serverTimestamp"],
+        }, (float(s_hi), float(s_lo))
 
-    return _apply
+    return step
 
 
 def cusum_stream(
@@ -468,17 +443,14 @@ def cusum_stream(
     (checkpoint-recoverable); micro-batch boundaries don't change
     verdicts because the per-batch serverTimestamp sort plus carried
     state preserves point order for in-order streams (late data is the
-    watermark policy's job)."""
-    return (
-        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _cusum_gate(target, slack, threshold),
-            outputStructType=CUSUM_SCHEMA,
-            stateStructType=CUSUM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    watermark policy's job). A NULL sample is emitted with the carried
+    sums, never alarms and never moves the run (the batch twin's SUM
+    skips NULLs too)."""
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp"),
+        ["server", "tag"], _cusum_step(target, slack, threshold),
+        CUSUM_SCHEMA, CUSUM_STATE_SCHEMA, (0.0, 0.0),
+        order_by="serverTimestamp",
     )
 
 
@@ -537,20 +509,15 @@ def psi_reference(ref: DataFrame, value_col: str) -> tuple[list, list]:
     return edges, [int(by_bin.get(b, 0)) for b in range(1, 11)]
 
 
-def _psi_gate(edges: list, ref_counts: list, threshold: float):
+def _psi_step(edges: list, ref_counts: list, threshold: float):
     import math
 
     n1 = sum(ref_counts)
     p = [(c + 0.5) / (n1 + 5.0) for c in ref_counts]
 
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, pdf, st):  # pragma: worker
         server, tag = key
-        counts = list(state.get[0]) if state.exists else [0] * 10
-        pdf = pd.concat(list(batches), ignore_index=True)
+        counts = list(st[0])
         batch_n = len(pdf)
         for v in pdf["doubleValue"].astype(float):
             b = 0
@@ -564,26 +531,22 @@ def _psi_gate(edges: list, ref_counts: list, threshold: float):
             q = (counts[i] + 0.5) / (n2 + 5.0)
             psi += (p[i] - q) * math.log(p[i] / q)
         alarm = psi > threshold
-        out = pd.DataFrame(
-            {
-                "server": [server],
-                "tag": [tag],
-                "batch_n": [batch_n],
-                "n_seen": [n2],
-                "psi": [psi],
-                "alarm": [alarm],
-            },
-            columns=[f.name for f in PSI_SCHEMA.fields],
-        )
+        out = {
+            "server": [server],
+            "tag": [tag],
+            "batch_n": [batch_n],
+            "n_seen": [n2],
+            "psi": [psi],
+            "alarm": [alarm],
+        }
         if alarm:
             # like cusum_stream's reset: start a fresh accumulation run so
             # a later, separate drift episode re-alarms instead of the
             # statistic saturating forever on stale history
             counts = [0] * 10
-        state.update((counts,))
-        yield out
+        return out, (counts,)
 
-    return _apply
+    return step
 
 
 def psi_drift_stream(
@@ -609,16 +572,11 @@ def psi_drift_stream(
             f"expected <=9 edges and 10 reference bin counts, got "
             f"{len(edges)}/{len(ref_counts)}"
         )
-    return (
-        opc_stream.select("server", "tag", "doubleValue")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _psi_gate(list(edges), [int(c) for c in ref_counts], threshold),
-            outputStructType=PSI_SCHEMA,
-            stateStructType=PSI_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue"),
+        ["server", "tag"],
+        _psi_step(list(edges), [int(c) for c in ref_counts], threshold),
+        PSI_SCHEMA, PSI_STATE_SCHEMA, ([0] * 10,),
     )
 
 
@@ -642,24 +600,11 @@ HH_STATE_SCHEMA = StructType(
 )
 
 
-def _hh_gate(k: int):
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+def _hh_step(k: int):
+    def step(key, pdf, st):  # pragma: worker
         (server,) = key
-        if state.exists:
-            tags, counts, errs, n_seen = state.get
-            table = {
-                t: [c, e] for t, c, e in zip(tags, counts, errs)
-            }
-        else:
-            table, n_seen = {}, 0
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values(
-            "serverTimestamp", kind="stable", ignore_index=True
-        )
+        tags, counts, errs, n_seen = st
+        table = {t: [c, e] for t, c, e in zip(tags, counts, errs)}
         for tag in pdf["tag"].astype(str):
             n_seen += 1
             if tag in table:
@@ -676,26 +621,18 @@ def _hh_gate(k: int):
         items = sorted(
             table.items(), key=lambda kv: (-kv[1][0], kv[0])
         )
-        state.update(
-            (
-                [t for t, _ in items],
-                [c for _, (c, _) in items],
-                [e for _, (_, e) in items],
-                int(n_seen),
-            )
-        )
-        yield pd.DataFrame(
-            {
-                "server": server,
-                "tag": [t for t, _ in items],
-                "est_count": [c for _, (c, _) in items],
-                "max_err": [e for _, (_, e) in items],
-                "n_seen": int(n_seen),
-            },
-            columns=[f.name for f in HH_SCHEMA.fields],
-        )
+        tags = [t for t, _ in items]
+        counts = [c for _, (c, _) in items]
+        errs = [e for _, (_, e) in items]
+        return {
+            "server": server,
+            "tag": tags,
+            "est_count": counts,
+            "max_err": errs,
+            "n_seen": int(n_seen),
+        }, (tags, counts, errs, int(n_seen))
 
-    return _apply
+    return step
 
 
 def heavy_hitters_stream(opc_stream: DataFrame, k: int = 8) -> DataFrame:
@@ -716,16 +653,10 @@ def heavy_hitters_stream(opc_stream: DataFrame, k: int = 8) -> DataFrame:
     grow without limit."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    return (
-        opc_stream.select("server", "tag", "serverTimestamp")
-        .groupBy("server")
-        .applyInPandasWithState(
-            _hh_gate(int(k)),
-            outputStructType=HH_SCHEMA,
-            stateStructType=HH_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "serverTimestamp"),
+        ["server"], _hh_step(int(k)), HH_SCHEMA, HH_STATE_SCHEMA,
+        ([], [], [], 0), order_by="serverTimestamp",
     )
 
 
@@ -737,20 +668,9 @@ QUOTA_STATE_SCHEMA = StructType(
 )
 
 
-def _quota_gate(rate_per_sec: float, burst: float, out_cols: list):
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (server,) = key
-        tokens, last_us = (
-            state.get if state.exists else (float(burst), None)
-        )
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values(
-            "serverTimestamp", kind="stable", ignore_index=True
-        )
+def _quota_step(rate_per_sec: float, burst: float):
+    def step(key, pdf, st):  # pragma: worker
+        tokens, last_us = st
         admitted, tokens_after = [], []
         for ts in pdf["serverTimestamp"]:
             now_us = int(ts.value // 1000)  # pandas ns -> integer us
@@ -767,15 +687,10 @@ def _quota_gate(rate_per_sec: float, burst: float, out_cols: list):
                 tokens -= 1.0
             admitted.append(ok)
             tokens_after.append(tokens)
-        if len(pdf):
-            state.update((float(tokens), int(last_us)))
-        out = pdf.copy()
-        out["server"] = server
-        out["admitted"] = admitted
-        out["tokens_after"] = tokens_after
-        yield out[out_cols]
+        out = pdf.assign(admitted=admitted, tokens_after=tokens_after)
+        return out, (float(tokens), int(last_us))
 
-    return _apply
+    return step
 
 
 def quota_gate(
@@ -814,13 +729,10 @@ def quota_gate(
             StructField("tokens_after", DoubleType()),
         ]
     )
-    out_cols = [f.name for f in out_schema.fields]
-    return opc_stream.groupBy("server").applyInPandasWithState(
-        _quota_gate(float(rate_per_sec), float(burst), out_cols),
-        outputStructType=out_schema,
-        stateStructType=QUOTA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        opc_stream, ["server"],
+        _quota_step(float(rate_per_sec), float(burst)), out_schema,
+        QUOTA_STATE_SCHEMA, (float(burst), None), order_by="serverTimestamp",
     )
 
 
@@ -958,38 +870,26 @@ SCHEMA_DRIFT_STATE_SCHEMA = StructType(
 )
 
 
-def _schema_drift_gate(baseline: list[str]):
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (server,) = key
-        known = set(state.get[0]) if state.exists else set(baseline)
-        batch_keys: set[str] = set()
-        invalid = 0
-        for pdf in batches:
-            for arr in pdf["_keys"]:
-                if arr is None:
-                    invalid += 1
-                else:
-                    batch_keys.update(str(k) for k in arr)
-        new = sorted(batch_keys - known)
-        known |= batch_keys
-        state.update((sorted(known),))
-        yield pd.DataFrame(
-            {
-                "server": [server],
-                "batch_keys": [len(batch_keys)],
-                "new_keys": [new],
-                "invalid_rows": [invalid],
-                "n_known": [len(known)],
-                "alarm": [len(new) > 0],
-            },
-            columns=[f.name for f in SCHEMA_DRIFT_SCHEMA.fields],
-        )
-
-    return _apply
+def _schema_drift_step(key, pdf, st):  # pragma: worker
+    (server,) = key
+    known = set(st[0])
+    batch_keys: set[str] = set()
+    invalid = 0
+    for arr in pdf["_keys"]:
+        if arr is None:
+            invalid += 1
+        else:
+            batch_keys.update(str(k) for k in arr)
+    new = sorted(batch_keys - known)
+    known |= batch_keys
+    return {
+        "server": [server],
+        "batch_keys": [len(batch_keys)],
+        "new_keys": [new],
+        "invalid_rows": [invalid],
+        "n_known": [len(known)],
+        "alarm": [len(new) > 0],
+    }, (sorted(known),)
 
 
 def schema_drift_stream(
@@ -1019,12 +919,9 @@ def schema_drift_stream(
             F.from_json(F.col(json_col), "map<string,string>")
         ).alias("_keys"),
     )
-    return keyed.groupBy("server").applyInPandasWithState(
-        _schema_drift_gate([str(k) for k in baseline]),
-        outputStructType=SCHEMA_DRIFT_SCHEMA,
-        stateStructType=SCHEMA_DRIFT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_fold(
+        keyed, ["server"], _schema_drift_step, SCHEMA_DRIFT_SCHEMA,
+        SCHEMA_DRIFT_STATE_SCHEMA, ([str(k) for k in baseline],),
     )
 
 
@@ -1044,23 +941,10 @@ ALARM_STATE_SCHEMA = StructType(
 )
 
 
-def _hysteresis_gate(hi: float, lo: float):
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+def _hysteresis_step(hi: float, lo: float):
+    def step(key, pdf, st):  # pragma: worker
         server, tag = key
-        cur = int(state.get[0]) if state.exists else 0
-        pdf = pd.concat(list(batches), ignore_index=True)
-        # total order: equal-timestamp records tiebreak on value (the
-        # stream schema has no event id) — without it, Arrow batch concat
-        # order would decide whether a same-instant (hi, lo) pair ends
-        # SET or CLEAR, making reruns of the same input diverge
-        pdf = pdf.sort_values(
-            ["serverTimestamp", "doubleValue"], kind="stable",
-            ignore_index=True,
-        )
+        cur = int(st[0])
         ts_out, tr_out = [], []
         for v, ts in zip(pdf["doubleValue"], pdf["serverTimestamp"]):
             if v >= hi:
@@ -1073,18 +957,14 @@ def _hysteresis_gate(hi: float, lo: float):
                 ts_out.append(ts)
                 tr_out.append("SET" if nxt == 1 else "CLEAR")
                 cur = nxt
-        state.update((cur,))
-        yield pd.DataFrame(
-            {
-                "server": server,
-                "tag": tag,
-                "serverTimestamp": ts_out,
-                "transition": tr_out,
-            },
-            columns=[f.name for f in ALARM_SCHEMA.fields],
-        )
+        return {
+            "server": server,
+            "tag": tag,
+            "serverTimestamp": ts_out,
+            "transition": tr_out,
+        }, (cur,)
 
-    return _apply
+    return step
 
 
 def hysteresis_stream(
@@ -1109,16 +989,15 @@ def hysteresis_stream(
     dead zone is empty and the gate degenerates to a plain threshold."""
     if not hi > lo:
         raise ValueError(f"need hi > lo, got hi={hi!r} lo={lo!r}")
-    return (
-        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _hysteresis_gate(float(hi), float(lo)),
-            outputStructType=ALARM_SCHEMA,
-            stateStructType=ALARM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    # total order: equal-timestamp records tiebreak on value (the stream
+    # schema has no event id) — without it, Arrow batch concat order would
+    # decide whether a same-instant (hi, lo) pair ends SET or CLEAR,
+    # making reruns of the same input diverge
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp"),
+        ["server", "tag"], _hysteresis_step(float(hi), float(lo)),
+        ALARM_SCHEMA, ALARM_STATE_SCHEMA, (0,),
+        order_by=["serverTimestamp", "doubleValue"],
     )
 
 
@@ -1141,17 +1020,12 @@ SRM_STATE_SCHEMA = StructType(
 )
 
 
-def _srm_gate(seed: str, critical: float):
+def _srm_step(seed: str, critical: float):
     import hashlib
 
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, pdf, st):  # pragma: worker
         (experiment,) = key
-        n_t, n_c = state.get if state.exists else (0, 0)
-        pdf = pd.concat(list(batches), ignore_index=True)
+        n_t, n_c = st
         batch_n = len(pdf)
         for uid in pdf["user_id"]:
             # the batch twin's md5 bucket (q_srm_check): first 8 hex
@@ -1167,20 +1041,16 @@ def _srm_gate(seed: str, critical: float):
             chi2 = (n_t - e) * (n_t - e) / e + (n_c - e) * (n_c - e) / e
         else:
             chi2 = 0.0
-        state.update((int(n_t), int(n_c)))
-        yield pd.DataFrame(
-            {
-                "experiment": [experiment],
-                "batch_n": [batch_n],
-                "n_treatment": [n_t],
-                "n_control": [n_c],
-                "chi2_stat": [chi2],
-                "srm_alarm": [chi2 > critical],
-            },
-            columns=[f.name for f in SRM_SCHEMA.fields],
-        )
+        return {
+            "experiment": [experiment],
+            "batch_n": [batch_n],
+            "n_treatment": [n_t],
+            "n_control": [n_c],
+            "chi2_stat": [chi2],
+            "srm_alarm": [chi2 > critical],
+        }, (int(n_t), int(n_c))
 
-    return _apply
+    return step
 
 
 def srm_stream(
@@ -1204,16 +1074,10 @@ def srm_stream(
     user dedup would need unbounded state; upstream exactly-once exposure
     logging is the CorpusIngestGate-style dedup seam).  Chi-square on
     exact integer counts is deterministic; no transcendentals."""
-    return (
-        assignments.select("experiment", "user_id")
-        .groupBy("experiment")
-        .applyInPandasWithState(
-            _srm_gate(seed, float(critical)),
-            outputStructType=SRM_SCHEMA,
-            stateStructType=SRM_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        assignments.select("experiment", "user_id"), ["experiment"],
+        _srm_step(seed, float(critical)), SRM_SCHEMA, SRM_STATE_SCHEMA,
+        (0, 0),
     )
 
 
@@ -1233,18 +1097,10 @@ FUNNEL_STATE_SCHEMA = StructType(
 )
 
 
-def _funnel_gate(steps: tuple):
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+def _funnel_step(steps: tuple):
+    def step(key, pdf, st):  # pragma: worker
         (user_id,) = key
-        (stage,) = state.get if state.exists else (0,)
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values(
-            ["ts", "event_id"], kind="stable", ignore_index=True
-        )
+        (stage,) = st
         out_stage, out_step, out_ts = [], [], []
         for _, row in pdf.iterrows():
             # advance ONLY on the next expected step, strictly in event
@@ -1255,18 +1111,14 @@ def _funnel_gate(steps: tuple):
                 out_stage.append(stage)
                 out_step.append(row["event_type"])
                 out_ts.append(row["ts"])
-        state.update((int(stage),))
-        yield pd.DataFrame(
-            {
-                "user_id": user_id,
-                "stage": out_stage,
-                "step": out_step,
-                "ts": out_ts,
-            },
-            columns=[f.name for f in FUNNEL_SCHEMA.fields],
-        )
+        return {
+            "user_id": user_id,
+            "stage": out_stage,
+            "step": out_step,
+            "ts": out_ts,
+        }, (int(stage),)
 
-    return _apply
+    return step
 
 
 def funnel_stream(
@@ -1286,16 +1138,10 @@ def funnel_stream(
     deterministic; across micro-batches the carried stage preserves the
     strictly-after semantics for in-order streams (late data is the
     watermark policy's job, as everywhere in this package)."""
-    return (
-        events.select("user_id", "event_type", "ts", "event_id")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _funnel_gate(tuple(steps)),
-            outputStructType=FUNNEL_SCHEMA,
-            stateStructType=FUNNEL_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        events.select("user_id", "event_type", "ts", "event_id"),
+        ["user_id"], _funnel_step(tuple(steps)), FUNNEL_SCHEMA,
+        FUNNEL_STATE_SCHEMA, (0,), order_by=["ts", "event_id"],
     )
 
 
@@ -1319,46 +1165,28 @@ DRAWDOWN_STATE_SCHEMA = StructType(
 )
 
 
-def _drawdown_gate():
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        server, tag = key
-        peak, max_dd = (
-            state.get if state.exists else (float("-inf"), 0.0)
-        )
-        pdf = pd.concat(list(batches), ignore_index=True)
-        pdf = pdf.sort_values(
-            "serverTimestamp", kind="stable", ignore_index=True
-        )
-        peaks, dds, maxdds = [], [], []
-        for v in pdf["doubleValue"].astype(float):
-            # running-peak recursion: peak depends on its own previous
-            # OUTPUT — the same why-stateful argument as cusum_stream
-            peak = v if v > peak else peak
-            dd = peak - v
-            max_dd = dd if dd > max_dd else max_dd
-            peaks.append(peak)
-            dds.append(dd)
-            maxdds.append(max_dd)
-        if len(pdf):
-            state.update((float(peak), float(max_dd)))
-        yield pd.DataFrame(
-            {
-                "server": server,
-                "tag": tag,
-                "doubleValue": pdf["doubleValue"],
-                "peak": peaks,
-                "drawdown": dds,
-                "max_drawdown": maxdds,
-                "serverTimestamp": pdf["serverTimestamp"],
-            },
-            columns=[f.name for f in DRAWDOWN_SCHEMA.fields],
-        )
-
-    return _apply
+def _drawdown_step(key, pdf, st):  # pragma: worker
+    server, tag = key
+    peak, max_dd = st
+    peaks, dds, maxdds = [], [], []
+    for v in pdf["doubleValue"].astype(float):
+        # running-peak recursion: peak depends on its own previous
+        # OUTPUT — the same why-stateful argument as cusum_stream
+        peak = v if v > peak else peak
+        dd = peak - v
+        max_dd = dd if dd > max_dd else max_dd
+        peaks.append(peak)
+        dds.append(dd)
+        maxdds.append(max_dd)
+    return {
+        "server": server,
+        "tag": tag,
+        "doubleValue": pdf["doubleValue"],
+        "peak": peaks,
+        "drawdown": dds,
+        "max_drawdown": maxdds,
+        "serverTimestamp": pdf["serverTimestamp"],
+    }, (float(peak), float(max_dd))
 
 
 def drawdown_stream(opc_stream: DataFrame) -> DataFrame:
@@ -1372,16 +1200,11 @@ def drawdown_stream(opc_stream: DataFrame) -> DataFrame:
     micro-batch, records order by serverTimestamp (stable sort); across
     batches and restarts the carried (peak, max_dd) preserves exact
     continuation for in-order streams."""
-    return (
-        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _drawdown_gate(),
-            outputStructType=DRAWDOWN_SCHEMA,
-            stateStructType=DRAWDOWN_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "doubleValue", "serverTimestamp"),
+        ["server", "tag"], _drawdown_step, DRAWDOWN_SCHEMA,
+        DRAWDOWN_STATE_SCHEMA, (float("-inf"), 0.0),
+        order_by="serverTimestamp",
     )
 
 
@@ -1412,34 +1235,22 @@ _EVALUE_LR0 = -0.18232155679395462
 _EVALUE_LN20 = 2.995732273553991
 
 
-def _evalue_gate():
-    def _apply(  # pragma: worker
-        key: tuple[Any, ...],
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        server, tag = key
-        x, n = state.get if state.exists else (0, 0)
-        pdf = pd.concat(list(batches), ignore_index=True)
-        batch_n = len(pdf)
-        x += int((pdf["quality"] != 192).sum())
-        n += batch_n
-        state.update((int(x), int(n)))
-        lne = x * _EVALUE_LR1 + (n - x) * _EVALUE_LR0
-        yield pd.DataFrame(
-            {
-                "server": [server],
-                "tag": [tag],
-                "batch_n": [batch_n],
-                "n_seen": [n],
-                "x_seen": [x],
-                "lne": [lne],
-                "alarm": [lne > _EVALUE_LN20],
-            },
-            columns=[f.name for f in EVALUE_SCHEMA.fields],
-        )
-
-    return _apply
+def _evalue_step(key, pdf, st):  # pragma: worker
+    server, tag = key
+    x, n = st
+    batch_n = len(pdf)
+    x += int((pdf["quality"] != 192).sum())
+    n += batch_n
+    lne = x * _EVALUE_LR1 + (n - x) * _EVALUE_LR0
+    return {
+        "server": [server],
+        "tag": [tag],
+        "batch_n": [batch_n],
+        "n_seen": [n],
+        "x_seen": [x],
+        "lne": [lne],
+        "alarm": [lne > _EVALUE_LN20],
+    }, (int(x), int(n))
 
 
 def evalue_stream(opc_stream: DataFrame) -> DataFrame:
@@ -1457,14 +1268,7 @@ def evalue_stream(opc_stream: DataFrame) -> DataFrame:
     care about intra-batch order, so restarts reproduce bit-identical
     e-values); the coefficients are universal literals shared with the
     batch twin."""
-    return (
-        opc_stream.select("server", "tag", "quality")
-        .groupBy("server", "tag")
-        .applyInPandasWithState(
-            _evalue_gate(),
-            outputStructType=EVALUE_SCHEMA,
-            stateStructType=EVALUE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _keyed_fold(
+        opc_stream.select("server", "tag", "quality"), ["server", "tag"],
+        _evalue_step, EVALUE_SCHEMA, EVALUE_STATE_SCHEMA, (0, 0),
     )

@@ -41,8 +41,6 @@ FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") == "1"
 # Entries are "<file basename>::<test function name>" — parametrized
 # instances inherit the base name's verdict.
 FULL_MATRIX_ONLY = frozenset({
-    "test_compress.py::test_sdt_stream_matches_batch_on_decided_prefix",
-    "test_compress.py::test_sdt_stream_state_survives_query_restart",
     "test_engine.py::test_engine_ingest_roundtrip",
     "test_engine.py::test_stream_stream_join",
     "test_engine.py::test_stream_stream_left_outer_emits_null_after_watermark",
@@ -67,13 +65,8 @@ FULL_MATRIX_ONLY = frozenset({
     "test_operators.py::test_simhash_banding_matches_bruteforce",
     "test_plan_hygiene.py::test_registry_plan_hygiene",
     "test_scale_patterns.py::test_curate_corpus_end_to_end",
-    "test_scale_patterns.py::test_hysteresis_stream_transitions_and_restart",
-    "test_scale_patterns.py::test_psi_drift_stream_quiet_alarm_and_restart",
-    "test_scale_patterns.py::test_quota_gate_bursts_refill_and_restart",
-    "test_scale_patterns.py::test_schema_drift_stream_quiet_alarm_and_restart",
     "test_scale_patterns.py::test_watchdog_stream_alarms_once_and_rearms",
     "test_streaming.py::test_bridge_restart_resumes_without_duplicates",
-    "test_streaming.py::test_bridge_with_quota_and_ledger_reconciles",
     "test_streaming.py::test_gate_compact_index_default_excludes_latest_batch",
     "test_streaming.py::test_gate_compact_index_heals_crash_leftover_dirs",
     "test_streaming.py::test_gate_index_compaction_crash_windows",

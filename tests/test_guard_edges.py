@@ -310,17 +310,17 @@ def test_store_merge_skips_empty_batch_and_heals_staging(spark, tmp_path):
 
 
 def test_sink_writer_wiring_builds_both_trigger_paths(spark, tmp_path):
-    """upsert_query / mongo_upsert_query writer construction on both the
-    triggered and untriggered paths (wiring only — the writer is built but
-    never started; the trigger VALUE has no public getter on
-    DataStreamWriter, and the behavioral trigger cadence is covered by the
-    streaming goldens that start real queries)."""
+    """upsert_query writer construction for both sinks (the parquet store
+    and the Mongo bulk sink) on both the triggered and untriggered paths
+    (wiring only — the writer is built but never started; the trigger
+    VALUE has no public getter on DataStreamWriter, and the behavioral
+    trigger cadence is covered by the streaming goldens that start real
+    queries)."""
     from pyspark.sql.streaming import DataStreamWriter
 
     from opc2mongodb_spark.streaming.sinks import (
         CurrentValuesStore,
         MongoBulkUpsertSink,
-        mongo_upsert_query,
         upsert_query,
     )
 
@@ -330,8 +330,8 @@ def test_sink_writer_wiring_builds_both_trigger_paths(spark, tmp_path):
     for secs in (None, 5):
         w1 = upsert_query(stream, store, str(tmp_path / "ck1"),
                           trigger_seconds=secs)
-        w2 = mongo_upsert_query(stream, sink, str(tmp_path / "ck2"),
-                                trigger_seconds=secs)
+        w2 = upsert_query(stream, sink, str(tmp_path / "ck2"),
+                          trigger_seconds=secs)
         assert isinstance(w1, DataStreamWriter)
         assert isinstance(w2, DataStreamWriter)
 

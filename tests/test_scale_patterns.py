@@ -65,6 +65,36 @@ def test_salted_aggregate_matches_plain(spark, sf_dir):
     assert got == exp
 
 
+def test_stateful_gates_share_one_keyed_fold():
+    """Source scan: every no-timeout gate in streaming/stateful.py runs
+    through ``_keyed_fold``; only the event-time watchdog keeps its own
+    ``applyInPandasWithState`` call, and only the helper concatenates the
+    Arrow batches — a copied gate wrapper fails here."""
+    import ast
+
+    import opc2mongodb_spark.streaming.stateful as st
+
+    src = open(st.__file__).read()
+    spans = [
+        (n.lineno, n.end_lineno, n.name)
+        for n in ast.parse(src).body
+        if isinstance(n, ast.FunctionDef)
+    ]
+
+    def owners(needle):
+        lines = [
+            i for i, line in enumerate(src.splitlines(), 1) if needle in line
+        ]
+        return sorted(
+            name for i in lines for a, b, name in spans if a <= i <= b
+        )
+
+    assert owners("applyInPandasWithState(") == [
+        "_keyed_fold", "watchdog_stream"
+    ]
+    assert owners("pd.concat(list(batches)") == ["_keyed_fold"]
+
+
 def test_stateful_change_detection(spark, tmp_path, state_provider):
     """value_changes carries state ACROSS micro-batches: prevValue of the
     first record of batch 2 equals the last value of batch 1."""
@@ -890,8 +920,9 @@ def test_stateful_cusum_resumes_and_alarms_across_batches(spark, tmp_path, state
     )
     target, slack, threshold = 10.0, 0.5, 3.0
     b1 = [10.0, 11.5, 12.0]       # drift starts: s_hi = 0 -> 1.0 -> 2.5
-    b2 = [12.5, 9.0, 6.0, 5.5]    # crosses in batch 2 (carried state), then
-    # a downward run builds s_lo
+    b2 = [None, 12.5, 9.0, 6.0, 5.5]  # a NULL sample must not reset the
+    # carried run; then crosses in batch 2 (carried state), then a downward
+    # run builds s_lo
 
     def rows(vals, t0):
         return spark.createDataFrame(
@@ -931,6 +962,9 @@ def test_stateful_cusum_resumes_and_alarms_across_batches(spark, tmp_path, state
     s_hi = s_lo = 0.0
     expected = []
     for v in b1 + b2:
+        if v is None:  # NULL: emitted with the carried sums, no move
+            expected.append((s_hi, s_lo, False))
+            continue
         s_hi = max(0.0, s_hi + (v - target - slack))
         s_lo = max(0.0, s_lo + (target - v - slack))
         hit = s_hi > threshold or s_lo > threshold
@@ -941,7 +975,7 @@ def test_stateful_cusum_resumes_and_alarms_across_batches(spark, tmp_path, state
     assert any(a for _, _, a in got), "drift never alarmed"
     # the alarm must fire in batch 2 USING batch-1 state: replaying batch 2
     # alone from zero state reaches at most s_hi=2.0 < threshold
-    assert got[3][2], got
+    assert got[4][2], got
 
 
 def test_psi_drift_stream_quiet_alarm_and_restart(spark, tmp_path, state_provider):

@@ -1,7 +1,7 @@
 """Deterministic 5x documents fixture for the scaling-slope bench.
 
 The driver generates sf{0.001,0.01,0.1} (read-only); the slope bench
-(tools/scaling_bench.py, SCALING.md) needs ONE more scale point to
+(the r6 slope study in SCALING.md) needs ONE more scale point to
 separate linear from super-linear operators. This script amplifies the
 sf0.1 ``documents`` table to sf0.5 (25,000 rows) while preserving the
 distributions that drive the heavy operators' cost:

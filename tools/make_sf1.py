@@ -3,7 +3,7 @@
 The 5x fixtures (make_scaled_{documents,embeddings,events}.py) cover the
 document/embedding/event-side operators; the frozen CORE bench set also
 reads lineitem/orders/customer/part/supplier, so its sf0.1→sf1 slope
-(tools/core_slope_bench.py, SCALING.md) needs every table at the second
+(tools/scale_gate.py, SCALING.md) needs every table at the second
 scale point.
 
 Construction, chosen so every cost driver stays stationary while row

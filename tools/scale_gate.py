@@ -6,7 +6,7 @@ invisible at sf0.1 and caught only by an ad-hoc sf1 sweep; r10 proved the
 fix at sf1. This tool makes that sweep a once-per-round contract like the
 stress rotation: it runs the CORE bench set plus the heavy extended
 entries at both scale points (median-of-RUNS, warm-first discipline — see
-tools/extended_slope_bench.py's JIT note), applies a regression rule that
+``measure``'s JIT note), applies a regression rule that
 WOULD have flagged the setsim cliff, and writes ``SCALE_GATE_r{N}.json``.
 
 Rules (per query):
@@ -78,7 +78,7 @@ N_COHORTS = 6
 LONG_RUN_S = float(os.environ.get("SPARK_GRAFT_SLOPE_LONG_RUN_S", "60"))
 
 # Heavy extended entries beyond CORE — the loop/graph/join-heavy operators
-# whose plan shape is the 100 TB risk surface (extended_slope_bench DEFAULT).
+# whose plan shape is the 100 TB risk surface.
 EXTENDED_HEAVY = [
     "q_pagerank2",
     "q_setsim_join",

@@ -175,7 +175,10 @@ def mongo_model_lane(spark, workdir: str, sweeps_per_batch: int,
     reference's ReplaceOne-per-key sink contract, RPC cost zeroed."""
     from opc2mongodb_spark.opcmodel import raw_to_opc_values
     from opc2mongodb_spark.sources.opc import register
-    from opc2mongodb_spark.streaming.sinks import MongoBulkUpsertSink
+    from opc2mongodb_spark.streaming.sinks import (
+        MongoBulkUpsertSink,
+        upsert_query,
+    )
 
     register(spark)
     raw = (
@@ -186,13 +189,9 @@ def mongo_model_lane(spark, workdir: str, sweeps_per_batch: int,
         .load()
     )
     sink = MongoBulkUpsertSink(_NoopClientFactory())
-    q = (
-        raw_to_opc_values(raw)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink.foreach_batch)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .start()
-    )
+    q = upsert_query(
+        raw_to_opc_values(raw), sink, os.path.join(workdir, "ckpt")
+    ).start()
     t0 = time.time()
     try:
         q.processAllAvailable()
