@@ -8,17 +8,23 @@ Design stance (SURVEY.md §1.4/§4): everything is declared through the
 DataFrame / Spark SQL API so Catalyst + Tungsten choose the physical plan;
 Python UDFs only where built-ins genuinely cannot express the semantics
 (and then Arrow-batched pandas UDFs, never row-at-a-time).
+
+The public names load on first use (PEP 562): a Python worker that only
+unpickles a data source imports that source's module, not the whole
+package.
 """
 
-from opc2mongodb_spark.engine import Engine
-from opc2mongodb_spark.pipelines import (
-    CurationResult,
-    curate_corpus,
-    experiment_readout,
-    monitor_readout,
-    user_features,
-)
-from opc2mongodb_spark.session import get_spark
+import importlib
+
+_EXPORTS = {
+    "CurationResult": "opc2mongodb_spark.pipelines",
+    "Engine": "opc2mongodb_spark.engine",
+    "curate_corpus": "opc2mongodb_spark.pipelines",
+    "experiment_readout": "opc2mongodb_spark.pipelines",
+    "monitor_readout": "opc2mongodb_spark.pipelines",
+    "get_spark": "opc2mongodb_spark.session",
+    "user_features": "opc2mongodb_spark.pipelines",
+}
 
 __all__ = [
     "CurationResult",
@@ -30,3 +36,22 @@ __all__ = [
     "user_features",
 ]
 __version__ = "0.1.0"
+
+
+def _lazy_exports(namespace: dict, exports: dict[str, str]):
+    """A module ``__getattr__`` that imports ``exports[name]`` on first
+    access and binds the name into ``namespace``."""
+
+    def __getattr__(name: str):
+        if name not in exports:
+            raise AttributeError(
+                f"module {namespace['__name__']!r} has no attribute {name!r}"
+            )
+        value = getattr(importlib.import_module(exports[name]), name)
+        namespace[name] = value
+        return value
+
+    return __getattr__
+
+
+__getattr__ = _lazy_exports(globals(), _EXPORTS)

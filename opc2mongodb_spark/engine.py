@@ -108,12 +108,15 @@ class Engine:
         return q, store
 
     def current_values(self, state_path: str) -> DataFrame | None:
+        """The committed snapshot of the store (None when it does not
+        exist). Safe beside a running ``ingest``: it never sees a
+        half-written merge."""
         return self._store(state_path).read(self.spark)
 
     def _store(self, state_path: str):
         """One store per state path, shared by ``ingest`` and
-        ``current_values``: reads reuse the schema the bridge last wrote
-        instead of inferring it from the files on every lookup."""
+        ``current_values``: lookups between two commits reuse one
+        DataFrame instead of listing the store on every lookup."""
         from opc2mongodb_spark.streaming.sinks import CurrentValuesStore
 
         key = os.path.abspath(state_path)

@@ -8,8 +8,8 @@ listing, per-file open cost, tiny row groups defeating column-chunk reads).
 files: one full scan, one round-robin repartition to
 ceil(total_bytes / target) (round-robin, not coalesce — coalesce would chain
 upstream and skew output file sizes to input locality), staged write, atomic
-rename swap. POSIX-only swap (same contract as the parquet sink backend: on
-object storage, use a table format's rewrite instead). The swap keeps the
+rename swap. POSIX-only swap (on object storage, use a table format's
+rewrite instead). The swap keeps the
 old data under ``._pre_compact`` until the new directory is fully in place,
 so a crash leaves either the old or the new complete directory, never a mix.
 

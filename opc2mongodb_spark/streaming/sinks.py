@@ -18,18 +18,39 @@ little: the shipped sources (``opcsim``, ``opc_live``) emit rows for every
 server in every micro-batch, so the changed set is normally the whole
 store, and pruning the read would need a pass over the batch of its own.
 
+The parquet backend keeps snapshot generations under one atomic pointer:
+
+    <path>/server=X/gen=N/part-*.parquet   rows of server X as of commit N
+    <path>/_CURRENT                        JSON manifest: version, schema,
+                                           server dir -> generation, and the
+                                           previous commit's map
+                                           (the leading ``_`` keeps Spark's
+                                           file listings off it)
+
+A merge writes only the servers it changed, as generation N, then commits
+with ONE ``os.replace`` of ``_CURRENT``; unchanged servers keep pointing at
+their old generation. After the flip, GC deletes the generations that
+neither this commit nor the one before it references. Readers resolve
+``_CURRENT`` once and read exactly the listed directories with the
+manifest's schema, so a reader never sees a half-written merge, and a crash
+at any point leaves the last commit intact. A plain
+``spark.read.parquet(path)`` sees both retained generations (and a ``gen``
+column): read through ``CurrentValuesStore.read`` /
+``Engine.current_values``. One writer per store (one streaming query).
+
 At scale the state store is a transactional Delta MERGE when ``delta-spark``
-is importable (``backend="auto"``); the parquet staging-swap below is the
-stand-in for environments without a lakehouse format — correct, but its
-``os.rename`` directory swap assumes a POSIX filesystem (atomic rename).
-On object storage (S3/GCS) rename is copy+delete and non-atomic: use the
-Delta backend there.
+is importable (``backend="auto"``). The parquet backend needs POSIX
+atomicity for one thing only: the single-file ``os.replace`` of the
+pointer. Object stores (S3/GCS) do not give that either: use the Delta
+backend there.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -41,6 +62,10 @@ from opc2mongodb_spark.operators.last_value import last_value_per_key
 # A/B on the sink's own lane (SINK_CODEC_AB_r13.json) measured per-batch
 # time flat and 45% fewer bytes for zstd; the state is re-read every batch.
 PARQUET_CODEC = "zstd"
+
+# The parquet backend's commit pointer and generation directory prefix.
+CURRENT = "_CURRENT"
+GEN = "gen"
 
 
 def delta_available() -> bool:
@@ -82,21 +107,20 @@ class CurrentValuesStore:
         self.key_cols = list(key_cols)
         self.order_col = order_col
         self.backend = backend
-        # Schema of the parquet state: the one this store last wrote, else
-        # inferred on the first read. Reads pass it to the reader, so opening
-        # the store lists the files but runs no footer-reading job.
-        self._schema: StructType | None = None
+        # (manifest text, DataFrame over it) of the last generation read:
+        # lookups between two commits reuse the DataFrame, so they list no
+        # directory, read no footer and build no new relation.
+        self._snapshot: tuple[str, DataFrame] | None = None
 
     def read(self, spark: SparkSession) -> DataFrame | None:
-        if not os.path.exists(self.path):
-            return None
         if self.backend == "delta":
+            if not os.path.exists(self.path):
+                return None
             return spark.read.format("delta").load(self.path)  # pragma: no cover - delta absent here
-        if self._schema is None:
-            df = spark.read.parquet(self.path)
-            self._schema = df.schema
-            return df
-        return spark.read.schema(self._schema).parquet(self.path)
+        df = self._current(spark)
+        if df is None and self._legacy_servers():
+            return spark.read.parquet(self.path)  # not yet adopted
+        return df
 
     def merge_batch(self, batch: DataFrame) -> None:
         if self.backend == "delta":
@@ -110,7 +134,7 @@ class CurrentValuesStore:
         ``whenMatched`` condition keeps the stored row when it is newer, so
         replayed/out-of-order batches cannot regress state. Atomicity,
         concurrent readers, and object-store safety come from the table
-        format — no staging swap, no rename assumptions."""
+        format — no generations, no pointer file."""
         from delta.tables import DeltaTable
 
         spark = batch.sparkSession
@@ -136,41 +160,152 @@ class CurrentValuesStore:
 
     def _merge_batch_parquet(self, batch: DataFrame) -> None:
         """Upsert a micro-batch with ONE Spark action (the parquet stand-in
-        for the Delta MERGE above), then swap in only the staged server
-        directories. Servers the batch did not change are read but never
-        rewritten: their files stay in place.
+        for the Delta MERGE above) into a new generation, then commit it
+        with one ``os.replace`` of ``_CURRENT``. Servers the batch did not
+        change are read but never rewritten: the new manifest keeps their
+        old generation.
 
         One action scans the batch once, so the batch needs no persist.
-        An empty batch stages nothing and leaves the store untouched (not
-        even created).
+        A batch that changes no server commits nothing.
 
-        POSIX-only: the final ``os.rename`` swap relies on atomic directory
-        rename; do not point this backend at object storage."""
+        Crash-safe at every step: a generation that was written but not
+        committed is unreferenced (this merge's retry clears it, GC removes
+        it otherwise), and the committed manifest always lists complete
+        generations."""
         pcol = self.key_cols[0]
         schema = self._state_schema(batch)
-        tmp = self.path + "._staging"
-        if os.path.exists(tmp):  # leftover of a crashed merge
-            shutil.rmtree(tmp)
-        # Executing the write fully materializes the changed partitions
-        # before any directory under self.path is mutated.
+        text = self._pointer()
+        manifest = json.loads(text) if text else self._adopt(schema)
+        gen = (manifest["version"] if manifest else 0) + 1
+        # leftovers of a crashed attempt at this generation
+        shutil.rmtree(os.path.join(self.path, "_temporary"), ignore_errors=True)
+        for entry in self._server_dirs():
+            shutil.rmtree(
+                os.path.join(self.path, entry, f"{GEN}={gen}"), ignore_errors=True
+            )
         (
             self._changed_partitions(batch, schema)
-            .write.mode("overwrite")
+            .withColumn(GEN, F.lit(gen))
+            .write.mode("append")
             .option("compression", PARQUET_CODEC)
-            .partitionBy(pcol)
-            .parquet(tmp)
+            .partitionBy(pcol, GEN)
+            .parquet(self.path)
         )
+        written = self._holding(gen)
+        if not written:
+            return
+        previous = manifest["servers"] if manifest else {}
+        self._gc(self._commit(gen, schema, {**previous, **written}, previous))
 
-        staged = [e for e in os.listdir(tmp) if e.startswith(f"{pcol}=")]
-        if staged:
-            os.makedirs(self.path, exist_ok=True)
-            self._schema = schema
-        for entry in staged:
-            dst = os.path.join(self.path, entry)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            os.rename(os.path.join(tmp, entry), dst)
-        shutil.rmtree(tmp)
+    def _commit(
+        self, version: int, schema: StructType, servers: dict, previous: dict
+    ) -> dict:
+        """Write the manifest beside the pointer, then flip the pointer with
+        one atomic ``os.replace``. ``commit`` makes every manifest unique,
+        so a reader's cache never mistakes a recreated store for the old
+        one."""
+        manifest = {
+            "version": version,
+            "commit": uuid.uuid4().hex,
+            "schema": schema.jsonValue(),
+            "servers": servers,
+            "previous": previous,
+        }
+        tmp = os.path.join(self.path, CURRENT + ".tmp")
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(manifest, f)
+        os.replace(tmp, os.path.join(self.path, CURRENT))
+        return manifest
+
+    def _gc(self, manifest: dict) -> None:
+        """Delete every generation that neither ``manifest`` nor the commit
+        before it references: a reader that resolved the previous pointer
+        can still finish."""
+        keep = {
+            (entry, g)
+            for servers in (manifest["servers"], manifest["previous"])
+            for entry, g in servers.items()
+        }
+        for entry in self._server_dirs():
+            d = os.path.join(self.path, entry)
+            for sub in os.listdir(d):
+                gen = sub.partition(f"{GEN}=")[2]
+                if gen and (entry, int(gen)) not in keep:
+                    shutil.rmtree(os.path.join(d, sub))
+
+    def _pointer(self) -> str | None:
+        try:
+            with open(os.path.join(self.path, CURRENT), encoding="utf-8") as f:
+                return f.read()
+        except FileNotFoundError:
+            return None
+
+    def _server_dirs(self) -> list[str]:
+        prefix = f"{self.key_cols[0]}="
+        if not os.path.isdir(self.path):
+            return []
+        return [e for e in os.listdir(self.path) if e.startswith(prefix)]
+
+    def _holding(self, gen: int) -> dict[str, int]:
+        """server dir -> ``gen`` for every server that has generation ``gen``
+        on disk."""
+        return {
+            entry: gen
+            for entry in self._server_dirs()
+            if os.path.isdir(os.path.join(self.path, entry, f"{GEN}={gen}"))
+        }
+
+    def _legacy_servers(self) -> list[str]:
+        """Server directories of a pre-manifest store that still hold their
+        files directly (``server=X/part-*``)."""
+        return [
+            entry
+            for entry in self._server_dirs()
+            if any(
+                not f.startswith(f"{GEN}=")
+                for f in os.listdir(os.path.join(self.path, entry))
+            )
+        ]
+
+    def _adopt(self, schema: StructType) -> dict | None:
+        """Move a pre-manifest store's files into generation 0 and commit
+        it with the batch's ``schema`` (the schema the old layout was read
+        with). Rerunnable: a crash part-way leaves files in both places,
+        and the next call moves the rest."""
+        for entry in self._legacy_servers():
+            d = os.path.join(self.path, entry)
+            g0 = os.path.join(d, f"{GEN}=0")
+            os.makedirs(g0, exist_ok=True)
+            for f in os.listdir(d):
+                if not f.startswith(f"{GEN}="):
+                    os.rename(os.path.join(d, f), os.path.join(g0, f))
+        adopted = self._holding(0)
+        return self._commit(0, schema, adopted, {}) if adopted else None
+
+    def _current(self, spark: SparkSession) -> DataFrame | None:
+        """The DataFrame of the committed generation: ``_CURRENT`` is read
+        once per call. The DataFrame reads exactly the generation
+        directories the manifest lists, with its schema (no footer job),
+        and is reused until the pointer changes."""
+        text = self._pointer()
+        if text is None:
+            return None
+        snap = self._snapshot  # two threads racing here build two equal frames
+        if snap is None or snap[0] != text:
+            manifest = json.loads(text)
+            schema = StructType.fromJson(manifest["schema"])
+            dirs = [
+                os.path.join(self.path, entry, f"{GEN}={g}")
+                for entry, g in sorted(manifest["servers"].items())
+            ]
+            df = (
+                spark.read.schema(schema)
+                .option("basePath", self.path)
+                .parquet(*dirs)
+                .select(*schema.names)  # drops the inferred `gen` column
+            )
+            snap = self._snapshot = (text, df)
+        return snap[1]
 
     def _state_schema(self, batch: DataFrame) -> StructType:
         """The batch's fields, nullable, partition column last: the layout
@@ -196,10 +331,10 @@ class CurrentValuesStore:
         # semantics as the Delta MERGE's `s.order >= t.order` condition, and
         # deterministic (max_by alone picks an arbitrary row on ties).
         merged = batch.select(*cols, F.lit(1).alias("_src"))
-        if os.path.exists(self.path):
+        existing = self._current(spark)
+        if existing is not None:
             # batch first: its scan tasks are the slow ones, so they start
             # ahead of the state's file scans
-            existing = spark.read.schema(schema).parquet(self.path)
             merged = merged.union(existing.select(*cols, F.lit(0).alias("_src")))
         latest = last_value_per_key(
             merged.repartition(pcol),

@@ -41,7 +41,6 @@ FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS", "") == "1"
 # Entries are "<file basename>::<test function name>" — parametrized
 # instances inherit the base name's verdict.
 FULL_MATRIX_ONLY = frozenset({
-    "test_engine.py::test_engine_ingest_roundtrip",
     "test_engine.py::test_stream_stream_join",
     "test_engine.py::test_stream_stream_left_outer_emits_null_after_watermark",
     "test_guard_edges.py::test_dedup_gate_listing_and_read_corpus_edges",

@@ -301,12 +301,16 @@ def test_store_merge_skips_empty_batch_and_heals_staging(spark, tmp_path):
     # empty batch: early return, store not created
     store.merge_batch(rows.filter(F.lit(False)))
     assert store.read(spark) is None
-    # crash leftover: a stale staging dir must be cleared, not merged
-    os.makedirs(store.path + "._staging")
+    # crash leftovers: generations no manifest references (one at the
+    # number this merge writes, one on a server the store never committed)
+    # must be cleared, not merged
+    rows.write.parquet(os.path.join(store.path, "server=s1", "gen=1"))
+    rows.write.parquet(os.path.join(store.path, "server=s9", "gen=4"))
     store.merge_batch(rows)
     got = store.read(spark)
     assert got is not None and got.count() == 1
-    assert not os.path.exists(store.path + "._staging")
+    assert os.listdir(os.path.join(store.path, "server=s1")) == ["gen=1"]
+    assert not os.listdir(os.path.join(store.path, "server=s9"))
 
 
 def test_sink_writer_wiring_builds_both_trigger_paths(spark, tmp_path):

@@ -235,3 +235,24 @@ def test_dt_to_us_integer_exact_and_tz_handling():
     assert dt_to_us(plus2) == dt_to_us(naive) - 2 * 3600 * 1_000_000
     # exactness: microsecond survives round-trip
     assert dt_to_us(naive) % 1_000_000 == 123456
+
+
+def test_source_import_loads_no_batch_stack():
+    """Every Python worker that unpickles the source imports
+    ``opc2mongodb_spark.sources.opc``. The package surface is lazy, so that
+    import must not pull in pandas or the batch operators / pipelines."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = (
+        "import sys, opc2mongodb_spark.sources.opc\n"
+        "print(sorted(m for m in sys.modules if m == 'pandas' or m.startswith("
+        "('opc2mongodb_spark.operators', 'opc2mongodb_spark.pipelines'))))\n"
+    )
+    env = dict(os.environ, PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-c", probe], env=env, cwd=root,
+        capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout

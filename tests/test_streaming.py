@@ -310,8 +310,10 @@ def test_state_sizing_respects_existing_checkpoint(
 
 def test_merge_batch_rewrites_only_touched_partitions(spark, tmp_path):
     """The partition-pruned merge must leave untouched server partitions'
-    files physically in place (same inodes) — O(touched state) per batch,
-    not a full-state rewrite."""
+    files physically in place (same inodes, in the generation the manifest
+    still lists for them) — O(touched state) per batch, not a full-state
+    rewrite."""
+    import json
     import os
 
     from opc2mongodb_spark.streaming.sinks import CurrentValuesStore
@@ -334,7 +336,9 @@ def test_merge_batch_rewrites_only_touched_partitions(spark, tmp_path):
     )
 
     def inodes(server):
-        d = os.path.join(store.path, f"server={server}")
+        with open(os.path.join(store.path, "_CURRENT")) as f:
+            gen = json.load(f)["servers"][f"server={server}"]
+        d = os.path.join(store.path, f"server={server}", f"gen={gen}")
         return {
             f: os.stat(os.path.join(d, f)).st_ino
             for f in os.listdir(d)
@@ -342,6 +346,7 @@ def test_merge_batch_rewrites_only_touched_partitions(spark, tmp_path):
         }
 
     b_before = inodes("B")
+    assert b_before
     store.merge_batch(rows([("A", "t1", 2.0, 10), ("A", "t2", 3.0, 10)]))
     assert inodes("B") == b_before, "untouched partition B was rewritten"
 
