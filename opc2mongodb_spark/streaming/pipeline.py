@@ -2,14 +2,20 @@
 
 The reference's runtime is one streaming topology: per-server source threads
 → normalize → global queue → keyed upsert sink (reference: OPC2MongoDB/
-Program.cs:1300-1314). Here that topology is a single streaming query:
+Program.cs:1300-1314). Here that topology is a single stateless streaming
+query (``Engine.ingest``):
 
     readStream (per-server sources, unionByName = the queue fan-in R7)
       → normalize (the SAME coercion expressions as batch — one impl)
-      → watermark (fixes the reference's silent out-of-order overwrite,
-        Program.cs:1179-1182 never compares sourceTimestamp)
-      → windowed aggregation / last-value dedup
-      → sink (foreachBatch upsert, sinks.py)
+      → sink (foreachBatch upsert, sinks.py). ``CurrentValuesStore``
+        keeps the max-serverTimestamp row per key at any lateness, so a
+        late or replayed row never overwrites a newer one.
+        ``MongoBulkUpsertSink`` keeps the latest row per key within a
+        micro-batch and replaces unconditionally across batches, as the
+        reference does (Program.cs:1179-1182 compares no timestamps).
+
+The windowed aggregates in this module (H1–H3) add an event-time
+watermark on sourceTimestamp and drop rows later than it.
 
 Every transformation is expressed on the streaming DataFrame with the same
 Column expressions the batch path uses, so the DuckDB oracle on the batch
@@ -18,54 +24,10 @@ twin certifies the streaming semantics too (H1 ↔ q_window_tumbling).
 
 from __future__ import annotations
 
-import math
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from opc2mongodb_spark.opcmodel import events_as_opc_values
-
-# Keys per state-store partition a last-value topology targets. State rows
-# here are tiny (one row per key), so the partition count is NOT a memory
-# knob — it is a per-batch overhead knob: every stateful partition commits
-# one state file + snapshot bookkeeping per micro-batch, so 32 partitions
-# holding 1,200 keys pay 32 commits to update 1,200 rows (~2x the whole
-# batch's time at r11 measurement). 150 keys/partition keeps small bridges
-# at a handful of partitions while a 10M-tag deployment still saturates its
-# cluster (the cap below).
-STATE_KEYS_PER_PARTITION = 150
-
-
-def sized_state_partitions(n_keys: int, parallelism: int) -> int:
-    """State-store partition count for a streaming topology whose key
-    cardinality is known up front (the bridge's .conf declares every tag —
-    reference Program.cs:1257-1296).
-
-    Structured Streaming pins the stateful-operator partition count to
-    ``spark.sql.shuffle.partitions`` at the query's FIRST batch (recorded in
-    the checkpoint, immutable for the query's life), so the batch-query
-    default silently over-partitions small-key topologies. Clamp to
-    [1, parallelism]: more partitions than cores only adds per-batch commit
-    files, never parallelism."""
-    return max(1, min(parallelism, math.ceil(n_keys / STATE_KEYS_PER_PARTITION)))
-
-
-@contextmanager
-def state_partitioning(spark, n_keys: int):
-    """Scope ``spark.sql.shuffle.partitions`` to a topology-sized value while
-    a stateful streaming query STARTS (the first batch bakes it into the
-    checkpoint; the restored session value governs later batch queries).
-    Yields the partition count chosen."""
-    n = sized_state_partitions(
-        n_keys, spark.sparkContext.defaultParallelism
-    )
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield n
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", before)
 
 
 def normalize_stream(events_stream: DataFrame) -> DataFrame:
@@ -76,10 +38,10 @@ def normalize_stream(events_stream: DataFrame) -> DataFrame:
 def with_late_data_policy(
     opc_stream: DataFrame, watermark_delay: str = "1 minute"
 ) -> DataFrame:
-    """H4: event-time watermark on sourceTimestamp. Records later than the
-    watermark are dropped from stateful ops — the deliberate, documented
-    divergence from the reference, which let any later *arrival* overwrite a
-    newer reading (SURVEY.md §2.1 end)."""
+    """H4: event-time watermark on sourceTimestamp for the windowed
+    aggregates (H1–H3): records later than the watermark are dropped from
+    their windows. The current-values upsert needs no watermark — its store
+    compares timestamps itself (sinks.py)."""
     return opc_stream.withWatermark("sourceTimestamp", watermark_delay)
 
 
@@ -169,18 +131,6 @@ def session_activity(opc_stream: DataFrame, gap: str = "5 minutes") -> DataFrame
             "n",
         )
     )
-
-
-def streaming_last_value(
-    opc_stream: DataFrame, watermark_delay: str = "1 minute"
-) -> DataFrame:
-    """H5: streaming dedup state — at-most-one record per (server, tag,
-    serverTimestamp) within the watermark. Combined with the upsert sink
-    (sinks.upsert_query) this reproduces the reference's
-    current-values table with event-time-correct semantics."""
-    return opc_stream.withWatermark(
-        "serverTimestamp", watermark_delay
-    ).dropDuplicatesWithinWatermark(["server", "tag", "serverTimestamp"])
 
 
 def correlate_streams(

@@ -371,12 +371,9 @@ def upsert_query(
     (conf column READ_PERIOD, Program.cs:1281) onto the micro-batch trigger.
     Retry/reconnect (R10) is checkpoint + restart — no custom loops.
 
-    Callers that know the topology's key cardinality (the .conf declares
-    every tag) should start the returned query inside
-    ``streaming.pipeline.state_partitioning(spark, n_keys)`` — the
-    stateful partition count is pinned at first batch, and the batch-query
-    default over-partitions small bridges (r11: 32 state commits per
-    micro-batch to maintain 1,200 keys).
+    The query keeps no streaming state. Exactly-once output comes from the
+    replayable source plus an idempotent sink: a replayed micro-batch
+    writes the same rows again.
     """
     writer = (
         opc_stream.writeStream.outputMode("append")

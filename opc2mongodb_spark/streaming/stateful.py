@@ -1,12 +1,13 @@
 """Stateful streaming gates: per-key state carried across micro-batches
 via ``applyInPandasWithState`` (SURVEY.md H5 upgrade path).
 
-``dropDuplicatesWithinWatermark`` + the foreachBatch upsert store cover the
-reference's semantics with built-ins (streaming/pipeline.py — always prefer
-that). This module is the escalation point for per-key logic built-ins
-can't express: change detection against the previous value (the
-reference's subscribe-on-change path, Program.cs:126-444 ``Monitor<T>``),
-recursive filters, drift tests, admission control.
+The reference's own semantics need no streaming state: the stateless
+foreachBatch upsert (``sinks.upsert_query``, run by ``Engine.ingest``)
+keeps the newest row per key in the store. This module is for per-key
+logic that must carry state across micro-batches: change detection
+against the previous value (the reference's subscribe-on-change path,
+Program.cs:126-444 ``Monitor<T>``), recursive filters, drift tests,
+admission control.
 
 Every gate but the watchdog is one keyed fold over :func:`_keyed_fold`,
 which owns the engine half (Structured Streaming's arbitrary stateful

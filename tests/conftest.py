@@ -65,7 +65,6 @@ FULL_MATRIX_ONLY = frozenset({
     "test_plan_hygiene.py::test_registry_plan_hygiene",
     "test_scale_patterns.py::test_curate_corpus_end_to_end",
     "test_scale_patterns.py::test_watchdog_stream_alarms_once_and_rearms",
-    "test_streaming.py::test_bridge_restart_resumes_without_duplicates",
     "test_streaming.py::test_gate_compact_index_default_excludes_latest_batch",
     "test_streaming.py::test_gate_compact_index_heals_crash_leftover_dirs",
     "test_streaming.py::test_gate_index_compaction_crash_windows",
@@ -73,7 +72,6 @@ FULL_MATRIX_ONLY = frozenset({
     "test_streaming.py::test_gate_parquet_codec_default_and_hatch",
     "test_streaming.py::test_gate_releases_per_batch_checkpoints",
     "test_streaming.py::test_session_and_sliding_smoke",
-    "test_streaming.py::test_state_sizing_saturates_parallelism",
 })
 if "SPARK_GRAFT_TEST_SF_DIR" in os.environ:
     ORACLE_SF_DIRS = [SF_DIR]

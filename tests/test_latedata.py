@@ -1,4 +1,5 @@
-"""H4/H5: watermark late-data drop + streaming dedup state, file-source
+"""H4/H5: watermark late-data drop in the windowed aggregates, and the
+stateless current-values upsert under duplicate and late rows — file-source
 golden tests with controlled micro-batch ordering."""
 
 from __future__ import annotations
@@ -88,8 +89,14 @@ def test_watermark_drops_late_rows(spark, tmp_path):
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """H5: duplicate (server, tag, serverTimestamp) records collapse to one."""
-    from opc2mongodb_spark.streaming.pipeline import streaming_last_value
+    """H5 on the shipped path: the stateless upsert into the
+    current-values store, fed two file micro-batches. An exact duplicate
+    (server, tag, serverTimestamp) collapses to one row, and a t1 row
+    older than the stored one by more than the windowed aggregates'
+    1-minute watermark does not overwrite it — the store keeps the
+    max-serverTimestamp row per key at any lateness, with no streaming
+    state."""
+    from opc2mongodb_spark.streaming.sinks import CurrentValuesStore, upsert_query
 
     src = tmp_path / "src"
     src.mkdir()
@@ -102,22 +109,32 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         ],
     ).coalesce(1).write.parquet(str(src / "b1"))
 
-    stream = spark.readStream.schema(SCHEMA).parquet(str(src / "*"))
-    q = (
-        streaming_last_value(stream)
-        .writeStream.format("memory")
-        .queryName("deduped")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .start()
+    store = CurrentValuesStore(str(tmp_path / "current_values"))
+    stream = (
+        spark.readStream.schema(SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src / "*"))
     )
+    q = upsert_query(stream, store, str(tmp_path / "ckpt2")).start()
     try:
         q.processAllAvailable()
-        rows = spark.sql("select * from deduped").collect()
+        # batch 2: a LATE t1 row, 2 minutes older than the stored one
+        _rows(spark, [("t1", 100.0, "2024-01-01 09:58:00")]).coalesce(
+            1
+        ).write.parquet(str(src / "b2"))
+        q.processAllAvailable()
+        batches = [p for p in q.recentProgress if p.numInputRows > 0]
     finally:
         q.stop()
-    keys = [(r.server, r.tag, r.serverTimestamp) for r in rows]
+    assert [p.numInputRows for p in batches] == [3, 1]
+    assert all(not p.stateOperators for p in batches)
+
+    rows = store.read(spark).collect()
+    keys = [(r.server, r.tag) for r in rows]
     assert len(keys) == len(set(keys)) == 2
+    t1 = next(r for r in rows if r.tag == "t1")
+    assert t1.doubleValue == 1.0
+    assert t1.serverTimestamp == datetime.fromisoformat("2024-01-01 10:00:00")
 
 
 def test_observability_metrics(spark, tmp_path):

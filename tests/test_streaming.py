@@ -157,155 +157,24 @@ def test_current_values_store_upsert(spark, tmp_path):
     assert got == expected
 
 
-def test_sized_state_partitions_heuristic_and_scope(spark):
-    """r11: stateful topologies size their state-store partition count from
-    the declared key cardinality (Structured Streaming pins the count to
-    spark.sql.shuffle.partitions at first batch). Clamped to
-    [1, parallelism]; the context manager scopes the conf around query
-    start and always restores it."""
-    from opc2mongodb_spark.streaming.pipeline import (
-        sized_state_partitions,
-        state_partitioning,
-    )
+def test_streaming_sets_no_session_conf():
+    """Source scan: nothing under streaming/ changes session-global conf.
+    The Engine shares one session between streaming queries, the gate's
+    concurrent writes and batch queries, so a conf toggle in one of them
+    leaks into the others."""
+    import pathlib
+    import re
 
-    assert sized_state_partitions(1, 32) == 1
-    assert sized_state_partitions(150, 32) == 1
-    assert sized_state_partitions(1200, 32) == 8
-    assert sized_state_partitions(10**7, 32) == 32
-    assert sized_state_partitions(0, 32) == 1
+    import opc2mongodb_spark.streaming as streaming
 
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        with state_partitioning(spark, 1200) as n:
-            expect = sized_state_partitions(
-                1200, spark.sparkContext.defaultParallelism
-            )
-            assert n == expect
-            assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
-            raise RuntimeError("boom")  # restore must survive an exception
-    except RuntimeError:
-        pass
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def _state_partition_dirs(ckpt: str) -> list[int]:
-    """Numeric partition-directory ids under the checkpoint's state store
-    for stateful operator 0 (layout shared by the HDFS and RocksDB
-    providers: {ckpt}/state/0/<partitionId>/...)."""
-    import os
-
-    root = os.path.join(ckpt, "state", "0")
-    if not os.path.isdir(root):
-        return []
-    return sorted(int(d) for d in os.listdir(root) if d.isdigit())
-
-
-def test_state_sizing_saturates_parallelism(spark, tmp_path, state_provider):
-    """r11 VERDICT #6a: the other end of the [1, parallelism] clamp — a
-    10M-key topology must saturate the cluster, not divide 10M keys across
-    a handful of state partitions. Golden proof at the checkpoint layer:
-    the state store is created with exactly defaultParallelism partition
-    directories, under both providers."""
-    from opc2mongodb_spark.opcmodel import raw_to_opc_values
-    from opc2mongodb_spark.streaming.pipeline import (
-        state_partitioning,
-        streaming_last_value,
-    )
-
-    ckpt = str(tmp_path / f"ckpt_sat_{state_provider}")
-    deduped = streaming_last_value(raw_to_opc_values(_raw_stream(spark)))
-    with state_partitioning(spark, 10**7) as n:
-        assert n == spark.sparkContext.defaultParallelism
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    parts = _state_partition_dirs(ckpt)
-    assert parts == list(range(spark.sparkContext.defaultParallelism))
-
-
-def test_state_sizing_respects_existing_checkpoint(
-    spark, tmp_path, state_provider
-):
-    """r11 VERDICT #6b: Structured Streaming pins the stateful partition
-    count at the query's FIRST batch; a restart whose .conf declares a
-    DIFFERENT tag count (topology grew, operator re-sized) must not corrupt
-    the checkpointed state partitioning. Golden: phase 1 starts under a
-    300-key sizing (2 partitions at 150 keys/partition), phase 2 restarts
-    the SAME checkpoint under a 10M-key sizing — the query resumes, emits
-    the remaining sweeps exactly once, and the state layout stays at the
-    pinned phase-1 count, under both providers."""
-    import os
-
-    from opc2mongodb_spark.opcmodel import raw_to_opc_values
-    from opc2mongodb_spark.sources.opc import register
-    from opc2mongodb_spark.streaming.pipeline import (
-        sized_state_partitions,
-        state_partitioning,
-        streaming_last_value,
-    )
-
-    register(spark)
-    conf = os.path.join(os.path.dirname(__file__), "fixtures", "opcsim.conf")
-    ckpt = str(tmp_path / f"ckpt_pin_{state_provider}")
-
-    def run_phase(n_keys_decl: int, max_sweeps: int) -> list:
-        raw = (
-            spark.readStream.format("opcsim")
-            .option("config", conf)
-            .option("sweeps_per_batch", 2)
-            .option("max_sweeps", max_sweeps)
-            .load()
-        )
-        deduped = streaming_last_value(raw_to_opc_values(raw))
-        emitted: list = []
-
-        def feed(batch, _bid):
-            emitted.extend(batch.collect())
-
-        with state_partitioning(spark, n_keys_decl):
-            q = (
-                deduped.writeStream.outputMode("append")
-                .foreachBatch(feed)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return emitted
-
-    parallelism = spark.sparkContext.defaultParallelism
-    n1 = sized_state_partitions(300, parallelism)
-    assert n1 == 2  # 300 keys / 150 per partition
-
-    rows_a = run_phase(300, 4)
-    assert _state_partition_dirs(ckpt) == list(range(n1))
-
-    # restart with a 10M-key declaration: conf now says `parallelism`,
-    # the checkpoint says n1 — Spark must keep n1 and keep working
-    rows_b = run_phase(10**7, 8)
-    assert sized_state_partitions(10**7, parallelism) == parallelism != n1
-    assert _state_partition_dirs(ckpt) == list(range(n1))
-    assert rows_b, "restart emitted nothing — did not resume"
-
-    # exactly-once across the restart: no (server, tag, serverTimestamp)
-    # emitted twice, and phase B continues past phase A's high water mark
-    keys_a = [(r.server, r.tag, r.serverTimestamp) for r in rows_a]
-    keys_b = [(r.server, r.tag, r.serverTimestamp) for r in rows_b]
-    assert len(keys_a) == len(set(keys_a))
-    assert len(keys_b) == len(set(keys_b))
-    assert not set(keys_a) & set(keys_b)
-    assert max(r.serverTimestamp for r in rows_b) > max(
-        r.serverTimestamp for r in rows_a
-    )
+    toggle = re.compile(r"\.conf\.(set|unset)\(")
+    hits = [
+        f"{path.name}:{i}"
+        for path in sorted(pathlib.Path(streaming.__file__).parent.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if toggle.search(line)
+    ]
+    assert hits == []
 
 
 def test_merge_batch_rewrites_only_touched_partitions(spark, tmp_path):
@@ -1248,7 +1117,7 @@ def test_gate_index_compaction_crash_windows(spark, tmp_path):
 
 def test_bridge_restart_resumes_without_duplicates(spark, tmp_path):
     """r6 golden — the full reference topology (opcsim source -> coercion ->
-    watermarked last-value dedup -> Mongo-fake bulk upsert) driven through
+    stateless Mongo-fake bulk upsert) driven through
     TWO restarts from one checkpoint: each micro-batch issues at most one
     replace per (collection, key), documents route to their server's
     collection, committed sweeps are never re-emitted after restart, and
@@ -1260,7 +1129,6 @@ def test_bridge_restart_resumes_without_duplicates(spark, tmp_path):
     from opc2mongodb_spark.opcmodel import raw_to_opc_values
     from opc2mongodb_spark.operators.last_value import last_value_per_key
     from opc2mongodb_spark.sources.opc import register
-    from opc2mongodb_spark.streaming.pipeline import streaming_last_value
     from opc2mongodb_spark.streaming.sinks import MongoBulkUpsertSink
 
     class _SpoolClient:
@@ -1295,7 +1163,7 @@ def test_bridge_restart_resumes_without_duplicates(spark, tmp_path):
             .option("max_sweeps", max_sweeps)
             .load()
         )
-        deduped = streaming_last_value(raw_to_opc_values(raw))
+        opc = raw_to_opc_values(raw)
 
         def feed(batch, batch_id):
             sink = MongoBulkUpsertSink(
@@ -1306,7 +1174,7 @@ def test_bridge_restart_resumes_without_duplicates(spark, tmp_path):
             sink.foreach_batch(batch, batch_id)
 
         q = (
-            deduped.writeStream.outputMode("append")
+            opc.writeStream.outputMode("append")
             .foreachBatch(feed)
             .option("checkpointLocation", ckpt)
             .start()
@@ -1344,6 +1212,13 @@ def test_bridge_restart_resumes_without_duplicates(spark, tmp_path):
         k = (b, op["collection"], op["key"])
         assert k not in seen, f"duplicate replace in one batch: {k}"
         seen.add(k)
+
+    # exactly-once across restart #1: no sampled value is written twice
+    stamped = [
+        (op["collection"], op["key"], op["doc"]["serverTimestamp"])
+        for _, op in all_ops
+    ]
+    assert len(stamped) == len(set(stamped))
 
     # collection-per-server routing: both servers appear, each tag maps to
     # exactly one collection
@@ -1508,9 +1383,9 @@ def test_batch_ledger_reconciles_and_survives_restart(spark, tmp_path):
 def test_bridge_with_quota_and_ledger_reconciles(spark, tmp_path):
     """r7 composition golden: the bridge topology with the round's two new
     pieces in line — opcsim -> coercion -> quota_gate (capacity generous:
-    the gate must be LOSSLESS when under quota) -> watermarked last-value
-    dedup -> Mongo-fake sink, with a BatchLedger checksumming every
-    deduped micro-batch. Through a restart: every row is admitted, and
+    the gate must be LOSSLESS when under quota) -> Mongo-fake sink, with a
+    BatchLedger checksumming every admitted micro-batch. Through a
+    restart: every row is admitted, and
     the ledger (input side) reconciles exactly against a replay built
     from the SPOOL (output side) — the end-to-end delivery audit the
     ledger exists for; removing one spooled op breaks reconciliation."""
@@ -1523,7 +1398,6 @@ def test_bridge_with_quota_and_ledger_reconciles(spark, tmp_path):
     from opc2mongodb_spark.opcmodel import raw_to_opc_values
     from opc2mongodb_spark.sources.opc import register
     from opc2mongodb_spark.streaming.ledger import BatchLedger
-    from opc2mongodb_spark.streaming.pipeline import streaming_last_value
     from opc2mongodb_spark.streaming.sinks import MongoBulkUpsertSink
     from opc2mongodb_spark.streaming.stateful import quota_gate
 
@@ -1569,12 +1443,11 @@ def test_bridge_with_quota_and_ledger_reconciles(spark, tmp_path):
         admitted = gated.filter(F.col("admitted")).drop(
             "admitted", "tokens_after"
         )
-        deduped = streaming_last_value(admitted)
 
         def feed(batch, batch_id):
             # ledger the frame the sink actually WRITES (the sink
             # collapses its batch to one row per key before the bulk
-            # replace) — an input-side ledger on the raw deduped stream
+            # replace) — an input-side ledger on the raw admitted stream
             # would legitimately count more rows than deliveries
             from opc2mongodb_spark.operators.last_value import (
                 last_value_per_key,
@@ -1593,7 +1466,7 @@ def test_bridge_with_quota_and_ledger_reconciles(spark, tmp_path):
             sink.foreach_batch(batch, batch_id)
 
         q = (
-            deduped.writeStream.outputMode("append")
+            admitted.writeStream.outputMode("append")
             .foreachBatch(feed)
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .start()

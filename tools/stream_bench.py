@@ -8,32 +8,28 @@ local round-trip, INDEPENDENT of cores — and its latency floor is the queue
 depth times that RTT. This tool measures the Spark twin's sustained
 throughput so the comparison is recorded, not asserted:
 
-- **flagship lane** — the full reference topology end-to-end: opcsim
-  streaming source (Python data source, per-server partitions) → the same
-  normalize expressions as batch (``raw_to_opc_values``) → watermarked
-  last-value dedup → ``foreachBatch`` upsert into the partitioned
-  current-values store (``CurrentValuesStore``, parquet backend here; Delta
-  where importable). Run at two micro-batch sizes. This lane is
-  SOURCE-BOUND by design honesty: the simulator renders each value in
-  Python (md5 per cell), so its rows/s is a floor for the engine, not a
-  ceiling — the rate lanes below isolate the engine.
-- **stateful rate lanes** — JVM-side ``rate-micro-batch`` source (zero
-  Python in the hot path) → OPC-shaped columns → watermarked
-  ``dropDuplicatesWithinWatermark`` last-value state → ``noop`` sink, at
-  two input rates × both state-store providers (HDFS-backed default and
-  RocksDB, session.py:ROCKSDB_PROVIDER). Reports rows/s, p50/p95
-  micro-batch duration, and final state rows from StreamingQueryProgress.
+- **flagship lane** — the shipped bridge, ``Engine.ingest``, end-to-end:
+  opcsim streaming source (Python data source, per-server partitions) →
+  the same normalize expressions as batch (``raw_to_opc_values``) →
+  stateless ``foreachBatch`` upsert into the partitioned current-values
+  store (``CurrentValuesStore``, parquet backend here; Delta where
+  importable). Run at three micro-batch sizes. This lane is SOURCE-BOUND
+  by design honesty: the simulator renders each value in Python (md5 per
+  cell), so its rows/s is a floor for the engine, not a ceiling.
 - **mongo-model lane** — the flagship stream driven into
   ``MongoBulkUpsertSink`` with an injected no-op client: measures the
   render + bulk-group path of the reference's exact sink contract (one
   ReplaceOne-shaped op per changed key per batch) with the RPC cost zeroed,
   i.e. the engine-side cost of the reference's per-record sink re-expressed
   as per-batch bulks.
+- **dedup-gate lanes** — the corpus-ingest gate (``CorpusIngestGate``) at
+  two corpus sizes: admit throughput as the persisted index grows.
 
 Metrics per lane (from ``StreamingQuery.recentProgress``; the first
 ``WARMUP`` batches are excluded — cold-JIT on first frames is attributed in
 SCALING.md): total rows, wall seconds, rows/s over busy trigger time,
-p50/p95 ``triggerExecution`` ms, batches measured, final state rows.
+p50/p95 ``triggerExecution`` ms, batches measured, final state rows
+(``null`` for a lane with no stateful operator).
 
 Usage:
     python tools/stream_bench.py [--out STREAMBENCH_rN.json] [--quick]
@@ -126,36 +122,16 @@ def _synth_conf(path: str, n_servers: int, tags_per_server: int) -> int:
 
 def flagship_lane(spark, workdir: str, sweeps_per_batch: int, max_sweeps: int,
                   conf_path: str) -> dict:
-    """opcsim → normalize → watermark+dedup → CurrentValuesStore upsert."""
-    from opc2mongodb_spark.opcmodel import raw_to_opc_values
-    from opc2mongodb_spark.sources.config import parse_config_file
-    from opc2mongodb_spark.sources.opc import register
-    from opc2mongodb_spark.streaming.pipeline import (
-        state_partitioning,
-        streaming_last_value,
-    )
-    from opc2mongodb_spark.streaming.sinks import CurrentValuesStore, upsert_query
+    """``Engine.ingest``: opcsim → normalize → CurrentValuesStore upsert."""
+    from opc2mongodb_spark.engine import Engine
 
-    register(spark)
-    raw = (
-        spark.readStream.format("opcsim")
-        .option("config", conf_path)
-        .option("sweeps_per_batch", sweeps_per_batch)
-        .option("max_sweeps", max_sweeps)
-        .load()
+    q, store = Engine(spark).ingest(
+        conf_path,
+        os.path.join(workdir, "state"),
+        os.path.join(workdir, "ckpt"),
+        sweeps_per_batch=sweeps_per_batch,
+        max_sweeps=max_sweeps,
     )
-    deduped = streaming_last_value(raw_to_opc_values(raw))
-    store = CurrentValuesStore(
-        os.path.join(workdir, "state"), backend="parquet"
-    )
-    # the bridge KNOWS its key cardinality from the conf — size the state
-    # partitioning from it instead of inheriting the batch-query default
-    # (r11: 32 partitions for 1,200 keys paid 32 state commits per batch)
-    n_keys = sum(len(s.entries) for s in parse_config_file(conf_path).servers)
-    with state_partitioning(spark, n_keys):
-        q = upsert_query(
-            deduped, store, os.path.join(workdir, "ckpt")
-        ).start()
     t0 = time.time()
     try:
         q.processAllAvailable()
@@ -299,60 +275,6 @@ def dedup_gate_lane(spark, workdir: str, rows_per_batch: int,
     return m
 
 
-def rate_lane(spark, workdir: str, rows_per_batch: int, n_keys: int,
-              provider: str | None, min_batches: int, timeout_s: float) -> dict:
-    """rate-micro-batch → OPC shape → last-value dedup state → noop sink."""
-    from opc2mongodb_spark.streaming.pipeline import streaming_last_value
-
-    if provider:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", provider
-        )
-    else:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    stream = (
-        spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rows_per_batch)
-        .option("numPartitions", 8)
-        .option("advanceMillisPerBatch", 1000)
-        .load()
-    )
-    # OPC wire shape, all Column expressions — zero Python in the per-row
-    # path. Timestamps stay ZONED: streaming watermarks reject NTZ event
-    # time (the raw_to_opc_values contract note).
-    opc = stream.select(
-        F.concat(F.lit("server_"), (F.col("value") % 3).cast("string")).alias(
-            "server"
-        ),
-        F.concat(
-            F.lit("tag."), (F.col("value") % n_keys).cast("string")
-        ).alias("tag"),
-        F.lit("double").alias("dataType"),
-        (F.col("value") % 997).cast("double").alias("doubleValue"),
-        F.lit(None).cast("boolean").alias("boolValue"),
-        F.lit(None).cast("string").alias("stringValue"),
-        F.col("timestamp").alias("sourceTimestamp"),
-        F.col("timestamp").alias("serverTimestamp"),
-        F.lit(192).alias("quality"),
-    )
-    q = (
-        streaming_last_value(opc)
-        .writeStream.format("noop")
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .start()
-    )
-    t0 = time.time()
-    try:
-        _drain(q, min_batches, timeout_s)
-        wall = time.time() - t0
-        prog = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        q.stop()
-        if provider:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    return _lane_metrics(prog, wall)
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", default=None)
@@ -362,7 +284,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from opc2mongodb_spark.session import ROCKSDB_PROVIDER, get_spark
+    from opc2mongodb_spark.session import get_spark
 
     spark = get_spark("stream_bench")
     root = tempfile.mkdtemp(prefix="stream_bench_")
@@ -403,20 +325,6 @@ def main() -> None:
             lanes[lname] = dedup_gate_lane(
                 spark, d, rpb, n_b, timeout_s=600.0
             )
-
-        min_b = 6 if args.quick else 12
-        rates = [50_000, 200_000] if not args.quick else [20_000]
-        for rate in rates:
-            for pname, provider in (
-                ("hdfs", None),
-                ("rocksdb", ROCKSDB_PROVIDER),
-            ):
-                d = os.path.join(root, f"rate_{rate}_{pname}")
-                os.makedirs(d)
-                lanes[f"lastvalue_rate{rate // 1000}k_{pname}"] = rate_lane(
-                    spark, d, rate, n_keys=5_000, provider=provider,
-                    min_batches=min_b, timeout_s=300.0,
-                )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
