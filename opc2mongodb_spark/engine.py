@@ -5,7 +5,8 @@ per-server "current values" Mongo collection (reference: OPC2MongoDB/
 README.md). The equivalent here:
 
     eng = Engine()                          # session with scale defaults
-    eng.ingest("plant.conf", "/data/state") # conf → stream → upsert store
+    # conf → stream → upsert store; the query checkpoints under /data/ckpt
+    q, store = eng.ingest("plant.conf", "/data/state", "/data/ckpt")
     eng.current_values("/data/state")       # the "collection", as a DataFrame
 
 plus everything the reference never had:

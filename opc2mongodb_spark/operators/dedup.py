@@ -1030,8 +1030,8 @@ def incremental_keep_list(
 
     Persisted-index path (r5): ``corpus_fps`` (id, fp), ``corpus_sigs``
     (id, mh0..mh{k-1}) and ``corpus_bloom`` (word, mask) may be supplied
-    precomputed — e.g. the incrementally-appended index tables
-    ``streaming.dedup_gate.CorpusIngestGate`` maintains. When given, the
+    precomputed — e.g. the index tables
+    ``streaming.dedup_gate.CorpusIngestGate`` commits per micro-batch. When given, the
     corpus *text* is never touched (``corpus`` may then be None): per-batch
     cost is the batch's own tokenization plus narrow index scans, which is
     what the 100 TB contract above actually requires. Supplying

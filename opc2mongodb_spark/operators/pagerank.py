@@ -15,10 +15,8 @@ downstream of the repeated divisions.
 Scale shape: per round ONE shuffle — the contribution groupBy on the
 destination id; out-degrees are computed once and ride the same edge join;
 the dangling mass is a 1-row broadcast crossJoin scalar; vertices re-enter
-via a left join so isolated documents keep their rank. Checkpointing is the
-caller's dial (see ``checkpoint_rounds``): short loops run as one clean AQE
-plan; long traversals truncate lineage per round, the components/lloyd
-discipline.
+via a left join so isolated documents keep their rank. The loop runs as one
+clean AQE plan, without per-round checkpoints.
 """
 
 from __future__ import annotations
@@ -35,7 +33,6 @@ def pagerank(
     id_col: str = "id",
     iters: int = 2,
     damping: float = 0.85,
-    checkpoint_rounds: bool = False,
 ) -> DataFrame:
     """``iters`` synchronous PageRank rounds from a uniform start.
 
@@ -44,15 +41,10 @@ def pagerank(
     (id_col, pr) with pr as DOUBLE; rank mass is conserved up to the
     decimal grid. Raises on ``iters < 1``.
 
-    ``checkpoint_rounds``: OFF by default — under AQE even a lazy
-    localCheckpoint materializes its upstream stages at CALL time, so
-    per-round checkpoints serialize the build (measured 9.1 s vs 3.3 s
-    end-to-end at sf0.1 for 2 rounds); a short loop's lineage is fine
-    un-truncated. Turn it on for long traversals (tens of rounds), where
-    unbounded plan depth costs more than the staged materialization, and
-    release the pinned blocks when done
-    (``operators.components.release_checkpoint`` on the returned frame).
-    Callers should checkpoint the EDGE frame themselves when it comes
+    No per-round checkpoints: under AQE even a lazy localCheckpoint
+    materializes its upstream stages at CALL time, so they serialize the
+    build (measured 9.1 s vs 3.3 s end-to-end at sf0.1 for 2 rounds); a
+    short loop's lineage is fine un-truncated. Callers should checkpoint the EDGE frame themselves when it comes
     from an expensive pipeline — it is consumed once for degrees plus
     once per round, and Spark does not reuse the exchange across those
     references (measured: the un-checkpointed LSH edge pipeline re-ran
@@ -66,8 +58,6 @@ def pagerank(
         F.count(F.lit(1)).alias("_deg")
     )
     base = v.join(outdeg, id_col, "left")
-    if checkpoint_rounds:
-        base = base.localCheckpoint(eager=False)
 
     pr = base.select(
         id_col, "_n", "_deg", (F.lit(1.0) / F.col("_n")).alias("pr")
@@ -108,6 +98,4 @@ def pagerank(
                 ).alias("pr"),
             )
         )
-        if checkpoint_rounds:
-            pr = pr.localCheckpoint(eager=False)
     return pr.select(id_col, "pr")

@@ -8,82 +8,88 @@ loop: per micro-batch, (1) exact-dedup WITHIN the batch (min-id per
 normalized-text fingerprint), (2) probe the corpus-so-far with the
 incremental gate (exact fingerprint semi-join, then MinHash-LSH band probe
 — zero corpus x corpus work, cost proportional to the batch), and
-(3) append only the keepers as a new ``ingest_batch=<id>`` partition.
+(3) commit only the keepers.
 
-Persisted corpus index (r5): the corpus side of the probe never reads
-corpus *text*. Alongside the data partitions, the gate maintains
-``_index/fps`` (id, fp), ``_index/sigs`` (id, mh0..mh{k-1}) and
-``_index/bloom`` (word, mask — a per-batch Bloom sketch of the batch's
-band buckets, bit_or-combined at probe time) as incrementally-appended
-tables: each admitted batch appends exactly its own
-``ingest_batch=<id>`` partition to each. Per-batch probe cost is the
-batch's own tokenization plus narrow index scans — O(batch), not
-O(corpus) — which is the scale contract the operator docstring promises.
+Persisted corpus index: the corpus side of the probe never reads corpus
+*text*. Beside the admitted documents (``data``) the gate keeps three
+index tables: ``fps`` (id, fp), ``sigs`` (id, mh0..mh{k-1}) and ``bloom``
+(word, mask — a per-batch Bloom sketch of the batch's band buckets,
+bit_or-combined at probe time). Per-batch probe cost is the batch's own
+tokenization plus narrow index scans — O(batch), not O(corpus) — which is
+the scale contract the operator docstring promises.
 
-Index compaction (r6): one directory per micro-batch per table decays
-into a thousands-of-files listing after a long run — the streaming
-small-file problem. Once ``compact_after`` committed per-batch dirs
-accumulate, ``compact_index`` folds them into one consolidated
-``_index/<table>_compact`` parquet dir that keeps ``ingest_batch`` as a
-regular column (so the retry-exclusion and data-batch filters are
-unchanged) plus a ``_compacted.json`` manifest of folded ids; reads union
-live per-batch dirs with the compact table, preferring the compact copy
-when a crash leaves an id in both.
+Layout and commit (the current-values store's protocol, one pointer for
+four tables):
 
-Crash consistency: data renames land BEFORE index renames, and the index
-read is restricted to batches whose data partition exists — an index row
-can never outlive (or predate) its document, so a crash between the two
-renames cannot cause false rejections. Missing index partitions (crash, or
-a corpus seeded before the index existed) are self-healed per-batch by
-``repair_index``: each missing batch's index is rebuilt from that batch's
-data partition only — O(missing batch), never O(corpus).
+    <corpus>/<table>/v=<version>/part-*.parquet   one segment; every file
+                                                  carries ``ingest_batch``
+                                                  as a regular column
+    <corpus>/_CURRENT                             JSON manifest: version,
+                                                  each table's schema and
+                                                  segments as (dir, batch
+                                                  ids), and the previous
+                                                  commit's segments
 
-The append is partition-granular and idempotent: each micro-batch owns
-exactly one ``ingest_batch`` directory per table, staged under the
-Spark-hidden ``_staging`` root and atomically renamed, so a Structured
-Streaming retry of batch N overwrites batch N's own output and nothing
-else (the same recovery contract as the reference's restart loop,
-OPC2MongoDB/Program.cs retry/reconnect). Staging lives at
-``<corpus_dir>/_staging/...``: the leading underscore keeps half-written
-files out of every Spark file listing, so a crash mid-write can never leak
-partial rows into the corpus view or corrupt partition inference (the
-``<part>._staging`` sibling naming used previously was visible to
-listings and did exactly that).
+A micro-batch writes its four segments as one new version, then ONE
+``os.replace`` of ``_CURRENT`` (``sinks._flip_pointer``, shared with the
+store) makes the batch visible in all four tables at once. A crash before
+the flip leaves nothing visible (the retry rewrites the same version); a
+crash after it leaves the whole batch visible. A retry of batch N commits
+a manifest without N's previous segments and probes with
+``ingest_batch != N``, so the retry is idempotent (the reference's
+restart loop, OPC2MongoDB/Program.cs retry/reconnect). After the flip, GC
+deletes every segment that neither this commit nor the one before it
+lists: a reader that resolved the previous pointer can still finish.
 
-Write codec (r12): the gate's data + index parquet writes use zstd —
-A/B'd against snappy on the ingest lane (``GATE_CODEC_AB_r12.json``,
-interleaved arms): per-batch time flat
-(+0.10 s p50, inside noise, total time equal-or-better) for a 41%
-smaller on-disk corpus+index (10.35→6.14 MB at 24x2k docs, 34.4→20.3 MB
-at 8x20k), identical admitted corpora. At real scale the trade only
-improves (storage + re-read bandwidth). Override via constructor
-``parquet_codec`` or conf ``spark.sparkGraft.gateParquetCodec``.
+Reads resolve ``_CURRENT`` once per call and read exactly the listed
+segment dirs with the manifest's schemas, reusing one DataFrame per table
+per commit: no listing of uncommitted dirs, no footer job. A plain
+``spark.read.parquet(corpus_dir)`` is NOT a read path: it would union the
+four tables, uncommitted segments and the previous commit's.
 
-POSIX-only rename caveat matches streaming/sinks.py.
+Index compaction: one segment per micro-batch per index table decays into a
+thousands-of-dirs read after a long run — the streaming small-file problem.
+Once ``compact_after`` committed index segments accumulate,
+``compact_index`` folds them into one segment (``ingest_batch`` kept, so the
+retry exclusion is unchanged) and commits it through the same flip.
+
+POSIX-only: the commit needs an atomic single-file ``os.replace``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from opc2mongodb_spark.operators.dedup import DEFAULT_K
+from opc2mongodb_spark.streaming.sinks import _flip_pointer, _read_pointer
+
+# Codec of the gate's segment files: an interleaved A/B against snappy on
+# the ingest lane (GATE_CODEC_AB_r12.json) measured per-batch time flat for
+# a 41% smaller corpus + index, with identical admitted corpora.
+PARQUET_CODEC = "zstd"
+
+# The micro-batch id column every segment file carries.
+_BATCH = "ingest_batch"
 
 
 class CorpusIngestGate:
     """foreachBatch target: admit new documents against the corpus-so-far.
 
-    ``corpus_dir`` holds one parquet partition per processed micro-batch
-    (``ingest_batch=<id>``) plus the ``_index/`` tables described in the
-    module docstring. ``threshold`` is the MinHash signature-agreement
-    bar for near-duplicate rejection (see incremental_keep_list).
+    ``corpus_dir`` holds the four tables and the ``_CURRENT`` manifest
+    described in the module docstring. ``threshold`` is the MinHash
+    signature-agreement bar for near-duplicate rejection (see
+    incremental_keep_list).
     """
 
     INDEX_TABLES = ("fps", "sigs", "bloom")
-    COMPACT_MANIFEST = "_compacted.json"
+    _TABLES = ("data", *INDEX_TABLES)
 
     def __init__(
         self,
@@ -93,225 +99,133 @@ class CorpusIngestGate:
         threshold: float = 0.5,
         k: int = DEFAULT_K,
         compact_after: int | None = 64,
-        parquet_codec: str = "zstd",
     ):
         self.corpus_dir = corpus_dir
         self.id_col = id_col
         self.text_col = text_col
         self.threshold = threshold
         self.k = k
-        # Codec for the gate's own parquet writes (module docstring: zstd
-        # measured time-flat at -41% bytes on the ingest lane). The conf
-        # key spark.sparkGraft.gateParquetCodec overrides when set.
-        self.parquet_codec = parquet_codec
-        # Fold per-batch index partitions into one consolidated parquet dir
-        # once this many live per-batch dirs accumulate (None disables).
-        # Without it every probe lists one directory PER MICRO-BATCH ever
-        # processed — the classic streaming small-file decay (r5 VERDICT).
+        # Fold committed index segments into one once this many accumulate
+        # (None disables). Without it every probe reads one directory PER
+        # MICRO-BATCH ever processed — the streaming small-file decay.
         self.compact_after = compact_after
         # In-flight admitted checkpoint, registered by _process_enriched so
         # process_batch's finally can release it on any failure path.
         self._admitted_ckpt: DataFrame | None = None
+        # (manifest text, manifest, table -> DataFrame) of the last commit
+        # read: reads between two commits reuse the DataFrames.
+        self._snapshot: tuple[str, dict, dict[str, DataFrame]] | None = None
 
-    # ---- layout -----------------------------------------------------------
-    def _part(self, batch_id: int) -> str:
-        return f"ingest_batch={batch_id}"
+    # ---- commit -----------------------------------------------------------
+    def _write(
+        self, version: int, frames: dict[str, DataFrame]
+    ) -> dict[str, dict]:
+        """Write each table's frame as its segment ``v=<version>`` and return
+        table -> schema. ``overwrite`` clears what a crashed attempt at this
+        version left. The writes are independent, so they run as concurrent
+        jobs: at small batches each one is mostly fixed per-job latency."""
 
-    def _index_dir(self, table: str) -> str:
-        return os.path.join(self.corpus_dir, "_index", table)
+        def write(table: str) -> tuple[str, dict]:
+            frames[table].write.mode("overwrite").option(
+                "compression", PARQUET_CODEC
+            ).parquet(os.path.join(self.corpus_dir, table, f"v={version}"))
+            return table, frames[table].schema.jsonValue()
 
-    def _compact_dir(self, table: str) -> str:
-        """Consolidated index table: one parquet dir holding the rows of
-        many folded ``ingest_batch=`` partitions, with ``ingest_batch`` as
-        a REGULAR column (exclusion/read filters keep working) and a
-        ``_compacted.json`` manifest (underscore-hidden from Spark
-        listings) recording which batch ids it holds."""
-        return self._index_dir(table) + "_compact"
+        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            return dict(pool.map(write, frames))
 
-    def _compacted_ids(self, table: str) -> set[int]:
-        path = os.path.join(self._compact_dir(table), self.COMPACT_MANIFEST)
-        if not os.path.isfile(path):
-            return set()
-        import json
-
-        with open(path) as fh:
-            return {int(b) for b in json.load(fh)}
-
-    def _index_batches(self, table: str) -> set[int]:
-        """Batch ids the index holds for ``table`` — per-batch dirs plus
-        the compacted manifest."""
-        return self._batches(self._index_dir(table)) | self._compacted_ids(
-            table
+    def _commit(
+        self, version: int, schemas: dict, segments: dict, previous: dict
+    ) -> dict:
+        return _flip_pointer(
+            self.corpus_dir,
+            {
+                "version": version,
+                "schemas": schemas,
+                "segments": segments,
+                "previous": previous,
+            },
         )
 
-    def _staging_dir(self, *parts: str) -> str:
-        return os.path.join(self.corpus_dir, "_staging", *parts)
-
-    def _batches(self, root: str) -> set[int]:
-        """ingest_batch ids present under ``root`` (by directory listing)."""
-        if not os.path.isdir(root):
-            return set()
-        out = set()
-        for e in os.listdir(root):
-            if e.startswith("ingest_batch="):
-                try:
-                    out.add(int(e.split("=", 1)[1]))
-                except ValueError:
-                    continue
-        return out
-
-    def _codec(self, spark: SparkSession) -> str:
-        """Effective parquet codec for the gate's writes (conf overrides
-        the constructor default)."""
-        conf = spark.conf.get("spark.sparkGraft.gateParquetCodec", None)
-        return conf if conf else self.parquet_codec
-
-    def _swap_in(self, df: DataFrame, root: str, batch_id: int, tag: str) -> None:
-        """Stage ``df`` under the hidden ``_staging`` root, then atomically
-        rename into ``root/ingest_batch=<batch_id>`` (replacing any previous
-        attempt's output — the retry contract)."""
-        out = os.path.join(root, self._part(batch_id))
-        tmp = self._staging_dir(tag, self._part(batch_id))
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").option(
-            "compression", self._codec(df.sparkSession)
-        ).parquet(tmp)
-        os.makedirs(root, exist_ok=True)
-        if os.path.exists(out):
-            shutil.rmtree(out)
-        os.rename(tmp, out)
+    def _gc(self, manifest: dict) -> None:
+        """Delete every segment dir that neither ``manifest`` nor the commit
+        before it lists (uncommitted leftovers included)."""
+        keep = {
+            (table, d)
+            for segments in (manifest["segments"], manifest["previous"])
+            for table, listed in segments.items()
+            for d, _ in listed
+        }
+        for table in self._TABLES:
+            root = os.path.join(self.corpus_dir, table)
+            for d in os.listdir(root) if os.path.isdir(root) else ():
+                if (table, d) not in keep:
+                    shutil.rmtree(os.path.join(root, d))
 
     # ---- reads ------------------------------------------------------------
+    def _scan(
+        self, spark: SparkSession, manifest: dict, table: str, dirs
+    ) -> DataFrame:
+        schema = StructType.fromJson(manifest["schemas"][table])
+        return spark.read.schema(schema).parquet(
+            *(os.path.join(self.corpus_dir, table, d) for d in dirs)
+        )
+
+    def _table(
+        self,
+        spark: SparkSession,
+        text: str,
+        table: str,
+        exclude_batch: int | None,
+    ) -> DataFrame:
+        """``table`` as of the commit ``text``, without ``ingest_batch`` and
+        without the rows of ``exclude_batch``."""
+        if self._snapshot is None or self._snapshot[0] != text:
+            self._snapshot = (text, json.loads(text), {})
+        _, manifest, frames = self._snapshot
+        if table not in frames:
+            dirs = [d for d, _ in manifest["segments"][table]]
+            frames[table] = self._scan(spark, manifest, table, dirs)
+        df = frames[table]
+        if exclude_batch is not None:
+            df = df.filter(F.col(_BATCH) != F.lit(exclude_batch))
+        return df.drop(_BATCH)
+
     def read_corpus(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> DataFrame | None:
-        """The admitted corpus so far (data columns only), or None if empty.
+        """The admitted corpus so far (data columns only), or None before
+        the first commit.
 
-        ``exclude_batch`` drops that ingest partition from the view — the
+        ``exclude_batch`` drops that batch's documents from the view — the
         retry path probes the corpus WITHOUT the batch's own previous
         output, otherwise a re-processed batch's documents would
-        self-reject as exact duplicates and the retry would rewrite the
-        partition empty (losing them)."""
-        if not self._batches(self.corpus_dir):
+        self-reject as exact duplicates and the retry would commit the
+        batch empty (losing them)."""
+        text = _read_pointer(self.corpus_dir)
+        if text is None:
             return None
-        df = spark.read.parquet(self.corpus_dir)
-        if exclude_batch is not None:
-            df = df.filter(F.col("ingest_batch") != F.lit(exclude_batch))
-        return df.drop("ingest_batch")
-
-    def _batch_index_frames(
-        self, data: DataFrame
-    ) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """(fps, sigs, bloom) index frames for ONE batch's documents — the
-        only place index rows are ever derived from text."""
-        from opc2mongodb_spark.functions.text import fingerprint
-        from opc2mongodb_spark.operators.bloom import bloom_sketch
-        from opc2mongodb_spark.operators.dedup import (
-            band_bloom_key,
-            minhash_band_rows,
-            minhash_signatures,
-        )
-
-        fps = data.select(
-            F.col(self.id_col), fingerprint(F.col(self.text_col)).alias("fp")
-        )
-        sigs = minhash_signatures(data, self.id_col, self.text_col, self.k)
-        bloom = bloom_sketch(
-            minhash_band_rows(sigs, self.id_col, self.k).select(
-                band_bloom_key().alias("_bkey")
-            ),
-            "_bkey",
-        )
-        return fps, sigs, bloom
-
-    def repair_index(
-        self, spark: SparkSession, exclude_batch: int | None = None
-    ) -> int:
-        """Rebuild index partitions for data batches that lack them (crash
-        between data and index renames, or a corpus seeded pre-index).
-        Cost is O(missing batches' data), never O(corpus). Returns the
-        number of (table, batch) partitions written."""
-        data_batches = self._batches(self.corpus_dir)
-        if exclude_batch is not None:
-            data_batches.discard(exclude_batch)
-        missing = {
-            t: data_batches - self._index_batches(t)
-            for t in self.INDEX_TABLES
-        }
-        repaired = 0
-        for bid in sorted(set().union(*missing.values())):
-            data = spark.read.parquet(
-                os.path.join(self.corpus_dir, self._part(bid))
-            )
-            fps, sigs, bloom = self._batch_index_frames(data)
-            for table, frame in (("fps", fps), ("sigs", sigs), ("bloom", bloom)):
-                if bid in missing[table]:
-                    self._swap_in(frame, self._index_dir(table), bid, table)
-                    repaired += 1
-        return repaired
+        return self._table(spark, text, "data", exclude_batch)
 
     def read_index(
         self, spark: SparkSession, exclude_batch: int | None = None
     ) -> tuple[DataFrame, DataFrame, DataFrame] | None:
-        """(fps, sigs, bloom_sketch) over the corpus-so-far, or None if the
-        corpus is empty. Restricted to batches whose DATA partition exists
-        (index rows never outlive their documents) and, like read_corpus,
-        excluding ``exclude_batch`` for retry idempotence. The per-batch
-        bloom sketches bit_or-combine into one broadcastable sketch."""
-        data_batches = self._batches(self.corpus_dir)
-        if exclude_batch is not None:
-            data_batches.discard(exclude_batch)
-        if not data_batches:
+        """(fps, sigs, bloom_sketch) of the committed corpus, or None before
+        the first commit; like read_corpus, without ``exclude_batch``. The
+        per-batch bloom sketches bit_or-combine into one broadcastable
+        sketch."""
+        text = _read_pointer(self.corpus_dir)
+        if text is None:
             return None
-        # A crash inside compact_index's swap window (old compact dir
-        # renamed to ._pre, staging not yet renamed in) leaves previously
-        # folded batches covered by NEITHER a live per-batch dir NOR the
-        # manifest. process_batch always repairs first, but a direct
-        # read_index caller would silently probe an incomplete index and
-        # falsely admit duplicates of folded documents — detect orphaned
-        # coverage and self-heal (O(missing batches' data)) before reading.
-        if any(
-            data_batches - self._index_batches(t) for t in self.INDEX_TABLES
-        ):
-            self.repair_index(spark, exclude_batch=exclude_batch)
+        return self._index(spark, text, exclude_batch)
 
-        def _read(table: str) -> DataFrame:
-            # Two physical layouts union into one logical table: live
-            # per-batch dirs (ids NOT in the compacted manifest — a crash
-            # between the compaction swap and dir cleanup can leave an id
-            # in both, and the compacted copy wins to avoid double rows)
-            # and the consolidated compact dir.
-            root = self._index_dir(table)
-            man = self._compacted_ids(table)
-            live = (self._batches(root) - man) & data_batches
-            parts = []
-            if live:
-                parts.append(
-                    spark.read.parquet(root).filter(
-                        F.col("ingest_batch").isin([int(b) for b in live])
-                    )
-                )
-            if man & data_batches:
-                parts.append(
-                    spark.read.parquet(self._compact_dir(table)).filter(
-                        F.col("ingest_batch").isin(
-                            [int(b) for b in data_batches]
-                        )
-                    )
-                )
-            if not parts:
-                # no index rows for any data batch: preserve the pre-compact
-                # behavior (empty frame with the table's schema)
-                parts.append(
-                    spark.read.parquet(root).filter(F.lit(False))
-                )
-            df = parts[0]
-            for p in parts[1:]:
-                df = df.unionByName(p)
-            return df.drop("ingest_batch")
-
-        fps, sigs, blooms = (_read(t) for t in self.INDEX_TABLES)
+    def _index(
+        self, spark: SparkSession, text: str, exclude_batch: int | None
+    ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        fps, sigs, blooms = (
+            self._table(spark, text, t, exclude_batch)
+            for t in self.INDEX_TABLES
+        )
         bloom = blooms.groupBy("word").agg(F.bit_or("mask").alias("mask"))
         return fps, sigs, bloom
 
@@ -321,81 +235,47 @@ class CorpusIngestGate:
         before_batch: int | None = None,
         max_batch_dirs: int | None = None,
     ) -> dict:
-        """Fold per-batch index partitions into the consolidated compact
-        dir once ``max_batch_dirs`` live per-batch dirs accumulate
-        (default: the instance's ``compact_after``). Only batches
-        ``< before_batch`` fold — the in-flight batch may still be retried
-        and must keep rewriting its own partition; older batches are
-        committed by the streaming checkpoint. When ``before_batch`` is
-        None (a standalone maintenance call), the HIGHEST present batch id
-        is excluded for the same reason: Structured Streaming only ever
-        retries the latest uncommitted batch, so folding the max id could
-        freeze a stale pre-retry copy into the manifest while the retry's
-        fresh partition gets swept as a leftover.
-
-        Crash contract (same discipline as operators/compaction.py): the
-        new compact dir is staged (manifest inside, so dir and manifest
-        swap atomically), the old dir is kept as ``._pre`` until the new
-        one is live, and folded per-batch dirs are deleted LAST. A crash
-        in the one lossy-looking window (old renamed away, new not yet in
-        place) leaves the manifest absent, so ``repair_index`` rebuilds
-        the folded batches from their still-present data partitions —
-        self-healing, never silent loss. Returns per-table stats."""
-        import json
-
+        """Fold the committed index segments of batches ``< before_batch``
+        into one new segment per index table once ``max_batch_dirs`` of
+        them accumulate (default: the instance's ``compact_after``), and
+        commit it through the same flip. The in-flight batch may still be
+        retried and must keep its own segment; older batches are committed
+        by the streaming checkpoint. When ``before_batch`` is None (a
+        standalone maintenance call), the HIGHEST committed batch id stays
+        out for the same reason: Structured Streaming only ever retries the
+        latest batch. Returns the index segment count and the number
+        folded."""
         if max_batch_dirs is None:
             max_batch_dirs = self.compact_after
+        text = _read_pointer(self.corpus_dir)
+        if text is None or max_batch_dirs is None:
+            return {"segments": 0, "folded": 0}
+        manifest = json.loads(text)
+        segments = manifest["segments"]
         if before_batch is None:
-            present = self._batches(self.corpus_dir)
-            for t in self.INDEX_TABLES:
-                present |= self._batches(self._index_dir(t))
-            before_batch = max(present) if present else 0
-        stats: dict[str, dict] = {}
-        for table in self.INDEX_TABLES:
-            root = self._index_dir(table)
-            man = self._compacted_ids(table)
-            dir_ids = self._batches(root)
-            # leftover dirs whose ids already folded (crash between swap
-            # and cleanup): compacted copy wins, drop the dir now
-            for bid in sorted(dir_ids & man):
-                shutil.rmtree(os.path.join(root, self._part(bid)))
-            live = dir_ids - man
-            todo = {b for b in live if b < before_batch}
-            # not todo: nothing foldable even when max_batch_dirs forces a
-            # fold (reading the index root with zero live dirs would fail)
-            if not todo or max_batch_dirs is None or len(todo) < max_batch_dirs:
-                stats[table] = {"dirs": len(live), "folded": 0}
-                continue
-            frames = spark.read.parquet(root).filter(
-                F.col("ingest_batch").isin([int(b) for b in todo])
-            )
-            cdir = self._compact_dir(table)
-            if man:
-                frames = frames.unionByName(spark.read.parquet(cdir))
-            staging = self._staging_dir(table + "_compact")
-            if os.path.exists(staging):
-                shutil.rmtree(staging)
-            frames.write.mode("overwrite").option(
-                "compression", self._codec(spark)
-            ).parquet(staging)
-            with open(
-                os.path.join(staging, self.COMPACT_MANIFEST), "w"
-            ) as fh:
-                json.dump(sorted(int(b) for b in man | todo), fh)
-            backup = cdir + "._pre"
-            if os.path.exists(backup):
-                shutil.rmtree(backup)
-            if os.path.exists(cdir):
-                os.rename(cdir, backup)
-            os.rename(staging, cdir)
-            if os.path.exists(backup):
-                shutil.rmtree(backup)
-            for bid in sorted(todo):
-                shutil.rmtree(
-                    os.path.join(root, self._part(bid)), ignore_errors=True
-                )
-            stats[table] = {"dirs": len(live - todo), "folded": len(todo)}
-        return stats
+            before_batch = max(b for _, ids in segments["data"] for b in ids)
+        # every commit gives the three index tables the same segment dirs
+        todo = [s for s in segments["fps"] if max(s[1]) < before_batch]
+        if not todo or len(todo) < max_batch_dirs:
+            return {"segments": len(segments["fps"]), "folded": 0}
+        version = manifest["version"] + 1
+        folded = [d for d, _ in todo]
+        schemas = self._write(
+            version,
+            {
+                t: self._scan(spark, manifest, t, folded)
+                for t in self.INDEX_TABLES
+            },
+        )
+        ids = sorted(b for _, seg_ids in todo for b in seg_ids)
+        new = dict(segments)
+        for t in self.INDEX_TABLES:
+            new[t] = [[f"v={version}", ids]] + [
+                s for s in segments[t] if s[0] not in folded
+            ]
+        schemas = {**manifest["schemas"], **schemas}
+        self._gc(self._commit(version, schemas, new, segments))
+        return {"segments": len(new["fps"]), "folded": len(todo)}
 
     # ---- the gate ---------------------------------------------------------
     # Reserved per-batch enrichment column names (dropped before the data
@@ -411,10 +291,10 @@ class CorpusIngestGate:
 
         spark = batch.sparkSession
         sig_cols = [self._sig_col(j) for j in range(self.k)]
-        # The enrichment columns are reserved names: a user batch already
-        # carrying one would be silently overwritten here and then dropped
-        # from the data write (silent column loss) — refuse loudly instead.
-        reserved = {self._FP, *sig_cols} & set(batch.columns)
+        # The enrichment columns and ingest_batch are reserved names: a user
+        # batch already carrying one would be silently overwritten here and
+        # then dropped from the view (silent column loss) — refuse loudly.
+        reserved = {self._FP, _BATCH, *sig_cols} & set(batch.columns)
         if reserved:
             raise ValueError(
                 "batch columns collide with reserved gate enrichment names: "
@@ -450,15 +330,15 @@ class CorpusIngestGate:
         ).localCheckpoint(eager=False)
         # (6) — placed as try/finally around steps (2)-(5): both per-batch
         # checkpoints are released deterministically even when a step
-        # throws (e.g. a _swap_in failure). DataFrame.unpersist is a no-op
-        # on localCheckpoint blocks and the ContextCleaner only reclaims
-        # them when the JVM Dataset happens to be GC'd — measured here: ~1
-        # resident batch-sized RDD accumulated PER MICRO-BATCH across a
-        # 12-batch run (guide §5); an exception between checkpoint creation
-        # and the old end-of-body release leaked the same way. Everything
-        # derived from them has been written by the time the finally runs
-        # on the success path; a streaming retry re-invokes process_batch
-        # with fresh frames, never with these.
+        # throws (e.g. a segment write failure). DataFrame.unpersist is a
+        # no-op on localCheckpoint blocks and the ContextCleaner only
+        # reclaims them when the JVM Dataset happens to be GC'd — measured
+        # here: ~1 resident batch-sized RDD accumulated PER MICRO-BATCH
+        # across a 12-batch run (guide §5); an exception between checkpoint
+        # creation and the old end-of-body release leaked the same way.
+        # Everything derived from them has been written by the time the
+        # finally runs on the success path; a streaming retry re-invokes
+        # process_batch with fresh frames, never with these.
         from opc2mongodb_spark.operators.components import release_checkpoint
 
         self._admitted_ckpt = None
@@ -492,15 +372,15 @@ class CorpusIngestGate:
             .select(self.id_col)
         )
         kept = enriched.join(keep_ids, self.id_col, "left_semi")
-        # (3) probe the corpus-so-far (minus this batch's own prior output,
-        # for retry idempotence) through the PERSISTED index — corpus text
-        # is never read; only 'keep' verdicts survive. Self-heal any
-        # missing index partitions first (per-batch cost). The batch side
-        # of the probe reads the checkpointed fp/sig columns.
-        self.repair_index(spark, exclude_batch=batch_id)
-        index = self.read_index(spark, exclude_batch=batch_id)
-        if index is not None:
-            fps_c, sigs_c, bloom_c = index
+        # (3) probe the committed corpus (minus this batch's own prior
+        # output, for retry idempotence) through the PERSISTED index —
+        # corpus text is never read; only 'keep' verdicts survive. The
+        # batch side of the probe reads the checkpointed fp/sig columns.
+        # The pointer is read once: the probe and the commit below see the
+        # same manifest.
+        text = _read_pointer(self.corpus_dir)
+        if text is not None:
+            fps_c, sigs_c, bloom_c = self._index(spark, text, batch_id)
             verdicts = incremental_keep_list(
                 None,
                 kept,
@@ -534,54 +414,46 @@ class CorpusIngestGate:
         # it no matter where a later step fails.
         admitted = kept.localCheckpoint(eager=False)
         self._admitted_ckpt = admitted
-        kept = admitted
-        # (4) idempotent partition-granular appends: data FIRST, then the
-        # index tables (module docstring: an index row must never exist
-        # without its document). All four frames are projections of the
-        # admitted checkpoint; only the bloom adds compute (band-stack +
-        # one small aggregation).
-        self._swap_in(
-            kept.drop(self._FP, *sig_cols), self.corpus_dir, batch_id, "data"
-        )
-        fps = kept.select(F.col(self.id_col), F.col(self._FP).alias("fp"))
-        sigs = kept.select(
+        # (4) one commit: the four segments as one new version, then the
+        # flip. All four frames are projections of the admitted checkpoint;
+        # only the bloom adds compute (band-stack + one small aggregation).
+        sigs = admitted.select(
             F.col(self.id_col),
             *[F.col(self._sig_col(j)).alias(f"mh{j}") for j in range(self.k)],
         )
-        bloom = bloom_sketch(
-            minhash_band_rows(sigs, self.id_col, self.k).select(
-                band_bloom_key().alias("_bkey")
+        frames = {
+            "data": admitted.drop(self._FP, *sig_cols),
+            "fps": admitted.select(
+                F.col(self.id_col), F.col(self._FP).alias("fp")
             ),
-            "_bkey",
+            "sigs": sigs,
+            "bloom": bloom_sketch(
+                minhash_band_rows(sigs, self.id_col, self.k).select(
+                    band_bloom_key().alias("_bkey")
+                ),
+                "_bkey",
+            ),
+        }
+        manifest = json.loads(text) if text else None
+        version = (manifest["version"] if manifest else 0) + 1
+        schemas = self._write(
+            version,
+            {
+                t: df.withColumn(_BATCH, F.lit(batch_id).cast("long"))
+                for t, df in frames.items()
+            },
         )
-        # The three index writes are INDEPENDENT projections of the same
-        # admitted checkpoint (distinct target dirs, distinct staging
-        # dirs), so they run as concurrent jobs (guide §2.6 "overlap
-        # independent jobs"): at the gate's 2k-doc batch floor each write
-        # is dominated by fixed per-job latency, not data, and the
-        # sequential form paid that latency three times. Crash contract
-        # unchanged: the data write above still lands strictly first, and
-        # a partial index failure (any subset missing) is the exact state
-        # repair_index already self-heals per batch.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futures = [
-                pool.submit(
-                    self._swap_in, frame, self._index_dir(table), batch_id,
-                    table,
-                )
-                for table, frame in (
-                    ("fps", fps), ("sigs", sigs), ("bloom", bloom),
-                )
-            ]
-            for fut in futures:
-                fut.result()
-        # (5) bounded maintenance: fold committed (< batch_id) per-batch
-        # index dirs into the compact table once enough accumulate, so
-        # probe cost never decays with micro-batch count. Step (6) — the
-        # deterministic checkpoint release — runs in process_batch's
-        # finally block.
+        previous = manifest["segments"] if manifest else {}
+        segments = {
+            t: [s for s in previous.get(t, ()) if s[1] != [batch_id]]
+            + [[f"v={version}", [batch_id]]]
+            for t in self._TABLES
+        }
+        self._gc(self._commit(version, schemas, segments, previous))
+        # (5) bounded maintenance: fold committed (< batch_id) index
+        # segments into one once enough accumulate, so probe cost never
+        # decays with micro-batch count. Step (6) — the deterministic
+        # checkpoint release — runs in process_batch's finally block.
         if self.compact_after is not None:
             self.compact_index(spark, before_batch=batch_id)
 

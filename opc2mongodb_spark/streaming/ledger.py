@@ -13,14 +13,13 @@ both batch boundaries AND row order within batches; any lost or
 duplicated row flips the count, the sum, and (with probability
 1 - 2^-64) the hash fold.
 
-Idempotence contract (same discipline as
-``streaming/dedup_gate.py::_swap_in`` and ``operators/compaction.py``):
-each batch's ledger row lives in its own ``batch=<id>`` directory,
-staged then atomically renamed, so a Structured Streaming RETRY of batch
-N overwrites N's row instead of appending a duplicate — the ledger
-stays exactly-once even when the stream is at-least-once. Driver-side
-state per batch is ONE row of scalars (the measured-aggregate class, not
-a data collect).
+Idempotence contract (the staged-write-then-rename discipline of
+``operators/compaction.py``): each batch's ledger row lives in its own
+``batch=<id>`` directory, staged then atomically renamed, so a Structured
+Streaming RETRY of batch N overwrites N's row instead of appending a
+duplicate — the ledger stays exactly-once even when the stream is
+at-least-once. Driver-side state per batch is ONE row of scalars (the
+measured-aggregate class, not a data collect).
 
 Reference parity note: the reference (OPC2MongoDB/Program.cs) has no
 delivery audit at all — a crash between the queue drain and the Mongo

@@ -37,6 +37,9 @@ at any point leaves the last commit intact. A plain
 ``spark.read.parquet(path)`` sees both retained generations (and a ``gen``
 column): read through ``CurrentValuesStore.read`` /
 ``Engine.current_values``. One writer per store (one streaming query).
+The corpus-ingest dedup gate (``streaming/dedup_gate.py``) commits each
+micro-batch's four tables through the same pointer code
+(``_read_pointer`` / ``_flip_pointer``).
 
 At scale the state store is a transactional Delta MERGE when ``delta-spark``
 is importable (``backend="auto"``). The parquet backend needs POSIX
@@ -66,6 +69,29 @@ PARQUET_CODEC = "zstd"
 # The parquet backend's commit pointer and generation directory prefix.
 CURRENT = "_CURRENT"
 GEN = "gen"
+
+
+def _read_pointer(root: str) -> str | None:
+    """The committed manifest under ``root`` as text (None before the
+    first commit)."""
+    try:
+        with open(os.path.join(root, CURRENT), encoding="utf-8") as f:
+            return f.read()
+    except FileNotFoundError:
+        return None
+
+
+def _flip_pointer(root: str, manifest: dict) -> dict:
+    """Commit ``manifest`` under ``root``: write it beside the pointer, then
+    flip ``_CURRENT`` to it with one atomic ``os.replace``. The ``commit``
+    uuid makes every manifest unique, so a reader's cache never mistakes a
+    recreated directory for the old one."""
+    manifest = {**manifest, "commit": uuid.uuid4().hex}
+    tmp = os.path.join(root, CURRENT + ".tmp")
+    with open(tmp, "w", encoding="utf-8") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, os.path.join(root, CURRENT))
+    return manifest
 
 
 def delta_available() -> bool:
@@ -174,7 +200,7 @@ class CurrentValuesStore:
         generations."""
         pcol = self.key_cols[0]
         schema = self._state_schema(batch)
-        text = self._pointer()
+        text = _read_pointer(self.path)
         manifest = json.loads(text) if text else self._adopt(schema)
         gen = (manifest["version"] if manifest else 0) + 1
         # leftovers of a crashed attempt at this generation
@@ -200,22 +226,15 @@ class CurrentValuesStore:
     def _commit(
         self, version: int, schema: StructType, servers: dict, previous: dict
     ) -> dict:
-        """Write the manifest beside the pointer, then flip the pointer with
-        one atomic ``os.replace``. ``commit`` makes every manifest unique,
-        so a reader's cache never mistakes a recreated store for the old
-        one."""
-        manifest = {
-            "version": version,
-            "commit": uuid.uuid4().hex,
-            "schema": schema.jsonValue(),
-            "servers": servers,
-            "previous": previous,
-        }
-        tmp = os.path.join(self.path, CURRENT + ".tmp")
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, os.path.join(self.path, CURRENT))
-        return manifest
+        return _flip_pointer(
+            self.path,
+            {
+                "version": version,
+                "schema": schema.jsonValue(),
+                "servers": servers,
+                "previous": previous,
+            },
+        )
 
     def _gc(self, manifest: dict) -> None:
         """Delete every generation that neither ``manifest`` nor the commit
@@ -232,13 +251,6 @@ class CurrentValuesStore:
                 gen = sub.partition(f"{GEN}=")[2]
                 if gen and (entry, int(gen)) not in keep:
                     shutil.rmtree(os.path.join(d, sub))
-
-    def _pointer(self) -> str | None:
-        try:
-            with open(os.path.join(self.path, CURRENT), encoding="utf-8") as f:
-                return f.read()
-        except FileNotFoundError:
-            return None
 
     def _server_dirs(self) -> list[str]:
         prefix = f"{self.key_cols[0]}="
@@ -287,7 +299,7 @@ class CurrentValuesStore:
         once per call. The DataFrame reads exactly the generation
         directories the manifest lists, with its schema (no footer job),
         and is reused until the pointer changes."""
-        text = self._pointer()
+        text = _read_pointer(self.path)
         if text is None:
             return None
         snap = self._snapshot  # two threads racing here build two equal frames

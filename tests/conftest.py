@@ -45,7 +45,6 @@ FULL_MATRIX_ONLY = frozenset({
     "test_engine.py::test_stream_stream_left_outer_emits_null_after_watermark",
     "test_guard_edges.py::test_dedup_gate_listing_and_read_corpus_edges",
     "test_guard_edges.py::test_engine_composed_facades",
-    "test_guard_edges.py::test_pagerank_checkpoint_rounds_path",
     "test_latedata.py::test_watermark_drops_late_rows",
     "test_opclive.py::test_live_replay_bridge_topology_end_to_end",
     "test_operators.py::test_connected_components_matches_union_find",
@@ -66,10 +65,7 @@ FULL_MATRIX_ONLY = frozenset({
     "test_scale_patterns.py::test_curate_corpus_end_to_end",
     "test_scale_patterns.py::test_watchdog_stream_alarms_once_and_rearms",
     "test_streaming.py::test_gate_compact_index_default_excludes_latest_batch",
-    "test_streaming.py::test_gate_compact_index_heals_crash_leftover_dirs",
-    "test_streaming.py::test_gate_index_compaction_crash_windows",
     "test_streaming.py::test_gate_index_compaction_preserves_verdicts",
-    "test_streaming.py::test_gate_parquet_codec_default_and_hatch",
     "test_streaming.py::test_gate_releases_per_batch_checkpoints",
     "test_streaming.py::test_session_and_sliding_smoke",
 })

@@ -1,0 +1,162 @@
+"""One commit per micro-batch for the corpus-ingest dedup gate.
+
+A micro-batch writes its four segments (data, fps, sigs, bloom) as one
+version and commits them with one ``os.replace`` of ``_CURRENT``;
+``compact_index`` commits its folded index segments the same way. These
+goldens kill both at each step of that commit: after the segment writes,
+after the manifest temp file, and after the flip. A fresh gate on the same
+directory must read the state before or the state after, never a mix, and
+replaying the killed step must give the uninterrupted gate's corpus and
+index.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+
+import pytest
+
+from opc2mongodb_spark.streaming import dedup_gate
+from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
+
+
+class Crash(Exception):
+    pass
+
+
+def _crash(*args, **kwargs):
+    raise Crash
+
+
+# kill point -> (what to break, whether the step committed before it died)
+KILL_POINTS = {
+    "after_segments_written": ("_commit", False),
+    "after_manifest_tmp_before_flip": ("os.replace", False),
+    "after_flip_before_gc": ("_gc", True),
+}
+
+
+def docs(spark, b: int):
+    """Batch ``b``: three documents; in odd batches the third is an exact
+    duplicate of the previous batch's first, so the probe must reject it."""
+    rows = [
+        (b * 10 + i, " ".join(f"w{b * 10 + i}x{j}" for j in range(12)))
+        for i in range(3)
+    ]
+    if b % 2:
+        dup = rows[0][1].replace(f"w{b * 10}", f"w{b * 10 - 10}")
+        rows[2] = (b * 10 + 2, dup)
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def view(spark, corpus_dir: str) -> dict:
+    """What a fresh gate reads: the doc ids of each table (sorted, so a
+    doubled row shows) and the batch ids of each committed segment."""
+    gate = CorpusIngestGate(corpus_dir, compact_after=None)
+    corpus = gate.read_corpus(spark)
+    fps, sigs, _ = gate.read_index(spark)
+    with open(os.path.join(corpus_dir, "_CURRENT")) as f:
+        segments = json.load(f)["segments"]
+    return {
+        "data": sorted(r.doc_id for r in corpus.select("doc_id").collect()),
+        "fps": sorted(r.doc_id for r in fps.select("doc_id").collect()),
+        "sigs": sorted(r.doc_id for r in sigs.select("doc_id").collect()),
+        "segments": {t: [ids for _, ids in s] for t, s in segments.items()},
+    }
+
+
+@pytest.fixture(scope="module")
+def reference(spark, tmp_path_factory):
+    """Corpus dirs of an uninterrupted gate and their views: after batches
+    0-1, after batch 2, and after compacting batches 0-1."""
+    root = tmp_path_factory.mktemp("gate_reference")
+    dirs = {name: str(root / name) for name in ("base", "batch", "compacted")}
+    gate = CorpusIngestGate(dirs["base"], compact_after=None)
+    for b in range(2):
+        gate.process_batch(docs(spark, b), b)
+    shutil.copytree(dirs["base"], dirs["batch"])
+    CorpusIngestGate(dirs["batch"], compact_after=None).process_batch(
+        docs(spark, 2), 2
+    )
+    shutil.copytree(dirs["batch"], dirs["compacted"])
+    CorpusIngestGate(dirs["compacted"], compact_after=None).compact_index(
+        spark, max_batch_dirs=2
+    )
+    views = {name: view(spark, d) for name, d in dirs.items()}
+    # the fixture is what the goldens claim it is
+    assert 12 not in views["base"]["data"]  # rejected by the probe
+    assert views["batch"]["data"] == views["base"]["data"] + [20, 21, 22]
+    assert views["batch"]["fps"] == views["batch"]["data"]
+    assert views["compacted"]["segments"]["fps"] == [[0, 1], [2]]
+    return dirs, views
+
+
+def kill(monkeypatch, kill_point: str, step) -> None:
+    target, _ = KILL_POINTS[kill_point]
+    with monkeypatch.context() as m:
+        if target == "os.replace":
+            m.setattr(dedup_gate.os, "replace", _crash)
+        else:
+            m.setattr(CorpusIngestGate, target, _crash)
+        with pytest.raises(Crash):
+            step()
+
+
+def assert_gc_bound(corpus_dir: str) -> None:
+    """On disk: only the segments this commit or the previous one lists."""
+    with open(os.path.join(corpus_dir, "_CURRENT")) as f:
+        manifest = json.load(f)
+    for table in CorpusIngestGate._TABLES:
+        listed = {
+            d
+            for segments in (manifest["segments"], manifest["previous"])
+            for d, _ in segments.get(table, ())
+        }
+        assert set(os.listdir(os.path.join(corpus_dir, table))) <= listed
+
+
+@pytest.mark.parametrize("kill_point", sorted(KILL_POINTS))
+def test_batch_killed_at_each_commit_step(
+    spark, tmp_path, monkeypatch, reference, kill_point
+):
+    dirs, views = reference
+    corpus = str(tmp_path / "corpus")
+    shutil.copytree(dirs["base"], corpus)
+    gate = CorpusIngestGate(corpus, compact_after=None)
+    kill(
+        monkeypatch, kill_point, lambda: gate.process_batch(docs(spark, 2), 2)
+    )
+    # all four segments of the batch were written before the kill
+    for table in CorpusIngestGate._TABLES:
+        assert os.path.isdir(os.path.join(corpus, table, "v=3"))
+    if KILL_POINTS[kill_point][0] == "os.replace":
+        assert os.path.exists(os.path.join(corpus, "_CURRENT.tmp"))
+    committed = KILL_POINTS[kill_point][1]
+    assert view(spark, corpus) == views["batch" if committed else "base"]
+
+    gate.process_batch(docs(spark, 2), 2)  # the restarted query replays it
+    assert view(spark, corpus) == views["batch"]
+    assert_gc_bound(corpus)
+
+
+@pytest.mark.parametrize("kill_point", sorted(KILL_POINTS))
+def test_compaction_killed_at_each_commit_step(
+    spark, tmp_path, monkeypatch, reference, kill_point
+):
+    dirs, views = reference
+    corpus = str(tmp_path / "corpus")
+    shutil.copytree(dirs["batch"], corpus)
+    gate = CorpusIngestGate(corpus, compact_after=None)
+    kill(
+        monkeypatch,
+        kill_point,
+        lambda: gate.compact_index(spark, max_batch_dirs=2),
+    )
+    committed = KILL_POINTS[kill_point][1]
+    assert view(spark, corpus) == views["compacted" if committed else "batch"]
+
+    gate.compact_index(spark, max_batch_dirs=2)  # the maintenance reruns
+    assert view(spark, corpus) == views["compacted"]
+    assert_gc_bound(corpus)

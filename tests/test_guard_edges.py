@@ -373,20 +373,6 @@ def test_compact_parquet_heals_crash_leftovers(spark, tmp_path):
     assert spark.read.parquet(path).count() == 1000
 
 
-def test_pagerank_checkpoint_rounds_path(spark):
-    from opc2mongodb_spark.operators.components import release_checkpoint
-    from opc2mongodb_spark.operators.pagerank import pagerank
-
-    v = spark.createDataFrame([(i,) for i in range(4)], "id int")
-    e = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (3, 0)], "src int, dst int"
-    )
-    pr = pagerank(v, e, iters=2, checkpoint_rounds=True)
-    total = pr.agg(F.sum("pr")).collect()[0][0]
-    assert total == pytest.approx(1.0, abs=1e-6)  # unit mass conserved
-    release_checkpoint(pr)
-
-
 def test_engine_composed_facades(spark, sf_dir):
     from opc2mongodb_spark.engine import Engine
 
@@ -472,9 +458,9 @@ def test_console_progress_listener_formats_events(capsys):
 
 
 def test_dedup_gate_listing_and_read_corpus_edges(spark, tmp_path):
-    """Directory-listing tolerance + read_corpus edges: a malformed
-    ingest_batch=<junk> dir is skipped (not a crash), an empty corpus reads
-    as None, and exclude_batch removes exactly the retried partition."""
+    """read_corpus edges: an empty corpus reads as None, a stray directory
+    is ignored (reads list only the manifest's segments), and exclude_batch
+    removes exactly the retried batch."""
     from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
 
     gate = CorpusIngestGate(str(tmp_path / "corpus"))
@@ -488,8 +474,8 @@ def test_dedup_gate_listing_and_read_corpus_edges(spark, tmp_path):
         spark.createDataFrame([("c", "gamma text")], "doc_id string, text string"),
         1,
     )
-    os.makedirs(os.path.join(gate.corpus_dir, "ingest_batch=junk"))
-    assert gate._batches(gate.corpus_dir) == {0, 1}  # junk dir ignored
+    for stray in ("ingest_batch=junk", os.path.join("data", "junk")):
+        os.makedirs(os.path.join(gate.corpus_dir, stray))
 
     full = gate.read_corpus(spark)
     assert {r.doc_id for r in full.select("doc_id").collect()} == {"a", "b", "c"}

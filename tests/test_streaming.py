@@ -158,16 +158,16 @@ def test_current_values_store_upsert(spark, tmp_path):
 
 
 def test_streaming_sets_no_session_conf():
-    """Source scan: nothing under streaming/ changes session-global conf.
-    The Engine shares one session between streaming queries, the gate's
-    concurrent writes and batch queries, so a conf toggle in one of them
-    leaks into the others."""
+    """Source scan: nothing under streaming/ changes session-global conf or
+    reads a ``spark.sparkGraft.`` hatch. The Engine shares one session
+    between streaming queries, the gate's concurrent writes and batch
+    queries, so a conf toggle in one of them leaks into the others."""
     import pathlib
     import re
 
     import opc2mongodb_spark.streaming as streaming
 
-    toggle = re.compile(r"\.conf\.(set|unset)\(")
+    toggle = re.compile(r"\.conf\.(set|unset)\(|spark\.sparkGraft\.")
     hits = [
         f"{path.name}:{i}"
         for path in sorted(pathlib.Path(streaming.__file__).parent.rglob("*.py"))
@@ -675,11 +675,9 @@ def test_gate_persisted_index_skips_corpus_text(spark, tmp_path, monkeypatch):
         ),
         0,
     )
-    # index tables exist, partitioned by ingest_batch
-    for table in ("fps", "sigs", "bloom"):
-        assert os.path.isdir(
-            str(tmp_path / "corpus" / "_index" / table / "ingest_batch=0")
-        )
+    # the batch committed one segment of each table
+    for table in CorpusIngestGate._TABLES:
+        assert os.path.isdir(str(tmp_path / "corpus" / table / "v=1"))
 
     calls = []
     real = dedup_mod.minhash_signatures
@@ -703,62 +701,11 @@ def test_gate_persisted_index_skips_corpus_text(spark, tmp_path, monkeypatch):
     assert ids == {1, 2, 11}  # 10 is an exact dup of doc 1 via the fp index
 
 
-def test_gate_index_self_heal(spark, tmp_path):
-    """A corpus whose index is missing (crash between data and index
-    renames, or seeded pre-index) is repaired per-batch on the next
-    process_batch — and verdicts still reject duplicates of the healed
-    batches."""
-    import shutil as sh
-
-    from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
-
-    gate = CorpusIngestGate(str(tmp_path / "corpus"))
-    gate.process_batch(
-        spark.createDataFrame(
-            [(1, "the quick brown fox jumps")], "doc_id long, text string"
-        ),
-        0,
-    )
-    gate.process_batch(
-        spark.createDataFrame(
-            [(2, "entirely different sentence body")], "doc_id long, text string"
-        ),
-        1,
-    )
-    sh.rmtree(str(tmp_path / "corpus" / "_index"))
-    gate.process_batch(
-        spark.createDataFrame(
-            [
-                (10, "the quick brown fox jumps"),  # dup of healed batch 0
-                (11, "novel words nobody wrote before"),
-            ],
-            "doc_id long, text string",
-        ),
-        2,
-    )
-    # healed partitions are back for batches 0 and 1, written for 2
-    for table in ("fps", "sigs", "bloom"):
-        for bid in (0, 1, 2):
-            assert os.path.isdir(
-                str(
-                    tmp_path
-                    / "corpus"
-                    / "_index"
-                    / table
-                    / f"ingest_batch={bid}"
-                )
-            )
-    assert {r.doc_id for r in gate.read_corpus(spark).collect()} == {1, 2, 11}
-
-
 def test_gate_staging_leftovers_invisible(spark, tmp_path):
-    """ADVICE r4: a crash mid-write must not leak staged rows into the
-    corpus view. Staging lives under the Spark-hidden _staging root, so a
-    leftover partial write is ignored by read_corpus, never corrupts
-    partition inference, and a retry of the same batch simply overwrites
-    it."""
-    from pyspark.sql import types as T
-
+    """ADVICE r4: a crash mid-write must not leak rows into the corpus view.
+    Segments a crashed attempt wrote but never committed are not in the
+    manifest, so read_corpus ignores them, and the retry of the same batch
+    overwrites them (GC clears any other leftover)."""
     from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
 
     gate = CorpusIngestGate(str(tmp_path / "corpus"))
@@ -766,17 +713,15 @@ def test_gate_staging_leftovers_invisible(spark, tmp_path):
         [(1, "a b c d e"), (2, "f g h i j")], "doc_id long, text string"
     )
     gate.process_batch(batch, 0)
-    # simulate a crashed batch-1 attempt: partial rows staged but never
-    # renamed into place
-    leftover = tmp_path / "corpus" / "_staging" / "data" / "ingest_batch=1"
-    spark.createDataFrame(
-        [(99, "partial junk row")], "doc_id long, text string"
-    ).write.parquet(str(leftover))
-    df = gate.read_corpus(spark)
-    assert {r.doc_id for r in df.collect()} == {1, 2}
-    # partition column inference untouched by the leftover
-    full = spark.read.parquet(str(tmp_path / "corpus"))
-    assert isinstance(full.schema["ingest_batch"].dataType, T.IntegerType)
+    # simulate a crashed batch-1 attempt: partial rows written as the next
+    # version, never committed, plus a stray older leftover
+    junk = spark.createDataFrame(
+        [(99, "partial junk row", 1)],
+        "doc_id long, text string, ingest_batch long",
+    )
+    for leftover in ("data/v=2", "fps/v=7"):
+        junk.write.parquet(str(tmp_path / "corpus" / leftover))
+    assert {r.doc_id for r in gate.read_corpus(spark).collect()} == {1, 2}
     # the retry overwrites the leftover and admits the batch normally
     gate.process_batch(
         spark.createDataFrame(
@@ -785,6 +730,7 @@ def test_gate_staging_leftovers_invisible(spark, tmp_path):
         1,
     )
     assert {r.doc_id for r in gate.read_corpus(spark).collect()} == {1, 2, 3}
+    assert not os.path.exists(str(tmp_path / "corpus" / "fps" / "v=7"))
 
 
 def test_stream_static_topology_enrichment(spark, tmp_path):
@@ -903,15 +849,16 @@ def test_gate_admits_null_text_documents(spark, tmp_path):
 
 
 def test_gate_rejects_reserved_column_collision(spark, tmp_path):
-    """r12 ADVICE: a batch already carrying a _gate_fp/_gate_mh{j} column
-    would be silently overwritten by the enrichment and then dropped from
-    the data write — refuse loudly instead."""
+    """r12 ADVICE: a batch already carrying a _gate_fp/_gate_mh{j} or
+    ingest_batch column would be silently overwritten by the enrichment or
+    the segment's batch id and then dropped from the view — refuse loudly
+    instead."""
     import pytest
 
     from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
 
     gate = CorpusIngestGate(str(tmp_path / "c"))
-    for col in ("_gate_fp", "_gate_mh0"):
+    for col in ("_gate_fp", "_gate_mh0", "ingest_batch"):
         batch = spark.createDataFrame(
             [(1, "alpha beta", "x")], f"doc_id long, text string, {col} string"
         )
@@ -924,7 +871,7 @@ def test_gate_rejects_reserved_column_collision(spark, tmp_path):
 def test_gate_releases_checkpoints_on_failure(spark, tmp_path, monkeypatch):
     """r12 ADVICE: the checkpoint release must run via try/finally — an
     exception between checkpoint creation and the old end-of-body release
-    (e.g. a _swap_in failure) leaked both batch-sized block-stored RDDs
+    (e.g. a segment write failure) leaked both batch-sized block-stored RDDs
     until a lucky JVM GC. After a failed process_batch the persistent-RDD
     count must be back at its pre-call level."""
     import pytest
@@ -945,7 +892,7 @@ def test_gate_releases_checkpoints_on_failure(spark, tmp_path, monkeypatch):
     def boom(*a, **k):
         raise RuntimeError("simulated write failure")
 
-    monkeypatch.setattr(gate, "_swap_in", boom)
+    monkeypatch.setattr(gate, "_write", boom)
     with pytest.raises(RuntimeError, match="simulated write failure"):
         gate.process_batch(batch, 0)
     assert n_persistent() == before
@@ -958,63 +905,34 @@ def test_gate_releases_checkpoints_on_failure(spark, tmp_path, monkeypatch):
     }
 
 
-def test_gate_parquet_codec_default_and_hatch(spark, tmp_path):
-    """r12: the gate's own parquet writes (data + all index tables +
-    compaction) default to zstd (measured time-flat at -41% bytes,
-    GATE_CODEC_AB_r12.json); the spark.sparkGraft.gateParquetCodec conf
-    hatch flips them without code changes. Spark encodes the codec in the
-    part-file name, so the written files are checkable directly."""
+def test_gate_parquet_codec_is_zstd(spark, tmp_path):
+    """r12: the gate's own parquet writes (data + all index tables) are
+    zstd (measured time-flat at -41% bytes, GATE_CODEC_AB_r12.json). Spark
+    encodes the codec in the part-file name, so the written files are
+    checkable directly."""
     import glob
 
     from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
 
-    def codecs_under(root):
-        found = set()
-        for f in glob.glob(os.path.join(root, "**", "part-*.parquet"),
-                           recursive=True):
-            if "_staging" in f:
-                continue
-            found.add(f.rsplit(".", 2)[-2])
-        return found
-
-    gate = CorpusIngestGate(str(tmp_path / "c"), compact_after=2)
-    df0 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta")], "doc_id long, text string"
+    gate = CorpusIngestGate(str(tmp_path / "c"))
+    gate.process_batch(
+        spark.createDataFrame(
+            [(1, "alpha beta gamma delta")], "doc_id long, text string"
+        ),
+        0,
     )
-    gate.process_batch(df0, 0)
-    assert codecs_under(str(tmp_path / "c")) == {"zstd"}
-
-    # the hatch flips every write path, including compaction (batches 1-3
-    # trigger a fold of batches 0-1 under compact_after=2)
-    spark.conf.set("spark.sparkGraft.gateParquetCodec", "snappy")
-    try:
-        for b, text in ((1, "one two three four"), (2, "five six seven"),
-                        (3, "eight nine ten eleven")):
-            gate.process_batch(
-                spark.createDataFrame(
-                    [(10 + b, text)], "doc_id long, text string"
-                ),
-                b,
-            )
-        assert os.path.isdir(gate._compact_dir("fps"))  # fold happened
-        assert "snappy" in codecs_under(str(tmp_path / "c"))
-        assert codecs_under(gate._compact_dir("fps")) == {"snappy"}
-    finally:
-        spark.conf.unset("spark.sparkGraft.gateParquetCodec")
-
-    # mixed-codec partitions read as one table: corpus intact
-    assert {r.doc_id for r in gate.read_corpus(spark).collect()} == {
-        1, 11, 12, 13,
-    }
+    files = glob.glob(
+        str(tmp_path / "c" / "**" / "part-*.parquet"), recursive=True
+    )
+    assert len({os.path.dirname(f) for f in files}) == 4
+    assert {f.rsplit(".", 2)[-2] for f in files} == {"zstd"}
 
 
 def test_gate_index_compaction_preserves_verdicts(spark, tmp_path):
     """r6 golden: 50 micro-batches through two gates — one compacting every
-    8 committed batches, one never — must admit IDENTICAL corpora, and the
-    compacting gate's per-batch index dir count must stay bounded by
-    compact_after + 1 instead of growing one dir per batch."""
-    import os
-
+    8 committed index segments, one never — must admit IDENTICAL corpora,
+    and the compacting gate's index segment count must stay bounded by
+    compact_after + 1 instead of growing one segment per batch."""
     from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
 
     compacting = CorpusIngestGate(str(tmp_path / "c1"), compact_after=8)
@@ -1041,78 +959,19 @@ def test_gate_index_compaction_preserves_verdicts(spark, tmp_path):
     want = sorted(r.doc_id for r in plain.read_corpus(spark).collect())
     assert got == want and len(got) > 0
 
+    folded = _gate_segments(compacting)
     for table in CorpusIngestGate.INDEX_TABLES:
-        n_dirs = len(compacting._batches(compacting._index_dir(table)))
-        assert n_dirs <= 8 + 1, (table, n_dirs)
-        assert len(plain._batches(plain._index_dir(table))) == 50
-        # folded ids + live dirs together still cover every data batch
-        assert compacting._index_batches(table) == set(range(50))
-
-    # the consolidated dir exists, carries the manifest, and repair sees
-    # nothing missing
-    assert os.path.isdir(compacting._compact_dir("fps"))
-    assert compacting.repair_index(spark) == 0
+        assert len(folded[table]) <= 8 + 1, (table, folded[table])
+        assert len(_gate_segments(plain)[table]) == 50
+        # the segments together still cover every batch, each once
+        ids = sorted(b for _, seg_ids in folded[table] for b in seg_ids)
+        assert ids == list(range(50)), (table, ids)
 
     # retry contract survives compaction: re-process the LAST batch
     # (never folded — compaction stops at before_batch) and nothing changes
     compacting.process_batch(batch_df(49), 49)
     again = sorted(r.doc_id for r in compacting.read_corpus(spark).collect())
     assert again == got
-
-
-def test_gate_index_compaction_crash_windows(spark, tmp_path):
-    """The two compaction crash windows self-heal: (a) an id left in BOTH a
-    per-batch dir and the manifest reads once (compact copy wins) and the
-    leftover dir is swept on the next compaction; (b) a vanished compact
-    dir (crash between the two renames) loses the manifest, and
-    repair_index rebuilds the folded batches from their data partitions."""
-    import os
-    import shutil
-
-    from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
-
-    gate = CorpusIngestGate(str(tmp_path / "c"), compact_after=4)
-    for b in range(6):
-        df = spark.createDataFrame(
-            [(b * 10 + i, " ".join(f"t{b}_{i}_{j}" for j in range(10)))
-             for i in range(2)],
-            "doc_id long, text string",
-        )
-        gate.process_batch(df, b)
-    man = gate._compacted_ids("fps")
-    assert man, "compaction never triggered"
-    fps, _, _ = gate.read_index(spark)
-    baseline = sorted(r.doc_id for r in fps.collect())
-
-    # (a) resurrect a folded batch's per-batch dir (simulated crash between
-    # swap and cleanup) by rebuilding it from data via repair on a copy dir:
-    bid = sorted(man)[0]
-    src = os.path.join(gate.corpus_dir, gate._part(bid))
-    dup_dir = os.path.join(gate._index_dir("fps"), gate._part(bid))
-    data = spark.read.parquet(src)
-    f, _, _ = gate._batch_index_frames(data)
-    f.write.mode("overwrite").parquet(dup_dir)
-    fps, _, _ = gate.read_index(spark)
-    assert sorted(r.doc_id for r in fps.collect()) == baseline  # no doubles
-    gate.compact_index(spark, before_batch=10**9, max_batch_dirs=0)
-    assert not os.path.exists(dup_dir)  # leftover swept
-
-    # (b) drop the compact dir entirely: manifest gone -> repair rebuilds
-    shutil.rmtree(gate._compact_dir("fps"))
-    assert gate.repair_index(spark) > 0
-    fps, _, _ = gate.read_index(spark)
-    assert sorted(r.doc_id for r in fps.collect()) == baseline
-
-    # (c) ADVICE r6: the same vanished-compact-dir crash, but the caller
-    # goes STRAIGHT to read_index without repairing first — read_index
-    # must detect the orphaned coverage (data batches in neither a live
-    # dir nor the manifest) and self-heal instead of silently probing an
-    # incomplete index. (repair in (b) rebuilt per-batch dirs, not the
-    # compact dir — re-fold first so the manifest is live again.)
-    gate.compact_index(spark, before_batch=10**9, max_batch_dirs=0)
-    shutil.rmtree(gate._compact_dir("fps"))
-    fps, _, _ = gate.read_index(spark)
-    assert sorted(r.doc_id for r in fps.collect()) == baseline
 
 
 def test_bridge_restart_resumes_without_duplicates(spark, tmp_path):
@@ -1257,11 +1116,19 @@ def test_bridge_restart_resumes_without_duplicates(spark, tmp_path):
         assert doc["stringValue"] == e.stringValue, (k, doc, e)
 
 
+def _gate_segments(gate) -> dict:
+    """table -> [segment dir, batch ids] of the gate's committed manifest."""
+    import json
+
+    with open(os.path.join(gate.corpus_dir, "_CURRENT")) as f:
+        return json.load(f)["segments"]
+
+
 def test_gate_compact_index_default_excludes_latest_batch(spark, tmp_path):
     """A standalone compact_index() call (before_batch=None) must never fold
     the HIGHEST batch id — that batch can still be retried by Structured
-    Streaming, and folding it would freeze a stale copy into the manifest
-    while the retry's fresh partition gets swept."""
+    Streaming, and folding it would freeze a stale copy into the compacted
+    segment beside the retry's fresh one."""
     from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
 
     gate = CorpusIngestGate(str(tmp_path / "c"), compact_after=None)
@@ -1273,9 +1140,8 @@ def test_gate_compact_index_default_excludes_latest_batch(spark, tmp_path):
         )
         gate.process_batch(df, b)
     gate.compact_index(spark, max_batch_dirs=1)  # standalone maintenance
-    man = gate._compacted_ids("fps")
-    assert man == {0, 1, 2}, man  # batch 3 (the retryable max) stays live
-    assert 3 in gate._batches(gate._index_dir("fps"))
+    # batch 3 (the retryable max) keeps its own segment
+    assert [ids for _, ids in _gate_segments(gate)["fps"]] == [[0, 1, 2], [3]]
     # retry of the latest batch still works and the index stays consistent
     df3 = spark.createDataFrame(
         [(30, "x3_0_" + " ".join(f"x3_0_{j}" for j in range(7))),
@@ -1283,7 +1149,7 @@ def test_gate_compact_index_default_excludes_latest_batch(spark, tmp_path):
         "doc_id long, text string",
     )
     gate.process_batch(df3, 3)
-    assert gate.repair_index(spark) == 0
+    assert [ids for _, ids in _gate_segments(gate)["fps"]] == [[0, 1, 2], [3]]
     fps, _, _ = gate.read_index(spark)
     ids = sorted(r.doc_id for r in fps.collect())
     corpus = sorted(r.doc_id for r in gate.read_corpus(spark).collect())
@@ -1572,46 +1438,3 @@ def test_tumbling_ohlc_candles(spark, tmp_path):
         t0: (5, 5.0, 9.0, 0.5, 0.5),  # late 10:55 row IS the close and low
         t0 + timedelta(hours=1): (1, 4.0, 4.0, 4.0, 4.0),
     }
-
-
-def test_gate_compact_index_heals_crash_leftover_dirs(spark, tmp_path):
-    """compact_index must sweep a half-written ._staging dir (crash during
-    the fold write) and a stale ._pre backup (crash between the two swap
-    renames) instead of failing or double-counting — the parquet-swap
-    crash-healing discipline (guard_edges pins the same for
-    compact_parquet)."""
-    import os
-    import shutil
-
-    from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
-
-    gate = CorpusIngestGate(str(tmp_path / "c"), compact_after=4)
-    for b in range(5):
-        df = spark.createDataFrame(
-            [(b * 10 + i, " ".join(f"w{b}_{i}_{j}" for j in range(10)))
-             for i in range(2)],
-            "doc_id long, text string",
-        )
-        gate.process_batch(df, b)
-    assert gate._compacted_ids("fps"), "compaction never triggered"
-    fps, _, _ = gate.read_index(spark)
-    baseline = sorted(r.doc_id for r in fps.collect())
-
-    # plant BOTH crash leftovers, then force a second fold
-    staging = gate._staging_dir("fps_compact")
-    os.makedirs(staging, exist_ok=True)
-    with open(os.path.join(staging, "junk"), "w") as fh:
-        fh.write("crashed prior fold")
-    backup = gate._compact_dir("fps") + "._pre"
-    shutil.copytree(gate._compact_dir("fps"), backup)
-
-    df = spark.createDataFrame(
-        [(900, "w900 " * 10), (901, "w901 " * 10)], "doc_id long, text string"
-    )
-    gate.process_batch(df, 5)
-    gate.compact_index(spark, before_batch=10**9, max_batch_dirs=0)
-
-    assert not os.path.exists(staging)   # half-write swept
-    assert not os.path.exists(backup)    # stale backup swept
-    fps, _, _ = gate.read_index(spark)
-    assert sorted(r.doc_id for r in fps.collect()) == baseline + [900, 901]

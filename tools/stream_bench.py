@@ -47,6 +47,7 @@ import os
 import shutil
 import sys
 import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -63,18 +64,6 @@ def _pct(sorted_vals: list[float], q: float) -> float:
         return float("nan")
     k = max(0, min(len(sorted_vals) - 1, math.ceil(q * len(sorted_vals)) - 1))
     return sorted_vals[k]
-
-
-def _drain(query, min_batches: int, timeout_s: float) -> None:
-    """Let a rate-driven query run until ``min_batches`` non-empty progress
-    entries exist (or timeout). processAllAvailable() cannot drain an
-    unbounded rate source, so this polls progress instead."""
-    t0 = time.time()
-    while time.time() - t0 < timeout_s:
-        n = sum(1 for p in query.recentProgress if p["numInputRows"] > 0)
-        if n >= min_batches:
-            return
-        time.sleep(0.25)
 
 
 def _lane_metrics(progress: list[dict], wall_s: float) -> dict:
@@ -230,17 +219,33 @@ def dedup_gate_lane(spark, workdir: str, rows_per_batch: int,
     gate = CorpusIngestGate(
         os.path.join(workdir, "corpus"), compact_after=16
     )
+    measured = threading.Event()
+
+    def feed(batch, batch_id):
+        # processAllAvailable() cannot drain the unbounded rate source, so
+        # the lane ends between batches instead: the batches after the
+        # measured ones are left unread, and stopping the query then
+        # cancels no gate job (the probe below reads a whole commit)
+        if batch_id >= n_batches:
+            measured.set()
+            return
+        gate.foreach_batch(batch, batch_id)
+
     q = (
         _doc_stream(spark, rows_per_batch)
-        .writeStream.foreachBatch(gate.foreach_batch)
+        .writeStream.foreachBatch(feed)
         .option("checkpointLocation", os.path.join(workdir, "ckpt"))
         .start()
     )
     t0 = time.time()
     try:
-        _drain(q, n_batches, timeout_s)
+        measured.wait(timeout_s)
         wall = time.time() - t0
-        prog = [json.loads(p.json) for p in q.recentProgress]
+        prog = [
+            json.loads(p.json)
+            for p in q.recentProgress
+            if p.batchId < n_batches
+        ]
     finally:
         q.stop()
     m = _lane_metrics(prog, wall)
