@@ -29,12 +29,25 @@ scale this turns late iterations from |E|-sized joins into
 At 100 TB: labels and edges are both hash-partitioned on vertex id, so each
 iteration is two co-partitioned shuffles; ``localCheckpoint`` cuts the
 lineage so the plan does not grow with iterations.
+
+Both loops (``connected_components`` and ``bfs_distances``) are planned in
+a private child session (``session._child_session``): AQE off and the
+loop's own partition width, everything else as the caller's session has
+it. The caller's session is never written, so a query planned beside a
+running loop (an HMI lookup, a streaming micro-batch, another batch query)
+keeps AQE and the session width. The child shares the SparkContext, so the
+loop's checkpoint blocks and their release are unchanged; frames cross
+between the two sessions through ``_rebind``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from opc2mongodb_spark.session import _child_session
 
 MAX_ITERATIONS = 50  # backstop only; diameter bounds real convergence
 
@@ -69,6 +82,64 @@ def release_checkpoint(df: DataFrame) -> None:
         df.unpersist()
 
 
+def _rebind(df: DataFrame, session: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a frame of ``session``: it is planned and
+    executed under ``session``'s conf. Both sessions share one
+    SparkContext, so a checkpointed frame keeps reading the same blocks
+    (and ``release_checkpoint`` on either frame frees them)."""
+    jdf = session._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        session._jsparkSession, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, session)
+
+
+def _in_loop_session(
+    edges: DataFrame,
+    inputs: DataFrame,
+    loop: Callable[[DataFrame, DataFrame, int], DataFrame],
+) -> DataFrame:
+    """The prologue both loops share: checkpoint the edge plan, size the
+    loop, run ``loop(edges, inputs, width)`` in a private loop session and
+    return its (eagerly checkpointed) result as a frame of the caller's
+    session.
+
+    The EDGE PLAN is materialized in the caller's session, with AQE on
+    (r5): the candidate pairs feeding these operators are usually an
+    expensive LSH pipeline, and running it without AQE costs ~2x (no
+    runtime coalescing) — measured 3.4 s vs 1.7 s at sf0.1. The loop needs
+    AQE off only for its OWN checkpointed frames' partitioning.
+
+    The loop's width adapts to the graph, not the session (r5): every round
+    schedules ~3 stages at this width plus a checkpoint, so a
+    few-hundred-K-edge graph on a 32-partition session would pay ~100
+    near-empty tasks per round in pure scheduling. The count reads the
+    just-materialized edge blocks (trivial); at 100 TB edge counts the
+    width clamps right back to the session's — cluster behavior
+    unchanged."""
+    spark = edges.sparkSession
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = edges.localCheckpoint(eager=True)
+    e_cnt = edges.count()
+    loop_part = max(1, min(n_part, -(-2 * e_cnt // _ROWS_PER_TASK)))
+    # Under AQE a localCheckpoint reports UnknownPartitioning (Spark 4.1),
+    # so every round's co-partitioned joins would re-shuffle both sides;
+    # and the loop's groupBy must plan at the width its hash-partitioned
+    # frames were written with, or it re-shuffles sym every round
+    # (measured 0.5 s/step at sf0.1).
+    child = _child_session(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(loop_part),
+        },
+    )
+    try:
+        out = loop(_rebind(edges, child), _rebind(inputs, child), loop_part)
+    finally:
+        release_checkpoint(edges)
+    return _rebind(out, spark)
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
@@ -85,17 +156,18 @@ def connected_components(
     neighbor-min groupBy); each ``max_iterations`` round fuses TWO steps
     behind a single convergence check (r5), so a graph of diameter d
     converges in ~d/2 driver round-trips. ``sym`` is hash-partitioned on
-    ``src`` and
-    ``labels`` on ``vid`` ONCE up front; ``localCheckpoint`` preserves that
-    partitioning (AQE is disabled for the loop — under AQE the checkpointed
-    LogicalRDD reports UnknownPartitioning and every join re-shuffles both
-    sides every round), so the frontier join and the labels join are
+    ``src`` and ``labels`` on ``vid`` ONCE up front; ``localCheckpoint``
+    preserves that partitioning (the loop is planned in a private session
+    with AQE off — under AQE the checkpointed LogicalRDD reports
+    UnknownPartitioning and every join re-shuffles both sides every
+    round), so the frontier join and the labels join are
     zero-exchange co-partitioned joins, ``shuffle_hash``-hinted so the big
     edge side is streamed, never sorted. AQE has nothing to offer inside the
     loop: the groupBy is map-side combinable (hot vertices collapse before
     the shuffle) and the joins never shuffle. One driver action per
     iteration: the convergence count_if scans every partition, which also
-    materializes the lazy checkpoint in the same job.
+    materializes the lazy checkpoint in the same job. The caller's session
+    keeps its conf throughout (module docstring).
 
     Raises ``RuntimeError`` if the propagation has not converged after
     ``max_iterations`` — partially-propagated labels are WRONG answers, never
@@ -103,43 +175,11 @@ def connected_components(
     (diameter > 50 means a path-like graph, not near-duplicate near-cliques)
     should pass a larger ``max_iterations`` explicitly.
     """
-    spark = vertices.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Materialize the EDGE PLAN while AQE is still on (r5): the candidate
-    # pairs feeding this operator are usually an expensive LSH pipeline,
-    # and running it under the loop's AQE-off window costs ~2x (no runtime
-    # coalescing) — measured 3.4 s vs 1.7 s at sf0.1. The loop itself
-    # needs AQE off only for its OWN checkpointed frames' partitioning.
-    edges = edges.select("a_id", "b_id").localCheckpoint(eager=True)
-    # Adapt the LOOP's partition width to the graph, not the session (r5):
-    # every round schedules ~3 stages at this width plus a checkpoint, so
-    # a few-hundred-K-edge graph on a 32-partition session pays ~100
-    # near-empty tasks per round in pure scheduling. The count reads the
-    # just-materialized edge blocks (trivial); at 100 TB edge counts the
-    # width clamps right back to the session's n_part — cluster behavior
-    # unchanged.
-    e_cnt = edges.count()
-    loop_part = max(1, min(n_part, -(-2 * e_cnt // _ROWS_PER_TASK)))
-    # NOTE: the AQE toggle is session-global for the duration of the loop —
-    # a query planned concurrently in the same session (another thread, a
-    # streaming micro-batch) would plan without AQE, and concurrent
-    # connected_components calls could clobber each other's restore value.
-    # Callers needing concurrency should use spark.newSession().
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # The loop's internal groupBy plans at spark.sql.shuffle.partitions;
-    # with the frames hash-partitioned at loop_part, leaving the session
-    # width in place would mis-align the neighbor-min output and force a
-    # re-shuffle of sym EVERY round (measured 0.5 s/step at sf0.1). Scope
-    # the conf to the loop exactly like the AQE toggle.
-    part_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_part))
-    try:
-        return _cc_loop(vertices, edges, id_col, max_iterations, loop_part)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", part_was)
-        release_checkpoint(edges)
+    return _in_loop_session(
+        edges.select("a_id", "b_id"),
+        vertices,
+        lambda e, v, n: _cc_loop(v, e, id_col, max_iterations, n),
+    )
 
 
 def _cc_loop(
@@ -267,27 +307,17 @@ def bfs_distances(
     |E|-sized side streams instead of re-sorting every round. Each round
     is exactly ONE |frontier-expansion|-sized shuffle; lineage is cut per
     round with an eager localCheckpoint (released once superseded), and
-    AQE is scoped off for the loop for the same checkpointed-partitioning
-    reason documented on connected_components. Rounds are bounded by
-    ``max_hops`` BY CONSTRUCTION — no convergence backstop needed; an
-    empty frontier exits early (the count doubles as the materializing
-    action). Driver state is one scalar per round; distances accumulate
-    distributed, O(|V|) rows total."""
-    spark = edges.sparkSession
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    e_cnt = edges.count()
-    loop_part = max(1, min(n_part, -(-2 * e_cnt // _ROWS_PER_TASK)))
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    part_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_part))
-    try:
-        return _bfs_loop(edges, seeds, max_hops, id_col, loop_part)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", part_was)
-        release_checkpoint(edges)
+    the loop is planned in the same kind of private AQE-off session as
+    connected_components, for the same checkpointed-partitioning reason.
+    Rounds are bounded by ``max_hops`` BY CONSTRUCTION — no convergence
+    backstop needed; an empty frontier exits early (the count doubles as
+    the materializing action). Driver state is one scalar per round;
+    distances accumulate distributed, O(|V|) rows total."""
+    return _in_loop_session(
+        edges.select("src", "dst"),
+        seeds,
+        lambda e, s, n: _bfs_loop(e, s, max_hops, id_col, n),
+    )
 
 
 def _bfs_loop(

@@ -790,18 +790,7 @@ def _prefix_pairs_core(
         df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold")
     )
     b_side = pref.alias("b")
-    # Escape hatch (r10 ADVICE): memory-constrained deployments that
-    # deliberately LOWERED the session broadcast threshold can bound the
-    # operator's forced broadcast without disabling broadcast session-wide.
-    # Unset -> the default max(session budget, 64 MiB operator cap).
-    cap_conf = df.sparkSession.conf.get(
-        "spark.sparkGraft.prefixBroadcastCap", None
-    )
-    cap = (
-        _parse_byte_conf(cap_conf)
-        if cap_conf is not None
-        else max(budget, PREFIX_BROADCAST_CAP)
-    )
+    cap = max(budget, PREFIX_BROADCAST_CAP)
     est = sz.rows * 40 + sz.tok_bytes + sz.id_bytes  # 40B/row: n+pos+pad
     if budget > 0 and est <= cap:
         b_side = F.broadcast(b_side)

@@ -541,23 +541,21 @@ def q_hard_negatives(spark, sf_dir):
     # contrastive loss, vs random negatives that are already trivially
     # separated. Scale shape: the anchor batch is the %-20 id sample
     # CAPPED at HARD_NEG_ANCHOR_CAP lowest ids (TakeOrdered — per-split
-    # partial top-k, no global window; `spark.sparkGraft.hardNegAnchorCap`
-    # is the deployment hatch, oracle pins the default) and broadcast
-    # against the spread probe scan, so the scoring is O(cap x n) across
-    # all cores — at corpus scale feed LSH/IVF bucket candidates instead
-    # of the full table, same aggregation. Both argmaxes ride ONE
+    # partial top-k, no global window; the oracle pins the same literal)
+    # and broadcast against the spread probe scan, so the scoring is
+    # O(cap x n) across all cores — at corpus scale feed LSH/IVF bucket
+    # candidates instead of the full table, same aggregation. Both
+    # argmaxes ride ONE
     # aggregation via (cos, -vec_id)-struct max — ties break to the
     # smallest vec_id, mirroring the oracle's ORDER BY. Cosines use the
     # sequential fold (bit-identical to DuckDB's list_dot_product), so
     # margins compare as raw doubles.
     from opc2mongodb_spark.functions.vectors import cosine
     from opc2mongodb_spark.plans.spread import spread
-    from opc2mongodb_spark.queries.recsys_windows import _fanout_cap_conf
 
     e = spread(_t(spark, sf_dir, "embeddings"), "vec_id").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"), "label"
     )
-    cap = _fanout_cap_conf(spark, "hardNegAnchorCap", HARD_NEG_ANCHOR_CAP)
     anchors = (
         e.filter(F.col("vec_id") % 20 == 0)
         .select(
@@ -566,7 +564,7 @@ def q_hard_negatives(spark, sf_dir):
             F.col("label").alias("a_label"),
         )
         .orderBy("a_id")
-        .limit(cap)
+        .limit(HARD_NEG_ANCHOR_CAP)
     )
     pairs = e.join(
         F.broadcast(anchors), F.col("vec_id") != F.col("a_id")

@@ -19,16 +19,6 @@ from opc2mongodb_spark.queries._core import _t, dec, register, sci9
 ITEM_COSINE_USER_CAP = 256
 
 
-def _fanout_cap_conf(spark, key: str, default: int) -> int:
-    """Deployment escape hatch for the literal fan-out caps (the
-    prefixBroadcastCap pattern, r10 ADVICE): ``spark.sparkGraft.<key>``
-    overrides the module default without a code edit. The ORACLE SQL pins
-    the default, so overriding it trades the cross-engine compare for the
-    deployment's own bound — exactly the trade a 100 TB operator makes
-    deliberately, never silently."""
-    v = spark.conf.get(f"spark.sparkGraft.{key}", None)
-    return int(v) if v is not None else default
-
 @register(
     "q_window_cume_dist",
     """
@@ -133,9 +123,7 @@ def q_item_item_cosine(spark, sf_dir):
         .select("user_id", "event_type")
         .distinct()
     )
-    return _item_item_cosine_core(
-        ui, cap=_fanout_cap_conf(spark, "itemCosineUserCap", ITEM_COSINE_USER_CAP)
-    )
+    return _item_item_cosine_core(ui)
 
 
 def _item_item_cosine_core(ui, cap: int = None):
@@ -733,12 +721,14 @@ def q_cuped_adjusted(spark, sf_dir):
 LINKPRED_PART_CAP = 64
 
 
-def _link_prediction_core(ps, cap: int = LINKPRED_PART_CAP):
+def _link_prediction_core(ps, cap: int = None):
     """Jaccard link scores from a (p, s) bipartite-edge frame — the
     q_link_prediction kernel, factored so the dense-hub cap is testable on
     synthetic frames. Degrees are TRUE degrees (uncapped); only the pair
     generator is capped, so above-bound scores degrade to lower bounds
     rather than rescaling the denominator."""
+    if cap is None:
+        cap = LINKPRED_PART_CAP
     deg = ps.groupBy("s").agg(F.count(F.lit(1)).alias("d"))
     w = Window.partitionBy("p").orderBy("s")
     ps_cap = (
@@ -825,9 +815,7 @@ def q_link_prediction(spark, sf_dir):
     ps = li.select(
         F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
     ).distinct()
-    return _link_prediction_core(
-        ps, cap=_fanout_cap_conf(spark, "linkpredPartCap", LINKPRED_PART_CAP)
-    )
+    return _link_prediction_core(ps)
 
 
 @register(
@@ -2498,8 +2486,8 @@ def q_er_match_scores(spark, sf_dir):
     # log-odds.  Scale shape: the pair join is block-keyed (the
     # q_entity_blocking audit MEASURES its fan-out first — that is the
     # point of that query) with the candidate side capped at
-    # ER_BLOCK_CAND_CAP lowest custkeys per block (conf hatch
-    # `spark.sparkGraft.erBlockCandCap`, oracle pins the literal) because
+    # ER_BLOCK_CAND_CAP lowest custkeys per block (the oracle pins the
+    # same literal) because
     # the block key space is fixed while membership grows with the data;
     # the weight table is a broadcast 1-row frame.
     # Determinism: u-probs are exact-integer ratios; each weight is
@@ -2542,13 +2530,12 @@ def q_er_match_scores(spark, sf_dir):
         wcol("name_key", True).alias("wa_name"),
         wcol("name_key", False).alias("wd_name"),
     )
-    cap = _fanout_cap_conf(spark, "erBlockCandCap", ER_BLOCK_CAND_CAP)
     cw = Window.partitionBy("c_mktsegment", "c_nationkey").orderBy(
         "c_custkey"
     )
     cand = (
         cust.withColumn("crn", F.row_number().over(cw))
-        .filter(F.col("crn") <= cap)
+        .filter(F.col("crn") <= ER_BLOCK_CAND_CAP)
         .drop("crn")
     )
     a = cust.alias("a")

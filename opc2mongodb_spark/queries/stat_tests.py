@@ -245,15 +245,13 @@ def q_knn_loo(spark, sf_dir):
     # 4-anchor sign-projection LSH bucket (the q_ann_lsh discipline —
     # bucket-bounded pair work; at corpus scale more anchor bits shrink
     # the buckets, same plan), and the candidate side is capped at
-    # KNN_LOO_CAND_CAP lowest ids per bucket (conf hatch
-    # `spark.sparkGraft.knnLooCandCap`, oracle pins the default) so the
-    # bucket self-join stays O(n x cap) when bucket sizes outgrow the
-    # fixed bit width.  The argmax rides the (cos, -vec_id) struct-max
+    # KNN_LOO_CAND_CAP lowest ids per bucket (the oracle pins the same
+    # literal) so the bucket self-join stays O(n x cap) when bucket sizes
+    # outgrow the fixed bit width.  The argmax rides the (cos, -vec_id) struct-max
     # (q_hard_negatives' tiebreak mirror of the oracle's window), and
     # per-label accuracy is exact ppb integers.
     from opc2mongodb_spark.functions.vectors import cosine
     from opc2mongodb_spark.operators.similarity import bucketize_lsh
-    from opc2mongodb_spark.queries.recsys_windows import _fanout_cap_conf
 
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v"), "label"
@@ -262,11 +260,10 @@ def q_knn_loo(spark, sf_dir):
         _t(spark, sf_dir, "embeddings"), anchor_ids=[1, 2, 3, 4]
     )
     eb = e.join(bits, "vec_id")
-    cap = _fanout_cap_conf(spark, "knnLooCandCap", KNN_LOO_CAND_CAP)
     cw = Window.partitionBy("bucket").orderBy("vec_id")
     cand = (
         eb.withColumn("crn", F.row_number().over(cw))
-        .filter(F.col("crn") <= cap)
+        .filter(F.col("crn") <= KNN_LOO_CAND_CAP)
         .drop("crn")
     )
     a = eb.select(

@@ -300,11 +300,7 @@ def q_copurchase(spark, sf_dir):
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
     )
-    from opc2mongodb_spark.queries.recsys_windows import _fanout_cap_conf
-
-    pairs_arr = _basket_pairs_arr(
-        cap=_fanout_cap_conf(spark, "copurchaseBasketCap", COPURCHASE_BASKET_CAP)
-    )
+    pairs_arr = _basket_pairs_arr()
     pairs = (
         baskets.select(F.explode(pairs_arr).alias("p"))
         .select("p.part_a", "p.part_b")

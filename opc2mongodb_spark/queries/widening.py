@@ -2423,18 +2423,16 @@ def q_winnow_overlap(spark, sf_dir):
     # |sketch|-bounded (~|text|/w rows, integer keys), never |text| — and
     # fingerprints present in more than WINNOW_HOT_FP_CAP documents are
     # EXCLUDED before the self-join (MOSS's ubiquitous-fingerprint rule;
-    # conf hatch `spark.sparkGraft.winnowHotFpCap`, oracle pins the
-    # literal): a template-family passage shared by hundreds of docs is
-    # boilerplate for q_boilerplate_ngrams to surface, not pairwise copy
-    # evidence, and its bucket is what turned this join quadratic. The
+    # the oracle pins the same literal): a template-family passage shared
+    # by hundreds of docs is boilerplate for q_boilerplate_ngrams to
+    # surface, not pairwise copy evidence, and its bucket is what turned
+    # this join quadratic. The
     # count join co-partitions with the pair join on fp — one exchange
     # key, no extra shuffle of the sketch. Exact integer counts; no
     # ORDER BY needed (full set, unordered hash compare).
     from opc2mongodb_spark.operators.dedup import winnow_sketch
-    from opc2mongodb_spark.queries.recsys_windows import _fanout_cap_conf
 
     n = spark.sparkContext.defaultParallelism
-    cap = _fanout_cap_conf(spark, "winnowHotFpCap", WINNOW_HOT_FP_CAP)
     sk = winnow_sketch(
         _t(spark, sf_dir, "documents"), "doc_id", "text", spread=n
     )
@@ -2452,7 +2450,7 @@ def q_winnow_overlap(spark, sf_dir):
     keep = (
         fp.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") <= cap)
+        .filter(F.col("c") <= WINNOW_HOT_FP_CAP)
         .select("fp")
     )
     fpk = fp.join(keep, "fp")

@@ -9,6 +9,14 @@ right default on a large multi-executor cluster reading ~100 TB:
 - Arrow enabled for any pandas-UDF path (the only sanctioned Python hot path).
 - shuffle.partitions left to AQE coalescing from a modest initial value in
   local mode; on a real cluster this would be ~2-3x total cores.
+
+The session's conf is a constant of the process: every conf write in the
+package lives in this module. The Engine shares one session between the
+bridge, the dedup gate, HMI lookups and batch queries, so an operator that
+toggled a key while it ran would leak the toggle into every query planned
+beside it. An operator that needs other planner settings plans in a child
+session of its own (``_child_session``), the way Structured Streaming runs
+each query on a clone of the session taken at start.
 """
 
 from __future__ import annotations
@@ -51,6 +59,10 @@ def build_session_conf(
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         # --- correctness-critical session semantics -------------------------
         "spark.sql.session.timeZone": "UTC",
+        # parquet TIMESTAMP(NANOS) columns scan as int64 nanos (Spark cannot
+        # read them natively); load_table converts them and refuses a
+        # session without this key.
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
         # --- adaptive execution: the 100 TB story ---------------------------
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -65,16 +77,13 @@ def build_session_conf(
         # Measured r12: q_pagerank2's two per-iteration joins convert,
         # -0.41 s median (outside noise); converted plans elsewhere are
         # neutral, non-qualifying plans are untouched by construction.
-        # SPARK_GRAFT_SHJ_THRESHOLD precondition: Spark only applies the
-        # conversion when this threshold is >= adaptive
-        # advisoryPartitionSizeInBytes (64m default) — a smaller value
-        # does not mean "tighter build bound", it silently DISABLES the
-        # SMJ->SHJ conversion entirely. To genuinely lower the per-task
-        # build bound below 64m, scale advisoryPartitionSizeInBytes down
-        # with it (extra_conf).
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": (
-            os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "128m")
-        ),
+        # Precondition: Spark only applies the conversion when this
+        # threshold is >= adaptive advisoryPartitionSizeInBytes (64m
+        # default) — a smaller value does not mean "tighter build bound",
+        # it silently DISABLES the SMJ->SHJ conversion entirely. To
+        # genuinely lower the per-task build bound below 64m, scale
+        # advisoryPartitionSizeInBytes down with it (extra_conf).
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "128m",
         "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # --- scan efficiency ------------------------------------------------
         "spark.sql.parquet.filterPushdown": "true",
@@ -86,8 +95,7 @@ def build_session_conf(
         "spark.ui.enabled": "false",
     }
     # deployment toggle: SPARK_GRAFT_STATE_STORE=rocksdb flips every
-    # stateful streaming query in the session onto the RocksDB provider
-    # (per-query override: spark.conf.set the providerClass before .start()).
+    # stateful streaming query in the session onto the RocksDB provider.
     if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "rocksdb":
         conf["spark.sql.streaming.stateStore.providerClass"] = ROCKSDB_PROVIDER
     conf.update(extra_conf or {})
@@ -114,3 +122,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _child_session(
+    spark: SparkSession, overrides: dict[str, str]
+) -> SparkSession:
+    """A new session on ``spark``'s SparkContext: every modifiable key as
+    ``spark`` has it now, then ``overrides``. ``spark`` itself is never
+    written. Sharing the SparkContext, the two sessions share checkpoint
+    blocks and the table cache; a frame crosses between them by rebinding
+    its logical plan (``operators.components._rebind``)."""
+    child = spark.newSession()
+    for key, value in {**spark.conf.getAll, **overrides}.items():
+        if spark.conf.isModifiable(key):
+            child.conf.set(key, value)
+    return child

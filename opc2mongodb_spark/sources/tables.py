@@ -4,6 +4,10 @@ At 100 TB these reads stay exactly the same API — ``spark.read.parquet`` on a
 partitioned directory — with Catalyst supplying predicate pushdown, column
 pruning and partition pruning for free. Nothing here materializes or caches:
 each query composes on a lazy scan so the optimizer sees the whole plan.
+
+Reads depend on two session keys (UTC timezone, parquet nanosAsLong) that
+``session.get_spark`` sets; ``load_table`` checks them and never writes the
+session's conf, which the Engine shares with streaming and HMI lookups.
 """
 
 from __future__ import annotations
@@ -76,22 +80,36 @@ def _nanos_timestamp_cols(path: str) -> tuple[str, ...]:
 _SCHEMA_CACHE: dict[str, object] = {}
 
 
+def _require_conf(spark: SparkSession, key: str, value: str) -> None:
+    got = spark.conf.get(key)
+    if got.lower() != value.lower():
+        raise ValueError(
+            f"load_table needs {key}={value} on the session (got {got!r}); "
+            "build it with session.get_spark or pass the key in its conf"
+        )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one catalog table.
 
     Nanosecond-timestamp columns are read as int64 (legacy nanosAsLong) and
     truncated to microseconds with integer DIV — the same truncation DuckDB
     applies when scanning TIMESTAMP_NS, so both engines see identical values.
+
+    The session must carry the two keys ``session.build_session_conf``
+    sets for this: ``spark.sql.session.timeZone=UTC`` (timestamp semantics
+    host-independent, matching the DuckDB oracle) and, for a table with
+    nanosecond columns, ``spark.sql.legacy.parquet.nanosAsLong=true``. The
+    shared session's conf is never written here: a session without them
+    gets a ``ValueError`` naming the key.
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    # timestamp semantics must be host-independent (and match the DuckDB
-    # oracle); callers may pass sessions we didn't configure, so pin here.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _require_conf(spark, "spark.sql.session.timeZone", "UTC")
     path = f"{sf_dir}/{name}.parquet"
     ns_cols = _nanos_timestamp_cols(path)
     if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        _require_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true")
     if path not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[path] = spark.read.parquet(path).schema
     df = spark.read.schema(_SCHEMA_CACHE[path]).parquet(path)

@@ -98,7 +98,7 @@ class CorpusIngestGate:
         text_col: str = "text",
         threshold: float = 0.5,
         k: int = DEFAULT_K,
-        compact_after: int | None = 64,
+        compact_after: int | None = 31,
     ):
         self.corpus_dir = corpus_dir
         self.id_col = id_col
@@ -107,7 +107,11 @@ class CorpusIngestGate:
         self.k = k
         # Fold committed index segments into one once this many accumulate
         # (None disables). Without it every probe reads one directory PER
-        # MICRO-BATCH ever processed — the streaming small-file decay.
+        # MICRO-BATCH ever processed — the streaming small-file decay. A
+        # read lists at most compact_after + 1 segment dirs per table; the
+        # default keeps that at Spark's parallelPartitionDiscovery
+        # threshold (32), above which every read's file index runs a
+        # listing job per table.
         self.compact_after = compact_after
         # In-flight admitted checkpoint, registered by _process_enriched so
         # process_batch's finally can release it on any failure path.

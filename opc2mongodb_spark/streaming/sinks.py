@@ -33,7 +33,8 @@ their old generation. After the flip, GC deletes the generations that
 neither this commit nor the one before it references. Readers resolve
 ``_CURRENT`` once and read exactly the listed directories with the
 manifest's schema, so a reader never sees a half-written merge, and a crash
-at any point leaves the last commit intact. A plain
+at any point leaves the last commit intact. A directory without
+``_CURRENT`` is an empty store. A plain
 ``spark.read.parquet(path)`` sees both retained generations (and a ``gen``
 column): read through ``CurrentValuesStore.read`` /
 ``Engine.current_values``. One writer per store (one streaming query).
@@ -143,10 +144,7 @@ class CurrentValuesStore:
             if not os.path.exists(self.path):
                 return None
             return spark.read.format("delta").load(self.path)  # pragma: no cover - delta absent here
-        df = self._current(spark)
-        if df is None and self._legacy_servers():
-            return spark.read.parquet(self.path)  # not yet adopted
-        return df
+        return self._current(spark)
 
     def merge_batch(self, batch: DataFrame) -> None:
         if self.backend == "delta":
@@ -201,7 +199,7 @@ class CurrentValuesStore:
         pcol = self.key_cols[0]
         schema = self._state_schema(batch)
         text = _read_pointer(self.path)
-        manifest = json.loads(text) if text else self._adopt(schema)
+        manifest = json.loads(text) if text else None
         gen = (manifest["version"] if manifest else 0) + 1
         # leftovers of a crashed attempt at this generation
         shutil.rmtree(os.path.join(self.path, "_temporary"), ignore_errors=True)
@@ -266,33 +264,6 @@ class CurrentValuesStore:
             for entry in self._server_dirs()
             if os.path.isdir(os.path.join(self.path, entry, f"{GEN}={gen}"))
         }
-
-    def _legacy_servers(self) -> list[str]:
-        """Server directories of a pre-manifest store that still hold their
-        files directly (``server=X/part-*``)."""
-        return [
-            entry
-            for entry in self._server_dirs()
-            if any(
-                not f.startswith(f"{GEN}=")
-                for f in os.listdir(os.path.join(self.path, entry))
-            )
-        ]
-
-    def _adopt(self, schema: StructType) -> dict | None:
-        """Move a pre-manifest store's files into generation 0 and commit
-        it with the batch's ``schema`` (the schema the old layout was read
-        with). Rerunnable: a crash part-way leaves files in both places,
-        and the next call moves the rest."""
-        for entry in self._legacy_servers():
-            d = os.path.join(self.path, entry)
-            g0 = os.path.join(d, f"{GEN}=0")
-            os.makedirs(g0, exist_ok=True)
-            for f in os.listdir(d):
-                if not f.startswith(f"{GEN}="):
-                    os.rename(os.path.join(d, f), os.path.join(g0, f))
-        adopted = self._holding(0)
-        return self._commit(0, schema, adopted, {}) if adopted else None
 
     def _current(self, spark: SparkSession) -> DataFrame | None:
         """The DataFrame of the committed generation: ``_CURRENT`` is read

@@ -185,16 +185,3 @@ def test_read_reuses_one_dataframe_per_generation(spark, tmp_path):
     assert first.columns == ["tag", "doubleValue", "serverTimestamp", "server"]
     store.merge_batch(change_only_sweep(spark, 1))
     assert store.read(spark) is not first
-
-
-def test_first_merge_adopts_a_pre_manifest_store(spark, tmp_path):
-    """A store written in the old layout (``server=X/part-*``, no manifest)
-    reads as before, and the first merge moves it into generation 0."""
-    path = str(tmp_path / "cv")
-    batches = [change_only_sweep(spark, s) for s in range(2)]
-    batches[0].write.partitionBy("server").parquet(path)
-    store = CurrentValuesStore(path, backend="parquet")
-    assert store.read(spark).count() == len(SERVERS) * TAGS
-    store.merge_batch(batches[1])
-    assert_store_matches_replay(spark, store, batches, str(tmp_path / "ledger"))
-    assert all("gen=0" in g for g in generations(store).values())

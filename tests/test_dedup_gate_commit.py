@@ -160,3 +160,35 @@ def test_compaction_killed_at_each_commit_step(
     gate.compact_index(spark, max_batch_dirs=2)  # the maintenance reruns
     assert view(spark, corpus) == views["compacted"]
     assert_gc_bound(corpus)
+
+
+def test_default_compaction_keeps_index_reads_jobless(spark, tmp_path):
+    """A read lists at most ``compact_after + 1`` segment dirs per index
+    table. With the default that stays within Spark's
+    parallelPartitionDiscovery threshold (32), so the index read builds
+    its file indexes with no Spark job; one dir more and every read runs a
+    listing job per table. The manifest lists copies of one small
+    segment, which is all the listing sees."""
+    corpus = str(tmp_path / "corpus")
+    gate = CorpusIngestGate(corpus)
+    gate.process_batch(docs(spark, 0), 0)
+    with open(os.path.join(corpus, "_CURRENT")) as f:
+        manifest = json.load(f)
+    sc = spark.sparkContext
+
+    def read_jobs(n_dirs: int) -> int:
+        segments = dict(manifest["segments"])
+        for table in CorpusIngestGate.INDEX_TABLES:
+            segments[table] = segments[table] * n_dirs
+        with open(os.path.join(corpus, "_CURRENT"), "w") as f:
+            json.dump({**manifest, "segments": segments}, f)
+        group = f"index-read-{n_dirs}"
+        sc.setJobGroup(group, "index read")
+        try:
+            CorpusIngestGate(corpus).read_index(spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert read_jobs(gate.compact_after + 1) == 0
+    assert read_jobs(gate.compact_after + 2) > 0

@@ -227,6 +227,40 @@ def test_load_table_converts_nanos_timestamps(spark, tmp_path):
     assert got[1] == t and got[2] is None
 
 
+def test_load_table_requires_the_table_conf(spark, tmp_path):
+    """load_table checks the two keys get_spark sets and never writes the
+    session: a non-UTC session and, for a table with nanosecond columns, a
+    session without nanosAsLong get a ValueError naming the key. Each
+    case runs in a child session, so the shared one is untouched."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from opc2mongodb_spark.sources.tables import load_table
+
+    ts = pa.array([datetime.datetime(2024, 1, 2)], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts}), str(tmp_path / "events.parquet"))
+    pq.write_table(pa.table({"r": [1]}), str(tmp_path / "region.parquet"))
+
+    def session(tz: str, nanos: str):
+        s = spark.newSession()
+        s.conf.set("spark.sql.session.timeZone", tz)
+        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", nanos)
+        return s
+
+    with pytest.raises(ValueError, match="spark.sql.session.timeZone"):
+        load_table(session("Asia/Tokyo", "true"), str(tmp_path), "region")
+    no_nanos = session("UTC", "false")
+    with pytest.raises(
+        ValueError, match="spark.sql.legacy.parquet.nanosAsLong"
+    ):
+        load_table(no_nanos, str(tmp_path), "events")
+    assert load_table(no_nanos, str(tmp_path), "region").count() == 1
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+
+
 def test_parse_step_accepts_bare_unit():
     from opc2mongodb_spark.operators.resample import _parse_step
 
@@ -397,19 +431,13 @@ def test_build_session_conf_env_defaults_and_layering(monkeypatch):
     assert conf["spark.sql.shuffle.partitions"] == "8"
     assert "spark.sql.streaming.stateStore.providerClass" not in conf
     # r12: the stats-gated SMJ->SHJ conversion bound ships on by default
-    # with an env hatch for deployments with smaller task memory
     assert (
         conf["spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"]
         == "128m"
     )
-    monkeypatch.setenv("SPARK_GRAFT_SHJ_THRESHOLD", "32m")
-    assert (
-        build_session_conf()[
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold"
-        ]
-        == "32m"
-    )
-    monkeypatch.delenv("SPARK_GRAFT_SHJ_THRESHOLD")
+    # the two keys load_table requires (it checks them, never sets them)
+    assert conf["spark.sql.session.timeZone"] == "UTC"
+    assert conf["spark.sql.legacy.parquet.nanosAsLong"] == "true"
 
     monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
     conf = build_session_conf(

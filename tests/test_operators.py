@@ -1967,7 +1967,9 @@ def test_r7_histogram_rank_selection_plan_shapes(spark, sf_dir):
         assert not bad, (name, bad)
 
 
-def test_setsim_broadcast_budget_reads_session_conf(spark, sf_dir):
+def test_setsim_broadcast_budget_reads_session_conf(
+    spark, sf_dir, monkeypatch
+):
     """ADVICE r6 + r10 cap: the setsim candidate-join broadcast gate
     measures token BYTES (octet_length). A session that DISABLED
     broadcasting (<= 0) is honored — no forced broadcast, identical
@@ -2020,20 +2022,25 @@ def test_setsim_broadcast_budget_reads_session_conf(spark, sf_dir):
         spark.conf.set(key, orig)
     assert rows_low == rows_on
 
-    # r11 escape hatch (r10 ADVICE): spark.sparkGraft.prefixBroadcastCap
-    # bounds the FORCED broadcast for memory-constrained deployments — a
-    # 1-byte cap with a lowered session threshold must drop the forced
+    # the cap is PREFIX_BROADCAST_CAP itself, read when the join is built:
+    # a 1-byte cap with a lowered session threshold must drop the forced
     # hint (sort-merge plan), still with identical results
-    hatch = "spark.sparkGraft.prefixBroadcastCap"
+    import opc2mongodb_spark.operators.dedup as dedup
+
     try:
         spark.conf.set(key, "1b")
-        spark.conf.set(hatch, "1b")
-        capped = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.6)
-        assert "BroadcastHashJoin" not in explain_str(capped)
-        rows_capped = sorted((r.a_id, r.b_id) for r in capped.collect())
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "PREFIX_BROADCAST_CAP", 1)
+            capped = prefix_filter_pairs(
+                docs, "doc_id", "text", threshold=0.6
+            )
+            assert "BroadcastHashJoin" not in explain_str(capped)
+            rows_capped = sorted((r.a_id, r.b_id) for r in capped.collect())
+        # the literal restores the forced broadcast
+        restored = prefix_filter_pairs(docs, "doc_id", "text", threshold=0.6)
+        assert "BroadcastHashJoin" in explain_str(restored)
     finally:
         spark.conf.set(key, orig)
-        spark.conf.unset(hatch)
     assert rows_capped == rows_on
 
 
@@ -3048,39 +3055,38 @@ def test_copurchase_mega_basket_cap(spark):
     assert m and int(m.group(1)) == cap
 
 
-def test_fanout_cap_conf_escape_hatch(spark, sf_dir):
-    """r12: the three fan-out caps take a spark.sparkGraft.* conf override
-    (the prefixBroadcastCap pattern) — cap=1 collapses every pair
-    generator to zero pairs, and unsetting restores the default build."""
-    from opc2mongodb_spark.queries import REGISTRY
+def test_fanout_caps_collapse_and_restore(spark, sf_dir, monkeypatch):
+    """r12: the three fan-out caps are module literals read when the query
+    is built — cap=1 collapses every pair generator to zero pairs, and
+    the literal restores the default build."""
+    from opc2mongodb_spark.queries import REGISTRY, recsys_windows
+    from opc2mongodb_spark.queries import telemetry_linalg
 
     cases = {
-        "q_item_item_cosine": "spark.sparkGraft.itemCosineUserCap",
-        "q_link_prediction": "spark.sparkGraft.linkpredPartCap",
-        "q_copurchase": "spark.sparkGraft.copurchaseBasketCap",
+        "q_item_item_cosine": (recsys_windows, "ITEM_COSINE_USER_CAP"),
+        "q_link_prediction": (recsys_windows, "LINKPRED_PART_CAP"),
+        "q_copurchase": (telemetry_linalg, "COPURCHASE_BASKET_CAP"),
     }
-    for name, key in cases.items():
+    for name, (module, const) in cases.items():
         baseline = REGISTRY[name].build(spark, sf_dir).count()
         assert baseline > 0, name
-        spark.conf.set(key, "1")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(module, const, 1)
             assert REGISTRY[name].build(spark, sf_dir).count() == 0, name
-        finally:
-            spark.conf.unset(key)
         assert REGISTRY[name].build(spark, sf_dir).count() == baseline, name
 
 
-def test_hard_negatives_anchor_cap(spark, sf_dir):
+def test_hard_negatives_anchor_cap(spark, sf_dir, monkeypatch):
     """r12 scale rotation's first cohort-0 find: q_hard_negatives' %-20
     anchor sample grew WITH the corpus, making the broadcast scoring
     O(n^2/20) — ~100x time for 10x output at sf1, slope-flagged. The
     anchor batch is now bounded at HARD_NEG_ANCHOR_CAP lowest ids
-    (TakeOrdered, no global window): the conf hatch collapses it to the
-    single lowest anchor, unsetting restores the default build, and the
-    oracle SQL pins the same literal."""
+    (TakeOrdered, no global window): cap=1 collapses it to the single
+    lowest anchor, the literal restores the default build, and the oracle
+    SQL pins the same literal."""
     import re
 
-    from opc2mongodb_spark.queries import REGISTRY
+    from opc2mongodb_spark.queries import REGISTRY, privacy_drift
     from opc2mongodb_spark.queries.privacy_drift import HARD_NEG_ANCHOR_CAP
 
     m = re.search(
@@ -3092,26 +3098,24 @@ def test_hard_negatives_anchor_cap(spark, sf_dir):
     # sf0.001 has 3 %-20 anchors — far under the cap, so the cap is a
     # no-op at oracle SFs (the oracle MATCH proves exactness separately)
     assert 0 < baseline <= HARD_NEG_ANCHOR_CAP
-    spark.conf.set("spark.sparkGraft.hardNegAnchorCap", "1")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(privacy_drift, "HARD_NEG_ANCHOR_CAP", 1)
         rows = REGISTRY["q_hard_negatives"].build(spark, sf_dir).collect()
         assert len(rows) == 1 and rows[0].a_id == 0  # lowest anchor id
-    finally:
-        spark.conf.unset("spark.sparkGraft.hardNegAnchorCap")
     assert (
         REGISTRY["q_hard_negatives"].build(spark, sf_dir).count() == baseline
     )
 
 
-def test_knn_loo_candidate_cap(spark, sf_dir):
+def test_knn_loo_candidate_cap(spark, sf_dir, monkeypatch):
     """r12: q_knn_loo's bucket self-join is bounded on the candidate side
     at KNN_LOO_CAND_CAP lowest ids per bucket (O(n x cap), not O(n^2/16)
-    when bucket sizes outgrow the fixed 4-bit width). The conf hatch
-    shrinks scoring work, unsetting restores the default build, and the
-    oracle SQL pins the same literal."""
+    when bucket sizes outgrow the fixed 4-bit width). cap=1 shrinks
+    scoring work, the literal restores the default build, and the oracle
+    SQL pins the same literal."""
     import re
 
-    from opc2mongodb_spark.queries import REGISTRY
+    from opc2mongodb_spark.queries import REGISTRY, stat_tests
     from opc2mongodb_spark.queries.stat_tests import KNN_LOO_CAND_CAP
 
     m = re.search(r"crn <= (\d+)", REGISTRY["q_knn_loo"].oracle)
@@ -3122,8 +3126,8 @@ def test_knn_loo_candidate_cap(spark, sf_dir):
         for r in REGISTRY["q_knn_loo"].build(spark, sf_dir).collect()
     }
     assert base and all(n > 0 for n, _ in base.values())
-    spark.conf.set("spark.sparkGraft.knnLooCandCap", "1")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(stat_tests, "KNN_LOO_CAND_CAP", 1)
         capped = {
             r.label: r.n_scored
             for r in REGISTRY["q_knn_loo"].build(spark, sf_dir).collect()
@@ -3131,8 +3135,6 @@ def test_knn_loo_candidate_cap(spark, sf_dir):
         # one candidate per bucket: bucket-lowest vectors lose their only
         # partner, so strictly fewer vectors get scored than uncapped
         assert sum(capped.values()) < sum(n for n, _ in base.values())
-    finally:
-        spark.conf.unset("spark.sparkGraft.knnLooCandCap")
     after = {
         r.label: (r.n_scored, r.n_match)
         for r in REGISTRY["q_knn_loo"].build(spark, sf_dir).collect()
@@ -3140,16 +3142,16 @@ def test_knn_loo_candidate_cap(spark, sf_dir):
     assert after == base
 
 
-def test_er_match_scores_block_candidate_cap(spark, sf_dir):
+def test_er_match_scores_block_candidate_cap(spark, sf_dir, monkeypatch):
     """r12 cohort-1 scale rotation find: q_er_match_scores' (segment,
     nation) blocking keys are a FIXED 125-block space, so block self-join
     pairs grew quadratically with flat output (33.5x time for 1.0x at
     sf1). The candidate side is now capped at ER_BLOCK_CAND_CAP lowest
-    custkeys per block; conf hatch shrinks the pair count, unsetting
+    custkeys per block; cap=1 shrinks the pair count, the literal
     restores the default build, oracle SQL pins the same literal."""
     import re
 
-    from opc2mongodb_spark.queries import REGISTRY
+    from opc2mongodb_spark.queries import REGISTRY, recsys_windows
     from opc2mongodb_spark.queries.recsys_windows import ER_BLOCK_CAND_CAP
 
     m = re.search(r"crn <= (\d+)", REGISTRY["q_er_match_scores"].oracle)
@@ -3157,8 +3159,8 @@ def test_er_match_scores_block_candidate_cap(spark, sf_dir):
 
     base = REGISTRY["q_er_match_scores"].build(spark, sf_dir).collect()[0]
     assert base.n_pairs > 0
-    spark.conf.set("spark.sparkGraft.erBlockCandCap", "1")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(recsys_windows, "ER_BLOCK_CAND_CAP", 1)
         capped = (
             REGISTRY["q_er_match_scores"].build(spark, sf_dir).collect()[0]
         )
@@ -3166,22 +3168,20 @@ def test_er_match_scores_block_candidate_cap(spark, sf_dir):
         # LOWEST custkey, and a.custkey < b.custkey means no a-row sits
         # below it — every block contributes zero pairs
         assert capped.n_pairs == 0
-    finally:
-        spark.conf.unset("spark.sparkGraft.erBlockCandCap")
     after = REGISTRY["q_er_match_scores"].build(spark, sf_dir).collect()[0]
     assert after == base
 
 
-def test_winnow_overlap_hot_fingerprint_cap(spark, sf_dir):
+def test_winnow_overlap_hot_fingerprint_cap(spark, sf_dir, monkeypatch):
     """r12 cohort-3 scale rotation find: q_winnow_overlap's fingerprint
     self-join had no ubiquity bound, so template-family fingerprints
     shared by hundreds of docs made it quadratic (345 s at sf0.1).
     Fingerprints in more than WINNOW_HOT_FP_CAP docs are excluded (MOSS's
     rule); cap=1 keeps only single-doc fingerprints — zero pairs — and
-    unsetting restores the default build; oracle pins the literal."""
+    the literal restores the default build; oracle pins the literal."""
     import re
 
-    from opc2mongodb_spark.queries import REGISTRY
+    from opc2mongodb_spark.queries import REGISTRY, widening
     from opc2mongodb_spark.queries.widening import WINNOW_HOT_FP_CAP
 
     m = re.search(r"cnt\.c <= (\d+)", REGISTRY["q_winnow_overlap"].oracle)
@@ -3189,11 +3189,9 @@ def test_winnow_overlap_hot_fingerprint_cap(spark, sf_dir):
 
     base = REGISTRY["q_winnow_overlap"].build(spark, sf_dir).count()
     assert base > 0
-    spark.conf.set("spark.sparkGraft.winnowHotFpCap", "1")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(widening, "WINNOW_HOT_FP_CAP", 1)
         assert REGISTRY["q_winnow_overlap"].build(spark, sf_dir).count() == 0
-    finally:
-        spark.conf.unset("spark.sparkGraft.winnowHotFpCap")
     assert REGISTRY["q_winnow_overlap"].build(spark, sf_dir).count() == base
 
 

@@ -609,6 +609,53 @@ def test_connected_components_releases_checkpoint_blocks(spark):
     assert persisted_ids() - baseline == set()
 
 
+@pytest.mark.parametrize("loop", ["_cc_loop", "_bfs_loop"])
+def test_loops_leave_the_caller_session_conf_alone(spark, monkeypatch, loop):
+    """connected_components and bfs_distances plan their loops in a private
+    session. While the loop body runs, the caller's session still reads
+    AQE on and its own shuffle width, and a query planned there is
+    adaptive; the loop's own frames plan with AQE off. The result comes
+    back as a frame of the caller's session."""
+    from opc2mongodb_spark.operators import components
+    from opc2mongodb_spark.plans.checks import explain_str
+
+    aqe = "spark.sql.adaptive.enabled"
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    assert spark.conf.get(aqe) == "true"
+    real = getattr(components, loop)
+    ran = []
+
+    def spy(frame, *args):
+        assert spark.conf.get(aqe) == "true"
+        assert spark.conf.get("spark.sql.shuffle.partitions") == width
+        beside = spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+        assert "AdaptiveSparkPlan" in explain_str(beside)
+        assert frame.sparkSession.conf.get(aqe) == "false"
+        ran.append(loop)
+        return real(frame, *args)
+
+    monkeypatch.setattr(components, loop, spy)
+    edges = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "a long, b long")
+    if loop == "_cc_loop":
+        verts = spark.createDataFrame([(i,) for i in range(8)], "id long")
+        out = components.connected_components(
+            verts, edges.toDF("a_id", "b_id")
+        )
+        got = {(r.id, r.cluster_id) for r in out.collect()}
+        assert got == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 4), (5, 5),
+                       (6, 5), (7, 7)}
+    else:
+        seeds = spark.createDataFrame([(0,)], "node long")
+        out = components.bfs_distances(
+            edges.toDF("src", "dst"), seeds, max_hops=5, id_col="node"
+        )
+        assert {tuple(r) for r in out.collect()} == {(0, 0), (1, 1), (2, 2)}
+    assert ran == [loop]
+    assert out.sparkSession is spark
+    assert spark.conf.get(aqe) == "true"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == width
+
+
 def test_training_shard_write_is_balanced_and_replayable(spark, sf_dir, tmp_path):
     """write_training_shards: every row lands in exactly one shard, shard
     sizes are near-uniform (md5 assignment), within-shard file order is the
