@@ -177,6 +177,53 @@ def _bench_lloyd(spark, sf_dir: str) -> None:
     release_checkpoint(assign)
 
 
+# 5 runs, MEDIAN primary (r7): SCALING.md's variance attribution pinned
+# the big spreads to the sandbox's memory subsystem (a same-plan
+# memory-bound control swings ~5x run-to-run while an ALU-bound one is
+# flat) — a median over 5 is robust to one slow-memory iteration, so the
+# frozen-CORE round-over-round contract can distinguish a real regression
+# from noise. best + spread stay recorded alongside.
+N_RUNS = 5
+
+
+def _run(spark, sf_dir: str, name: str) -> None:
+    """One forced run of a bench entry: ``lloyd3`` or a registry query.
+    build() runs INSIDE the timer: iterative operators (connected
+    components) materialize eagerly during build, so timing only the final
+    write would read their cached result in ~0.02 s and hide the real
+    iterative cost. Steady-state build is cheap (~0.05-0.2 s, py4j plan
+    construction only): sources/tables.py caches the inferred schema per
+    path, so build runs no schema-inference job (the r3 "8-query drift")."""
+    if name == "lloyd3":
+        _bench_lloyd(spark, sf_dir)
+        return
+    from opc2mongodb_spark.queries import REGISTRY
+
+    REGISTRY[name].build(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
+
+
+def _timed(spark, sf_dir: str, name: str) -> dict[str, float]:
+    """Time ``N_RUNS`` runs of ``name``: the median (primary), the best,
+    the spread (max - min: a delta smaller than it is noise, not
+    regression) and the midspread (2nd..4th of the sorted runs: the ROBUST
+    dispersion — max-min can swing ~5x on one bad iteration, so the
+    regression contract reads median +/- midspread)."""
+    runs: list[float] = []
+    for _ in range(N_RUNS):
+        t0 = time.perf_counter()
+        _run(spark, sf_dir, name)
+        runs.append(time.perf_counter() - t0)
+    runs.sort()
+    return {
+        "median": round(runs[len(runs) // 2], 3),
+        "best": round(runs[0], 3),
+        "spread": round(runs[-1] - runs[0], 3),
+        "midspread": round(runs[3] - runs[1], 3),
+    }
+
+
 # The driver-LOOP operators whose medians have flagged as "regressions"
 # twice (r9, r10) and were both times attributed to sandbox memory-subsystem
 # drift by ad-hoc probes. The solo control makes that attribution a
@@ -192,29 +239,14 @@ def _solo_main(name: str) -> None:
     operator 5x and print a single JSON line for the parent to collect."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from opc2mongodb_spark.queries import REGISTRY
     from opc2mongodb_spark.session import get_spark
 
     spark = get_spark(app_name=f"bench_solo_{name}")
     spark.range(1_000_000).selectExpr("sum(id)").write.format("noop").mode(
         "overwrite"
     ).save()
-    runs: list[float] = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        if name == "lloyd3":
-            _bench_lloyd(spark, sf_dir)
-        else:
-            REGISTRY[name].build(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-        runs.append(time.perf_counter() - t0)
-    runs.sort()
-    print(json.dumps({
-        "median": round(runs[2], 3),
-        "best": round(runs[0], 3),
-        "midspread": round(runs[3] - runs[1], 3),
-    }))
+    stats = _timed(spark, sf_dir, name)
+    print(json.dumps({k: stats[k] for k in ("median", "best", "midspread")}))
 
 
 def solo_controls() -> dict[str, dict]:
@@ -242,7 +274,6 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from opc2mongodb_spark.queries import REGISTRY
     from opc2mongodb_spark.session import get_spark
 
     spark = get_spark(app_name="bench")
@@ -252,59 +283,10 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    timings: dict[str, float] = {}
-    bests: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-    midspreads: dict[str, float] = {}
-    # 5 runs, MEDIAN primary (r7): SCALING.md's variance attribution pinned
-    # the big spreads to the sandbox's memory subsystem (a same-plan
-    # memory-bound control swings ~5x run-to-run while an ALU-bound one is
-    # flat) — a median over 5 is robust to one slow-memory iteration, so
-    # the frozen-CORE round-over-round contract can distinguish a real
-    # regression from noise. best + spread stay recorded alongside.
-    N_RUNS = 5
-    for name in HEADLINE:
-        runs: list[float] = []
-        for _ in range(N_RUNS):
-            # build() runs INSIDE the timer: iterative operators (connected
-            # components) materialize eagerly during build, so timing only
-            # the final write would read their cached result in ~0.02 s and
-            # hide the real iterative cost. NOTE (r4): this is what caused
-            # the r3 "8-query drift" vs r2 — build() was NOT sub-ms because
-            # load_table ran parquet schema inference (a driver job) on
-            # every call. sources/tables.py now caches the inferred schema
-            # per path, so steady-state build really is cheap (~0.05-0.2s,
-            # py4j plan construction only) and the timings are comparable
-            # round-over-round.
-            t0 = time.perf_counter()
-            df = REGISTRY[name].build(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - t0)
-        runs.sort()
-        timings[name] = round(runs[len(runs) // 2], 3)  # median
-        bests[name] = round(runs[0], 3)
-        # per-query spread (max - min): lets a reader separate real plan
-        # drift from sandbox noise without re-running — a delta smaller
-        # than the recorded spread is noise, not regression.
-        spreads[name] = round(runs[-1] - runs[0], 3)
-        # midspread (2nd..4th of the 5 sorted runs): the ROBUST dispersion
-        # — SCALING.md's memory-contention attribution shows max-min can
-        # swing ~5x on one bad iteration, so the regression contract
-        # reads median +/- midspread, not max-min.
-        midspreads[name] = round(runs[3] - runs[1], 3)
-
-    # non-registry entries: operators whose cost is a driver LOOP, not one
-    # declarative plan (the registry/oracle gate can't express them).
-    runs = []
-    for _ in range(N_RUNS):
-        t0 = time.perf_counter()
-        _bench_lloyd(spark, sf_dir)
-        runs.append(time.perf_counter() - t0)
-    runs.sort()
-    timings["lloyd3"] = round(runs[len(runs) // 2], 3)
-    bests["lloyd3"] = round(runs[0], 3)
-    spreads["lloyd3"] = round(runs[-1] - runs[0], 3)
-    midspreads["lloyd3"] = round(runs[3] - runs[1], 3)
+    # non-registry entries (lloyd3): operators whose cost is a driver LOOP,
+    # not one declarative plan (the registry/oracle gate can't express them).
+    stats = {name: _timed(spark, sf_dir, name) for name in [*HEADLINE, "lloyd3"]}
+    timings = {name: s["median"] for name, s in stats.items()}
 
     # fixed-heap solo control (r10 VERDICT #6): fresh-JVM, pinned-heap
     # medians for the driver-loop operators — the compare's variance anchor.
@@ -330,6 +312,7 @@ def main() -> None:
     # THE round-over-round comparable) and EXTENDED (everything added
     # since, incl. lloyd3). total == core_sec + extended_sec.
     core_sec = round(sum(timings[n] for n in CORE), 3)
+    midspreads = {name: s["midspread"] for name, s in stats.items()}
     noisy = noise_verdict(CORE, timings, midspreads)
     detail = {
         "metric": "headline suite wall time (median-of-5 per query)",
@@ -340,8 +323,8 @@ def main() -> None:
         "noisy": noisy,
         "core_queries": CORE,
         "queries": timings,
-        "best": bests,
-        "spread": spreads,
+        "best": {name: s["best"] for name, s in stats.items()},
+        "spread": {name: s["spread"] for name, s in stats.items()},
         "midspread": midspreads,
         "solo_control": solo,
         "solo_control_heap": SOLO_HEAP,

@@ -18,32 +18,20 @@ bit_or-combined at probe time). Per-batch probe cost is the batch's own
 tokenization plus narrow index scans — O(batch), not O(corpus) — which is
 the scale contract the operator docstring promises.
 
-Layout and commit (the current-values store's protocol, one pointer for
-four tables):
+Layout and commit: the snapshot protocol of ``streaming/sinks.py``, one
+pointer for four tables:
 
     <corpus>/<table>/v=<version>/part-*.parquet   one segment; every file
                                                   carries ``ingest_batch``
                                                   as a regular column
-    <corpus>/_CURRENT                             JSON manifest: version,
-                                                  each table's schema and
-                                                  segments as (dir, batch
-                                                  ids), and the previous
-                                                  commit's segments
+    <corpus>/_CURRENT                             the manifest; a segment's
+                                                  meta is its batch ids
 
-A micro-batch writes its four segments as one new version, then ONE
-``os.replace`` of ``_CURRENT`` (``sinks._flip_pointer``, shared with the
-store) makes the batch visible in all four tables at once. A crash before
-the flip leaves nothing visible (the retry rewrites the same version); a
-crash after it leaves the whole batch visible. A retry of batch N commits
-a manifest without N's previous segments and probes with
+A micro-batch writes its four segments as one new version and one commit
+makes the batch visible in all four tables at once. A retry of batch N
+commits a manifest without N's previous segments and probes with
 ``ingest_batch != N``, so the retry is idempotent (the reference's
-restart loop, OPC2MongoDB/Program.cs retry/reconnect). After the flip, GC
-deletes every segment that neither this commit nor the one before it
-lists: a reader that resolved the previous pointer can still finish.
-
-Reads resolve ``_CURRENT`` once per call and read exactly the listed
-segment dirs with the manifest's schemas, reusing one DataFrame per table
-per commit: no listing of uncommitted dirs, no footer job. A plain
+restart loop, OPC2MongoDB/Program.cs retry/reconnect). A plain
 ``spark.read.parquet(corpus_dir)`` is NOT a read path: it would union the
 four tables, uncommitted segments and the previous commit's.
 
@@ -58,21 +46,19 @@ POSIX-only: the commit needs an atomic single-file ``os.replace``.
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from opc2mongodb_spark.operators.dedup import DEFAULT_K
-from opc2mongodb_spark.streaming.sinks import _flip_pointer, _read_pointer
+from opc2mongodb_spark.streaming.sinks import _Snapshots
 
 # Codec of the gate's segment files: an interleaved A/B against snappy on
-# the ingest lane (GATE_CODEC_AB_r12.json) measured per-batch time flat for
-# a 41% smaller corpus + index, with identical admitted corpora.
+# the ingest lane (artifacts/GATE_CODEC_AB_r12.json) measured per-batch
+# time flat for a 41% smaller corpus + index, with identical admitted
+# corpora.
 PARQUET_CODEC = "zstd"
 
 # The micro-batch id column every segment file carries.
@@ -116,81 +102,37 @@ class CorpusIngestGate:
         # In-flight admitted checkpoint, registered by _process_enriched so
         # process_batch's finally can release it on any failure path.
         self._admitted_ckpt: DataFrame | None = None
-        # (manifest text, manifest, table -> DataFrame) of the last commit
-        # read: reads between two commits reuse the DataFrames.
-        self._snapshot: tuple[str, dict, dict[str, DataFrame]] | None = None
+        self._snapshots = _Snapshots(corpus_dir, "v")
 
     # ---- commit -----------------------------------------------------------
     def _write(
         self, version: int, frames: dict[str, DataFrame]
     ) -> dict[str, dict]:
         """Write each table's frame as its segment ``v=<version>`` and return
-        table -> schema. ``overwrite`` clears what a crashed attempt at this
-        version left. The writes are independent, so they run as concurrent
-        jobs: at small batches each one is mostly fixed per-job latency."""
+        table -> schema. The writes are independent, so they run as
+        concurrent jobs: at small batches each one is mostly fixed per-job
+        latency."""
 
         def write(table: str) -> tuple[str, dict]:
-            frames[table].write.mode("overwrite").option(
-                "compression", PARQUET_CODEC
-            ).parquet(os.path.join(self.corpus_dir, table, f"v={version}"))
+            frames[table].write.option("compression", PARQUET_CODEC).parquet(
+                os.path.join(self.corpus_dir, table, f"v={version}")
+            )
             return table, frames[table].schema.jsonValue()
 
         with ThreadPoolExecutor(max_workers=len(frames)) as pool:
             return dict(pool.map(write, frames))
 
-    def _commit(
-        self, version: int, schemas: dict, segments: dict, previous: dict
-    ) -> dict:
-        return _flip_pointer(
-            self.corpus_dir,
-            {
-                "version": version,
-                "schemas": schemas,
-                "segments": segments,
-                "previous": previous,
-            },
-        )
-
-    def _gc(self, manifest: dict) -> None:
-        """Delete every segment dir that neither ``manifest`` nor the commit
-        before it lists (uncommitted leftovers included)."""
-        keep = {
-            (table, d)
-            for segments in (manifest["segments"], manifest["previous"])
-            for table, listed in segments.items()
-            for d, _ in listed
-        }
-        for table in self._TABLES:
-            root = os.path.join(self.corpus_dir, table)
-            for d in os.listdir(root) if os.path.isdir(root) else ():
-                if (table, d) not in keep:
-                    shutil.rmtree(os.path.join(root, d))
-
     # ---- reads ------------------------------------------------------------
-    def _scan(
-        self, spark: SparkSession, manifest: dict, table: str, dirs
-    ) -> DataFrame:
-        schema = StructType.fromJson(manifest["schemas"][table])
-        return spark.read.schema(schema).parquet(
-            *(os.path.join(self.corpus_dir, table, d) for d in dirs)
-        )
-
     def _table(
         self,
         spark: SparkSession,
-        text: str,
+        manifest: dict,
         table: str,
         exclude_batch: int | None,
     ) -> DataFrame:
-        """``table`` as of the commit ``text``, without ``ingest_batch`` and
+        """``table`` as of ``manifest``, without ``ingest_batch`` and
         without the rows of ``exclude_batch``."""
-        if self._snapshot is None or self._snapshot[0] != text:
-            self._snapshot = (text, json.loads(text), {})
-        _, manifest, frames = self._snapshot
-        if table not in frames:
-            dirs = [d for d, _ in manifest["segments"][table]]
-            frames[table] = self._scan(spark, manifest, table, dirs)
-        df = frames[table]
+        df = self._snapshots.frame(spark, manifest, table)
         if exclude_batch is not None:
             df = df.filter(F.col(_BATCH) != F.lit(exclude_batch))
         return df.drop(_BATCH)
@@ -206,10 +148,10 @@ class CorpusIngestGate:
         output, otherwise a re-processed batch's documents would
         self-reject as exact duplicates and the retry would commit the
         batch empty (losing them)."""
-        text = _read_pointer(self.corpus_dir)
-        if text is None:
+        manifest = self._snapshots.head()
+        if manifest is None:
             return None
-        return self._table(spark, text, "data", exclude_batch)
+        return self._table(spark, manifest, "data", exclude_batch)
 
     def read_index(
         self, spark: SparkSession, exclude_batch: int | None = None
@@ -218,16 +160,16 @@ class CorpusIngestGate:
         the first commit; like read_corpus, without ``exclude_batch``. The
         per-batch bloom sketches bit_or-combine into one broadcastable
         sketch."""
-        text = _read_pointer(self.corpus_dir)
-        if text is None:
+        manifest = self._snapshots.head()
+        if manifest is None:
             return None
-        return self._index(spark, text, exclude_batch)
+        return self._index(spark, manifest, exclude_batch)
 
     def _index(
-        self, spark: SparkSession, text: str, exclude_batch: int | None
+        self, spark: SparkSession, manifest: dict, exclude_batch: int | None
     ) -> tuple[DataFrame, DataFrame, DataFrame]:
         fps, sigs, blooms = (
-            self._table(spark, text, t, exclude_batch)
+            self._table(spark, manifest, t, exclude_batch)
             for t in self.INDEX_TABLES
         )
         bloom = blooms.groupBy("word").agg(F.bit_or("mask").alias("mask"))
@@ -251,10 +193,9 @@ class CorpusIngestGate:
         folded."""
         if max_batch_dirs is None:
             max_batch_dirs = self.compact_after
-        text = _read_pointer(self.corpus_dir)
-        if text is None or max_batch_dirs is None:
+        manifest = self._snapshots.head()
+        if manifest is None or max_batch_dirs is None:
             return {"segments": 0, "folded": 0}
-        manifest = json.loads(text)
         segments = manifest["segments"]
         if before_batch is None:
             before_batch = max(b for _, ids in segments["data"] for b in ids)
@@ -262,23 +203,24 @@ class CorpusIngestGate:
         todo = [s for s in segments["fps"] if max(s[1]) < before_batch]
         if not todo or len(todo) < max_batch_dirs:
             return {"segments": len(segments["fps"]), "folded": 0}
-        version = manifest["version"] + 1
+        version = self._snapshots.begin(manifest)
         folded = [d for d, _ in todo]
         schemas = self._write(
             version,
             {
-                t: self._scan(spark, manifest, t, folded)
+                t: self._snapshots.scan(
+                    spark, manifest, t, [os.path.join(t, d) for d in folded]
+                )
                 for t in self.INDEX_TABLES
             },
         )
         ids = sorted(b for _, seg_ids in todo for b in seg_ids)
-        new = dict(segments)
-        for t in self.INDEX_TABLES:
-            new[t] = [[f"v={version}", ids]] + [
-                s for s in segments[t] if s[0] not in folded
-            ]
-        schemas = {**manifest["schemas"], **schemas}
-        self._gc(self._commit(version, schemas, new, segments))
+        new = {
+            t: [[f"v={version}", ids]]
+            + [s for s in segments[t] if s[0] not in folded]
+            for t in self.INDEX_TABLES
+        }
+        self._snapshots.commit(manifest, schemas, new)
         return {"segments": len(new["fps"]), "folded": len(todo)}
 
     # ---- the gate ---------------------------------------------------------
@@ -382,9 +324,9 @@ class CorpusIngestGate:
         # batch side of the probe reads the checkpointed fp/sig columns.
         # The pointer is read once: the probe and the commit below see the
         # same manifest.
-        text = _read_pointer(self.corpus_dir)
-        if text is not None:
-            fps_c, sigs_c, bloom_c = self._index(spark, text, batch_id)
+        manifest = self._snapshots.head()
+        if manifest is not None:
+            fps_c, sigs_c, bloom_c = self._index(spark, manifest, batch_id)
             verdicts = incremental_keep_list(
                 None,
                 kept,
@@ -438,8 +380,7 @@ class CorpusIngestGate:
                 "_bkey",
             ),
         }
-        manifest = json.loads(text) if text else None
-        version = (manifest["version"] if manifest else 0) + 1
+        version = self._snapshots.begin(manifest)
         schemas = self._write(
             version,
             {
@@ -453,7 +394,7 @@ class CorpusIngestGate:
             + [[f"v={version}", [batch_id]]]
             for t in self._TABLES
         }
-        self._gc(self._commit(version, schemas, segments, previous))
+        self._snapshots.commit(manifest, schemas, segments)
         # (5) bounded maintenance: fold committed (< batch_id) index
         # segments into one once enough accumulate, so probe cost never
         # decays with micro-batch count. Step (6) — the deterministic

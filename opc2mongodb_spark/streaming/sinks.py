@@ -21,26 +21,39 @@ store, and pruning the read would need a pass over the batch of its own.
 The parquet backend keeps snapshot generations under one atomic pointer:
 
     <path>/server=X/gen=N/part-*.parquet   rows of server X as of commit N
-    <path>/_CURRENT                        JSON manifest: version, schema,
-                                           server dir -> generation, and the
-                                           previous commit's map
-                                           (the leading ``_`` keeps Spark's
-                                           file listings off it)
+    <path>/_CURRENT                        the manifest (below); the leading
+                                           ``_`` keeps Spark's file listings
+                                           off it
 
-A merge writes only the servers it changed, as generation N, then commits
-with ONE ``os.replace`` of ``_CURRENT``; unchanged servers keep pointing at
-their old generation. After the flip, GC deletes the generations that
-neither this commit nor the one before it references. Readers resolve
-``_CURRENT`` once and read exactly the listed directories with the
-manifest's schema, so a reader never sees a half-written merge, and a crash
-at any point leaves the last commit intact. A directory without
-``_CURRENT`` is an empty store. A plain
+A merge writes only the servers it changed, as generation N, and commits
+them; unchanged servers keep pointing at their old generation. A plain
 ``spark.read.parquet(path)`` sees both retained generations (and a ``gen``
 column): read through ``CurrentValuesStore.read`` /
 ``Engine.current_values``. One writer per store (one streaming query).
-The corpus-ingest dedup gate (``streaming/dedup_gate.py``) commits each
-micro-batch's four tables through the same pointer code
-(``_read_pointer`` / ``_flip_pointer``).
+
+The snapshot protocol (``_Snapshots``) is shared with the corpus-ingest
+dedup gate (``streaming/dedup_gate.py``). A root holds table dirs, each
+table dir holds segment dirs ``<segment>=N`` (the store's tables are its
+server dirs, its segments ``gen=N``), and ``_CURRENT`` is the JSON
+manifest: ``version``, table -> ``schemas``, table -> ``segments`` as
+``[[dir, meta]]``, the ``previous`` commit's segments and a ``commit``
+uuid. Version N is written in four steps:
+
+1. Clear what a crashed attempt at N left: every table's segment dir at N
+   (no commit lists it yet) and Spark's ``_temporary``.
+2. Write the new segments (the caller's Spark jobs).
+3. Commit: write the manifest beside the pointer and flip ``_CURRENT`` to
+   it with ONE ``os.replace``.
+4. GC: delete the segment dirs that neither this commit nor the previous
+   one lists, so a reader that resolved the previous pointer can still
+   finish. Every other entry, file or dir, stays.
+
+A crash before step 3 leaves the last commit intact and its leftovers are
+cleared by the retry; a crash after it leaves the new commit whole.
+Readers resolve ``_CURRENT`` once per call and read exactly the listed
+dirs with the manifest's schemas: one DataFrame per table per commit,
+reused until the pointer changes, so a lookup between two commits lists no
+directory and reads no footer. A directory without ``_CURRENT`` is empty.
 
 At scale the state store is a transactional Delta MERGE when ``delta-spark``
 is importable (``backend="auto"``). The parquet backend needs POSIX
@@ -63,36 +76,132 @@ from pyspark.sql.types import StructField, StructType
 from opc2mongodb_spark.operators.last_value import last_value_per_key
 
 # Codec of the parquet backend's state files. An interleaved snappy-vs-zstd
-# A/B on the sink's own lane (SINK_CODEC_AB_r13.json) measured per-batch
-# time flat and 45% fewer bytes for zstd; the state is re-read every batch.
+# A/B on the sink's own lane (artifacts/SINK_CODEC_AB_r13.json) measured
+# per-batch time flat and 45% fewer bytes for zstd; the state is re-read
+# every batch.
 PARQUET_CODEC = "zstd"
 
-# The parquet backend's commit pointer and generation directory prefix.
+# The snapshot pointer and the store's segment (generation) prefix.
 CURRENT = "_CURRENT"
 GEN = "gen"
 
 
-def _read_pointer(root: str) -> str | None:
-    """The committed manifest under ``root`` as text (None before the
-    first commit)."""
-    try:
-        with open(os.path.join(root, CURRENT), encoding="utf-8") as f:
-            return f.read()
-    except FileNotFoundError:
-        return None
+class _Snapshots:
+    """The snapshot protocol of the module docstring over ``root``, whose
+    segment dirs are named ``<segment>=N``. ``partitioned``: the table dirs
+    are ``col=value`` partition dirs, and a read recovers that column from
+    the path."""
 
+    def __init__(self, root: str, segment: str, partitioned: bool = False):
+        self.root = root
+        self.segment = segment
+        self.partitioned = partitioned
+        # (pointer text, manifest, frames by table tuple) of the last commit
+        # read: reads between two commits reuse the frames.
+        self._cache: tuple[str, dict, dict] | None = None
 
-def _flip_pointer(root: str, manifest: dict) -> dict:
-    """Commit ``manifest`` under ``root``: write it beside the pointer, then
-    flip ``_CURRENT`` to it with one atomic ``os.replace``. The ``commit``
-    uuid makes every manifest unique, so a reader's cache never mistakes a
-    recreated directory for the old one."""
-    manifest = {**manifest, "commit": uuid.uuid4().hex}
-    tmp = os.path.join(root, CURRENT + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(root, CURRENT))
-    return manifest
+    def head(self) -> dict | None:
+        """The committed manifest (None before the first commit). The
+        pointer is read once per call and parsed once per commit; callers
+        must not mutate the result."""
+        try:
+            with open(os.path.join(self.root, CURRENT), encoding="utf-8") as f:
+                text = f.read()
+        except FileNotFoundError:
+            return None
+        cache = self._cache  # two threads racing here build two equal frames
+        if cache is None or cache[0] != text:
+            cache = self._cache = (text, json.loads(text), {})
+        return cache[1]
+
+    def frame(
+        self, spark: SparkSession, manifest: dict, *tables: str
+    ) -> DataFrame:
+        """One scan of the segment dirs ``manifest`` lists for ``tables``
+        (with the first one's schema), reused until the next commit."""
+        cache = self._cache
+        frames = cache[2] if cache is not None and cache[1] is manifest else {}
+        if tables not in frames:
+            segments = manifest["segments"]
+            dirs = [os.path.join(t, d) for t in tables for d, _ in segments[t]]
+            frames[tables] = self.scan(spark, manifest, tables[0], dirs)
+        return frames[tables]
+
+    def scan(
+        self, spark: SparkSession, manifest: dict, table: str, dirs
+    ) -> DataFrame:
+        """Exactly ``dirs`` (relative to the root), read with ``table``'s
+        schema from the manifest: no other listing, no footer job."""
+        schema = StructType.fromJson(manifest["schemas"][table])
+        reader = spark.read.schema(schema)
+        if self.partitioned:
+            reader = reader.option("basePath", self.root)
+        return reader.parquet(
+            *(os.path.join(self.root, d) for d in dirs)
+        ).select(*schema.names)  # drops an inferred segment column
+
+    def begin(self, manifest: dict | None) -> int:
+        """The version the commit after ``manifest`` writes. What a crashed
+        attempt at it left is cleared first: each table's segment dir at
+        that version and Spark's ``_temporary``."""
+        version = (manifest["version"] if manifest else 0) + 1
+        temporary = os.path.join(self.root, "_temporary")
+        shutil.rmtree(temporary, ignore_errors=True)
+        self._drop(lambda table, d: d == f"{self.segment}={version}")
+        return version
+
+    def commit(
+        self, manifest: dict | None, schemas: dict, segments: dict
+    ) -> None:
+        """Commit the version ``begin(manifest)`` returned: ``schemas`` and
+        ``segments`` replace their tables' entries of ``manifest``. The
+        ``commit`` uuid makes every manifest unique, so a reader's cache
+        never mistakes a recreated directory for the old one."""
+        head = manifest or {"version": 0, "schemas": {}, "segments": {}}
+        new = {
+            "version": head["version"] + 1,
+            "schemas": {**head["schemas"], **schemas},
+            "segments": {**head["segments"], **segments},
+            "previous": head["segments"],
+            "commit": uuid.uuid4().hex,
+        }
+        tmp = os.path.join(self.root, CURRENT + ".tmp")
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(new, f)
+        os.replace(tmp, os.path.join(self.root, CURRENT))
+        self._gc(new)
+
+    def _gc(self, manifest: dict) -> None:
+        """Delete the segment dirs neither ``manifest`` nor the commit
+        before it lists: a reader that resolved the previous pointer can
+        still finish."""
+        keep = {
+            (table, d)
+            for segments in (manifest["segments"], manifest["previous"])
+            for table, listed in segments.items()
+            for d, _ in listed
+        }
+        self._drop(lambda table, d: (table, d) not in keep)
+
+    def on_disk(self) -> list[tuple[str, str]]:
+        """(table, segment dir) of every segment dir under the root."""
+        if not os.path.isdir(self.root):
+            return []
+        prefix = f"{self.segment}="
+        return [
+            (table.name, seg.name)
+            for table in os.scandir(self.root)
+            if table.is_dir()
+            for seg in os.scandir(table.path)
+            if seg.name.startswith(prefix)
+            and seg.name[len(prefix):].isdigit()
+            and seg.is_dir()
+        ]
+
+    def _drop(self, doomed) -> None:
+        for table, d in self.on_disk():
+            if doomed(table, d):
+                shutil.rmtree(os.path.join(self.root, table, d))
 
 
 def delta_available() -> bool:
@@ -134,17 +243,14 @@ class CurrentValuesStore:
         self.key_cols = list(key_cols)
         self.order_col = order_col
         self.backend = backend
-        # (manifest text, DataFrame over it) of the last generation read:
-        # lookups between two commits reuse the DataFrame, so they list no
-        # directory, read no footer and build no new relation.
-        self._snapshot: tuple[str, DataFrame] | None = None
+        self._snapshots = _Snapshots(path, GEN, partitioned=True)
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         if self.backend == "delta":
             if not os.path.exists(self.path):
                 return None
             return spark.read.format("delta").load(self.path)  # pragma: no cover - delta absent here
-        return self._current(spark)
+        return self._current(spark, self._snapshots.head())
 
     def merge_batch(self, batch: DataFrame) -> None:
         if self.backend == "delta":
@@ -184,111 +290,41 @@ class CurrentValuesStore:
 
     def _merge_batch_parquet(self, batch: DataFrame) -> None:
         """Upsert a micro-batch with ONE Spark action (the parquet stand-in
-        for the Delta MERGE above) into a new generation, then commit it
-        with one ``os.replace`` of ``_CURRENT``. Servers the batch did not
+        for the Delta MERGE above) into a new generation of the servers it
+        changed, and commit it (module docstring). Servers the batch did not
         change are read but never rewritten: the new manifest keeps their
-        old generation.
-
-        One action scans the batch once, so the batch needs no persist.
-        A batch that changes no server commits nothing.
-
-        Crash-safe at every step: a generation that was written but not
-        committed is unreferenced (this merge's retry clears it, GC removes
-        it otherwise), and the committed manifest always lists complete
-        generations."""
-        pcol = self.key_cols[0]
+        old generation. One action scans the batch once, so the batch needs
+        no persist. A batch that changes no server commits nothing."""
+        manifest = self._snapshots.head()
+        gen = self._snapshots.begin(manifest)
         schema = self._state_schema(batch)
-        text = _read_pointer(self.path)
-        manifest = json.loads(text) if text else None
-        gen = (manifest["version"] if manifest else 0) + 1
-        # leftovers of a crashed attempt at this generation
-        shutil.rmtree(os.path.join(self.path, "_temporary"), ignore_errors=True)
-        for entry in self._server_dirs():
-            shutil.rmtree(
-                os.path.join(self.path, entry, f"{GEN}={gen}"), ignore_errors=True
-            )
+        existing = self._current(batch.sparkSession, manifest)
         (
-            self._changed_partitions(batch, schema)
+            self._changed_partitions(batch, schema, existing)
             .withColumn(GEN, F.lit(gen))
             .write.mode("append")
             .option("compression", PARQUET_CODEC)
-            .partitionBy(pcol, GEN)
+            .partitionBy(self.key_cols[0], GEN)
             .parquet(self.path)
         )
-        written = self._holding(gen)
-        if not written:
-            return
-        previous = manifest["servers"] if manifest else {}
-        self._gc(self._commit(gen, schema, {**previous, **written}, previous))
-
-    def _commit(
-        self, version: int, schema: StructType, servers: dict, previous: dict
-    ) -> dict:
-        return _flip_pointer(
-            self.path,
-            {
-                "version": version,
-                "schema": schema.jsonValue(),
-                "servers": servers,
-                "previous": previous,
-            },
-        )
-
-    def _gc(self, manifest: dict) -> None:
-        """Delete every generation that neither ``manifest`` nor the commit
-        before it references: a reader that resolved the previous pointer
-        can still finish."""
-        keep = {
-            (entry, g)
-            for servers in (manifest["servers"], manifest["previous"])
-            for entry, g in servers.items()
+        written = {
+            server: [[d, None]]
+            for server, d in self._snapshots.on_disk()
+            if d == f"{GEN}={gen}"
         }
-        for entry in self._server_dirs():
-            d = os.path.join(self.path, entry)
-            for sub in os.listdir(d):
-                gen = sub.partition(f"{GEN}=")[2]
-                if gen and (entry, int(gen)) not in keep:
-                    shutil.rmtree(os.path.join(d, sub))
+        if written:
+            schemas = {server: schema.jsonValue() for server in written}
+            self._snapshots.commit(manifest, schemas, written)
 
-    def _server_dirs(self) -> list[str]:
-        prefix = f"{self.key_cols[0]}="
-        if not os.path.isdir(self.path):
-            return []
-        return [e for e in os.listdir(self.path) if e.startswith(prefix)]
-
-    def _holding(self, gen: int) -> dict[str, int]:
-        """server dir -> ``gen`` for every server that has generation ``gen``
-        on disk."""
-        return {
-            entry: gen
-            for entry in self._server_dirs()
-            if os.path.isdir(os.path.join(self.path, entry, f"{GEN}={gen}"))
-        }
-
-    def _current(self, spark: SparkSession) -> DataFrame | None:
-        """The DataFrame of the committed generation: ``_CURRENT`` is read
-        once per call. The DataFrame reads exactly the generation
-        directories the manifest lists, with its schema (no footer job),
-        and is reused until the pointer changes."""
-        text = _read_pointer(self.path)
-        if text is None:
+    def _current(
+        self, spark: SparkSession, manifest: dict | None
+    ) -> DataFrame | None:
+        """The committed state as of ``manifest``: one scan of every
+        server's listed generation."""
+        if manifest is None:
             return None
-        snap = self._snapshot  # two threads racing here build two equal frames
-        if snap is None or snap[0] != text:
-            manifest = json.loads(text)
-            schema = StructType.fromJson(manifest["schema"])
-            dirs = [
-                os.path.join(self.path, entry, f"{GEN}={g}")
-                for entry, g in sorted(manifest["servers"].items())
-            ]
-            df = (
-                spark.read.schema(schema)
-                .option("basePath", self.path)
-                .parquet(*dirs)
-                .select(*schema.names)  # drops the inferred `gen` column
-            )
-            snap = self._snapshot = (text, df)
-        return snap[1]
+        servers = sorted(manifest["segments"])
+        return self._snapshots.frame(spark, manifest, *servers)
 
     def _state_schema(self, batch: DataFrame) -> StructType:
         """The batch's fields, nullable, partition column last: the layout
@@ -301,20 +337,21 @@ class CurrentValuesStore:
         )
 
     def _changed_partitions(
-        self, batch: DataFrame, schema: StructType
+        self,
+        batch: DataFrame,
+        schema: StructType,
+        existing: DataFrame | None,
     ) -> DataFrame:
         """The new rows of every server the batch changes, planned over one
         exchange: ``existing ∪ batch`` is hash-partitioned on the server
         once, and both the per-key aggregate and the per-server window
         reuse that partitioning."""
-        spark = batch.sparkSession
         pcol = self.key_cols[0]
         cols = schema.names
         # _src tiebreak: on an order_col tie the BATCH row wins — the same
         # semantics as the Delta MERGE's `s.order >= t.order` condition, and
         # deterministic (max_by alone picks an arbitrary row on ties).
         merged = batch.select(*cols, F.lit(1).alias("_src"))
-        existing = self._current(spark)
         if existing is not None:
             # batch first: its scan tasks are the slow ones, so they start
             # ahead of the state's file scans

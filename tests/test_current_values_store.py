@@ -76,9 +76,10 @@ def _crash(*args, **kwargs):
     raise Crash
 
 
-# kill point -> (what to break, whether the merge committed before it died)
+# kill point -> (what to break in the shared snapshot protocol, whether the
+# merge committed before it died)
 KILL_POINTS = {
-    "after_generation_written": ("_commit", False),
+    "after_generation_written": ("commit", False),
     "after_manifest_tmp_before_flip": ("os.replace", False),
     "after_flip_before_gc": ("_gc", True),
 }
@@ -102,7 +103,7 @@ def test_merge_killed_at_each_commit_step_loses_no_tag(
         if target == "os.replace":
             m.setattr(sinks.os, "replace", _crash)
         else:
-            m.setattr(CurrentValuesStore, target, _crash)
+            m.setattr(sinks._Snapshots, target, _crash)
         with pytest.raises(Crash):
             store.merge_batch(batches[2])
     with open(current) as f:

@@ -7,7 +7,8 @@ goldens kill both at each step of that commit: after the segment writes,
 after the manifest temp file, and after the flip. A fresh gate on the same
 directory must read the state before or the state after, never a mix, and
 replaying the killed step must give the uninterrupted gate's corpus and
-index.
+index. The commit and GC are the snapshot protocol the gate shares with the
+current-values store; the GC golden runs against both.
 """
 
 from __future__ import annotations
@@ -18,8 +19,10 @@ import shutil
 
 import pytest
 
-from opc2mongodb_spark.streaming import dedup_gate
+from opc2mongodb_spark.streaming import sinks
 from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
+from opc2mongodb_spark.streaming.sinks import CurrentValuesStore
+from tests.test_current_values_store import change_only_sweep
 
 
 class Crash(Exception):
@@ -30,9 +33,10 @@ def _crash(*args, **kwargs):
     raise Crash
 
 
-# kill point -> (what to break, whether the step committed before it died)
+# kill point -> (what to break in the shared snapshot protocol, whether the
+# step committed before it died)
 KILL_POINTS = {
-    "after_segments_written": ("_commit", False),
+    "after_segments_written": ("commit", False),
     "after_manifest_tmp_before_flip": ("os.replace", False),
     "after_flip_before_gc": ("_gc", True),
 }
@@ -97,9 +101,9 @@ def kill(monkeypatch, kill_point: str, step) -> None:
     target, _ = KILL_POINTS[kill_point]
     with monkeypatch.context() as m:
         if target == "os.replace":
-            m.setattr(dedup_gate.os, "replace", _crash)
+            m.setattr(sinks.os, "replace", _crash)
         else:
-            m.setattr(CorpusIngestGate, target, _crash)
+            m.setattr(sinks._Snapshots, target, _crash)
         with pytest.raises(Crash):
             step()
 
@@ -192,3 +196,53 @@ def test_default_compaction_keeps_index_reads_jobless(spark, tmp_path):
 
     assert read_jobs(gate.compact_after + 1) == 0
     assert read_jobs(gate.compact_after + 2) > 0
+
+
+@pytest.mark.parametrize("owner", ["store", "gate"])
+def test_gc_deletes_only_unlisted_segment_dirs(spark, tmp_path, owner):
+    """The GC after a commit deletes exactly the segment dirs that neither
+    this commit nor the previous one lists. A stray file and a stray
+    non-segment dir inside a table (server) dir stay, and reads equal a
+    clean run's."""
+
+    def run(root: str, plant: bool):
+        if owner == "store":
+            store = CurrentValuesStore(root, backend="parquet")
+            table, segment = "server=A", "gen"
+
+            def step(s):
+                store.merge_batch(change_only_sweep(spark, s))
+
+            def read():
+                return sorted(tuple(r) for r in store.read(spark).collect())
+        else:
+            gate = CorpusIngestGate(root, compact_after=None)
+            table, segment = "fps", "v"
+
+            def step(b):
+                gate.process_batch(docs(spark, b), b)
+
+            def read():
+                return view(spark, root)
+
+        step(0)
+        step(1)
+        d = os.path.join(root, table)
+        if plant:
+            # an unlisted segment dir: a copy of a listed one, at version 9
+            shutil.copytree(
+                os.path.join(d, sorted(os.listdir(d))[-1]),
+                os.path.join(d, f"{segment}=9"),
+            )
+            with open(os.path.join(d, "notes.txt"), "w") as f:
+                f.write("not a segment")
+            os.makedirs(os.path.join(d, "junk"))
+        step(2)
+        return read(), sorted(os.listdir(d)), segment
+
+    clean, clean_dirs, segment = run(str(tmp_path / "clean"), plant=False)
+    got, dirs, _ = run(str(tmp_path / "planted"), plant=True)
+    assert got == clean
+    assert "notes.txt" in dirs and "junk" in dirs
+    assert f"{segment}=9" not in dirs
+    assert [e for e in dirs if e.startswith(f"{segment}=")] == clean_dirs

@@ -212,8 +212,8 @@ def test_merge_batch_rewrites_only_touched_partitions(spark, tmp_path):
 
     def inodes(server):
         with open(os.path.join(store.path, "_CURRENT")) as f:
-            gen = json.load(f)["servers"][f"server={server}"]
-        d = os.path.join(store.path, f"server={server}", f"gen={gen}")
+            [[gen, _]] = json.load(f)["segments"][f"server={server}"]
+        d = os.path.join(store.path, f"server={server}", gen)
         return {
             f: os.stat(os.path.join(d, f)).st_ino
             for f in os.listdir(d)
@@ -236,9 +236,10 @@ def test_merge_batch_rewrites_only_touched_partitions(spark, tmp_path):
 
 def test_sink_parquet_codec_is_zstd(spark, tmp_path):
     """r13 (r12 VERDICT item 7): the upsert sink's parquet state is written
-    as zstd (interleaved A/B on the sink's own lane, SINK_CODEC_AB_r13.json:
-    per-batch time flat, state identical, -45% bytes). Spark encodes the
-    codec in the part-file name."""
+    as zstd (interleaved A/B on the sink's own lane,
+    artifacts/SINK_CODEC_AB_r13.json: per-batch time flat, state
+    identical, -45% bytes). Spark encodes the codec in the part-file
+    name."""
     import datetime
     import glob
 
@@ -282,7 +283,9 @@ def test_merge_batch_is_one_action_over_one_exchange(spark, tmp_path):
     second = rows([("A", "t1", 3.0, 10), ("B", "t2", 4.0, 10)])
 
     plan = (
-        store._changed_partitions(second, store._state_schema(second))
+        store._changed_partitions(
+            second, store._state_schema(second), store.read(spark)
+        )
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert len(re.findall(r"\bExchange\b", plan)) == 1, plan
@@ -913,9 +916,9 @@ def test_gate_releases_checkpoints_on_failure(spark, tmp_path, monkeypatch):
 
 def test_gate_parquet_codec_is_zstd(spark, tmp_path):
     """r12: the gate's own parquet writes (data + all index tables) are
-    zstd (measured time-flat at -41% bytes, GATE_CODEC_AB_r12.json). Spark
-    encodes the codec in the part-file name, so the written files are
-    checkable directly."""
+    zstd (measured time-flat at -41% bytes,
+    artifacts/GATE_CODEC_AB_r12.json). Spark encodes the codec in the
+    part-file name, so the written files are checkable directly."""
     import glob
 
     from opc2mongodb_spark.streaming.dedup_gate import CorpusIngestGate
